@@ -148,7 +148,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_full.json"))
     val summaryPath = java.nio.file.Paths.get(sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_SUMMARY", "/root/repo/bench_summary.json"))
-    // sweep temp leftovers of killed runs: the atomicWrite finally below
+    // sweep temp leftovers of killed runs: Commit.replaceFile below
     // covers exceptions, but a hard kill between create and move still
     // strands one <name>*.tmp per incident (ADVICE r13)
     Seq(outPath, summaryPath).foreach { p =>
@@ -250,29 +250,12 @@ object Bench {
       val reduced = reducedRan.map("\"" + _ + "\"").mkString("[", ",", "]")
       val flag = s""""complete":$complete,"""
       val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec",$flag$partial"queries":$qs,"sf":"$sfDir","wall_sec":${ms(wallSec)},"docs_scale":$docsScale,"reduced_scale":$reduced,"n_queries":${results.size},"loadavg_start":$load0,"loadavg_end":${loadavg()},"failures":$fails,"single_run":$singles,"warm_medians":$warms,"first_runs":$firsts,"repeats":$reps}"""
-      // write-to-temp + ATOMIC_MOVE so the visible record is always a
-      // WHOLE snapshot — a kill landing mid-Files.write would otherwise
-      // leave a truncated, unparseable file, defeating the survivability
-      // guarantee the per-query rewrite exists for (ADVICE r12)
-      def atomicWrite(path: java.nio.file.Path, content: String): Unit = {
-        val dir = Option(path.getParent)
-          .getOrElse(java.nio.file.Paths.get("."))
-        val tmp = java.nio.file.Files.createTempFile(dir, path.getFileName.toString, ".tmp")
-        // delete the temp on any failure before the move lands — a kill
-        // or write exception otherwise strands one untracked *.tmp per
-        // incident in the repo root (ADVICE r13)
-        var moved = false
-        try {
-          java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
-          java.nio.file.Files.move(tmp, path,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          moved = true
-        } finally if (!moved) java.nio.file.Files.deleteIfExists(tmp)
-      }
       // the full record goes to a file the driver/judge can read whole,
-      // immune to any stdout capture limit
-      try atomicWrite(outPath, line + "\n")
+      // immune to any stdout capture limit; Commit.replaceFile keeps it a
+      // WHOLE snapshot even when a kill lands mid-write — a truncated file
+      // would defeat the survivability guarantee the per-query rewrite
+      // exists for (ADVICE r12)
+      try graft.core.Commit.replaceFile(outPath, line + "\n")
       catch { case e: Throwable =>
         System.err.println(s"[bench] bench_full.json write failed: ${e.getMessage}")
       }
@@ -286,7 +269,7 @@ object Bench {
       val top10Singles = top10.collect { case (k, _, _, 1) if singleNames.contains(k) => k }
         .map("\"" + _ + "\"").mkString("[", ",", "]")
       val summary = s"""{"metric":"total","value":${ms(total)},"unit":"sec",$flag$partial"sf":"$sfDir","wall_sec":${ms(wallSec)},"docs_scale":$docsScale,"reduced_scale":$reduced,"n_queries":${results.size},"loadavg_start":$load0,"loadavg_end":${loadavg()},"failures":$fails,"top10_medians":$top10Json,"single_run":$top10Singles,"full_record":"bench_full.json"}"""
-      try atomicWrite(summaryPath, summary + "\n")
+      try graft.core.Commit.replaceFile(summaryPath, summary + "\n")
       catch { case e: Throwable =>
         System.err.println(s"[bench] bench_summary.json write failed: ${e.getMessage}")
       }

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * storage scheme for continuously-maintained state
   * ([[graft.stream.StreamingCdc.continuousApplyBucketed]]).
   *
-  * Layout: `$base/{snapshot,state}/v=N/__b=K/part-*.parquet` with the
-  * same VERSION pointer protocol as [[Pipeline.commitVersionedAt]]. Every
-  * row lands in bucket `xxhash64(key) mod nBuckets`; a micro-batch that
+  * Layout: `$base/{snapshot,state}/v=N/__b=K/part-*.parquet` behind the
+  * VERSION pointer ([[Commit.publish]], as [[Pipeline.commitVersioned]]).
+  * Every row lands in bucket `xxhash64(key) mod nBuckets`; a micro-batch that
   * touches keys in B buckets reads B partitions (Spark prunes on `__b`),
   * rewrites B partitions, and HARD-LINKS the other `nBuckets - B`
   * partition directories from the previous version — O(delta) data read
@@ -49,35 +49,27 @@ object BucketedSnapshot {
     */
   def commit(baseDir: String, version: Long,
              snapshotTouched: DataFrame, stateTouched: DataFrame,
-             changelog: DataFrame, touched: Seq[Int]): Long = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val current = Pipeline.currentVersion(baseDir).getOrElse(0L)
-    if (version <= current) return current
-    changelog.write.mode("overwrite").parquet(s"$baseDir/changelog/v=$version")
-    // repartition on the bucket column BEFORE the dynamic-partition write:
-    // without it every shuffle task carries rows of every bucket and the
-    // writer fans out tasks×buckets files (measured 1024 files and 12.4 s
-    // for a 37.5k-row commit at 32×32 — r7 re-pin). One shuffle makes each
-    // task own whole buckets: one file per bucket dir, which is also the
-    // layout the bucket-pruned warm reads and the hard-link share protocol
-    // want — linkUntouched dedupes per FILE, so fewer, stabler files per
-    // bucket keep versions link-sharable at any scale.
-    snapshotTouched.repartition(col(BucketCol)).write.partitionBy(BucketCol)
-      .mode("overwrite").parquet(s"$baseDir/snapshot/v=$version")
-    stateTouched.repartition(col(BucketCol)).write.partitionBy(BucketCol)
-      .mode("overwrite").parquet(s"$baseDir/state/v=$version")
-    if (current > 0) {
-      val touchedDirs = touched.map(b => s"$BucketCol=$b").toSet
-      for (what <- Seq("snapshot", "state"))
-        linkUntouched(s"$baseDir/$what/v=$current", s"$baseDir/$what/v=$version", touchedDirs)
+             changelog: DataFrame, touched: Seq[Int]): Long =
+    Commit.publish(baseDir, version) { current =>
+      changelog.write.mode("overwrite").parquet(s"$baseDir/changelog/v=$version")
+      // repartition on the bucket column BEFORE the dynamic-partition write:
+      // without it every shuffle task carries rows of every bucket and the
+      // writer fans out tasks×buckets files (measured 1024 files and 12.4 s
+      // for a 37.5k-row commit at 32×32 — r7 re-pin). One shuffle makes each
+      // task own whole buckets: one file per bucket dir, which is also the
+      // layout the bucket-pruned warm reads and the hard-link share protocol
+      // want — linkUntouched dedupes per FILE, so fewer, stabler files per
+      // bucket keep versions link-sharable at any scale.
+      snapshotTouched.repartition(col(BucketCol)).write.partitionBy(BucketCol)
+        .mode("overwrite").parquet(s"$baseDir/snapshot/v=$version")
+      stateTouched.repartition(col(BucketCol)).write.partitionBy(BucketCol)
+        .mode("overwrite").parquet(s"$baseDir/state/v=$version")
+      if (current > 0) {
+        val touchedDirs = touched.map(b => s"$BucketCol=$b").toSet
+        for (what <- Seq("snapshot", "state"))
+          linkUntouched(s"$baseDir/$what/v=$current", s"$baseDir/$what/v=$version", touchedDirs)
+      }
     }
-    val tmp = Paths.get(s"$baseDir/VERSION.tmp")
-    Files.createDirectories(Paths.get(baseDir))
-    Files.writeString(tmp, version.toString)
-    Files.move(tmp, Paths.get(s"$baseDir/VERSION"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    version
-  }
 
   /** Hard-link (fallback: copy) every `__b=*` partition dir of `prev` not
     * in `touchedDirs` into `next`. Metadata-only: no data bytes move on a

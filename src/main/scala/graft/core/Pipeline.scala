@@ -3,21 +3,22 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** Cold/warm CDC topologies + ordered state commit — the composition the
+/** Warm CDC topology + ordered versioned commit — the composition the
   * reference's `extract` (src/download.py:22-87) and `post_download`
   * (download.py:532-604) perform.
   *
   * The reference picks one of two asyncio DAGs: cold 3-stage
   * `fetch → {update, hash}` for an empty target (download.py:29-42), warm
   * 5-stage `load → filter ⋈ fetch → {update, hash}` for incremental
-  * (download.py:44-63). Here both are ONE logical plan each; the "two
-  * sinks" fan-out (download.py:421-429) becomes two actions over a
-  * persisted frame.
+  * (download.py:44-63). Here the warm plan covers both: against an empty
+  * replica every key classifies "new", so the first commit IS the cold
+  * load ([[Runner.extractAll]]).
   *
   * Commit ordering (SURVEY §7.4.4, reference download.py:557-604): the
   * changelog must capture old rows BEFORE the snapshot swap (its join reads
   * `{t}` not `{t}_new`, download.py:585-595). Hence: write changelog →
-  * write snapshot → write signature state.
+  * write snapshot → write signature state → move the VERSION pointer
+  * ([[Commit.publish]]).
   */
 object Pipeline {
   /** Runaway-delete circuit breaker: the reference refuses to delete when
@@ -72,43 +73,15 @@ object Pipeline {
           nf.getOrElse(df.sparkSession.sparkContext.defaultParallelism))
     }
 
-  /** Cold full load (reference download.py:29-42): scan the source once,
-    * derive scores + signature in the same pass (table.py:79-93,
-    * download.py:389-400), fan out to snapshot + signature state.
-    */
-  def cold(external: DataFrame, key: Seq[String], dataCols: Seq[String]): (DataFrame, DataFrame) = {
-    val scored = Scores.withOverall(Scores.withScores(external))
-    val state  = external.select(
-      key.map(col) :+ Signatures.md5Sig(dataCols.map(col)).as(Diff.SigCol): _*)
-    (scored, state)
-  }
-
-  /** Cold-load commit: one source pass fanned out to the two sinks
-    * (reference's cold topology `fetch → {update, hash}`,
-    * download.py:29-42, the `fanout_split` at download.py:421-429) —
-    * persist once, write snapshot then signature state, release.
-    */
-  def commitCold(external: DataFrame, key: Seq[String], dataCols: Seq[String],
-                 baseDir: String): Unit = {
-    val (scored, _) = cold(external, key, dataCols)
-    val cached = scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      cached.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/snapshot")
-      cached.select(key.map(col) :+
-          Signatures.md5Sig(dataCols.map(col)).as(Diff.SigCol): _*)
-        .write.mode(SaveMode.Overwrite).parquet(s"$baseDir/state")
-    } finally cached.unpersist()
-  }
-
   /** Warm incremental run (reference download.py:44-63 + post_download
     * 532-604). `internal` is the current snapshot, `external` the live
     * source; both share `key` + `dataCols`.
     *
     * `deriveFetched` re-applies the snapshot's derived columns (scores,
     * reference download.py:437-441 injects score exprs into the keyed
-    * fetch) to incoming rows, so a snapshot written by [[commitCold]]
-    * (which carries score columns) round-trips through warm runs:
-    * pass `Scores.withOverall(Scores.withScores(_))` to match.
+    * fetch) to incoming rows, so a snapshot that carries score columns
+    * round-trips through warm runs: pass
+    * `Scores.withOverall(Scores.withScores(_))` to match.
     *
     * `kinds` is persisted here: the classify join feeds four downstream
     * consumers (delete count, changelog, fetch, state) and is the
@@ -165,56 +138,12 @@ object Pipeline {
     WarmResult(kinds, newSnapshot, changelog, newState)
   }
 
-  /** Ordered durable commit (reference download.py:557-604). Parquet
-    * overwrite of separate directories stands in for the reference's
-    * TRUNCATE/REPLACE double-buffer swap — readers of the old directory
-    * are unaffected until each write completes.
-    *
-    * When `runVersion` is not supplied it comes from a monotonic
-    * per-directory counter (NOT wall-clock time: two commits within one
-    * millisecond, or a clock regression, would write duplicate or
-    * out-of-order changelog versions and make Changelog.latest ambiguous).
-    */
-  def commit(r: WarmResult, baseDir: String,
-             runVersion: Option[Long] = None,
-             layout: SnapshotLayout = SnapshotLayout.Plain): Unit = {
-    val v = runVersion.getOrElse(nextRunVersion(baseDir))
-    // the version column makes Changelog.latest reconstructible from the
-    // durable multi-run changelog (parquet append preserves no order)
-    r.changelog.withColumn("version", lit(v))
-      .write.mode(SaveMode.Append).parquet(s"$baseDir/changelog")
-    writeSnapshot(r.newSnapshot, s"$baseDir/snapshot", layout)
-    r.newState.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/state")
-  }
-
-  /** Monotonic run-version counter, durable per directory: strictly
-    * greater than any version this directory has seen, seeded from (and
-    * usually tracking) wall-clock millis so versions stay human-readable.
-    */
-  private def nextRunVersion(baseDir: String): Long = synchronized {
-    import java.nio.file.{Files, Paths}
-    val p = Paths.get(s"$baseDir/_last_run_version")
-    val last =
-      if (Files.exists(p)) Files.readString(p).trim.toLongOption.getOrElse(0L)
-      else 0L
-    val next = math.max(System.currentTimeMillis(), last + 1)
-    Files.createDirectories(Paths.get(baseDir))
-    // tmp + ATOMIC_MOVE (same protocol as the VERSION pointer): a crash
-    // mid-write must not corrupt the counter — toLongOption would fall
-    // back to 0 and a regressed clock could then reissue a used version
-    val tmp = Paths.get(s"$baseDir/_last_run_version.tmp")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    next
-  }
-
-  /** Crash-consistent variant of [[commit]]: snapshot/state land in fresh
-    * `v=N` directories and a VERSION pointer file is renamed into place
-    * LAST — the faithful generalization of the reference's double-buffered
-    * `_hashes_0/_hashes_1` + staging swap (download.py:572-604): readers
-    * follow the pointer and never observe a half-written version.
-    * Returns the committed version.
+  /** Crash-consistent commit: changelog/snapshot/state land in fresh
+    * `v=N` directories and the VERSION pointer moves LAST
+    * ([[Commit.publish]]) — the faithful generalization of the reference's
+    * double-buffered `_hashes_0/_hashes_1` + staging swap
+    * (download.py:572-604): readers follow the pointer and never observe a
+    * half-written version. Returns the committed version.
     */
   def commitVersioned(r: WarmResult, baseDir: String,
                       layout: SnapshotLayout = SnapshotLayout.Plain): Long =
@@ -226,30 +155,17 @@ object Pipeline {
     * version in effect.
     */
   def commitVersionedAt(r: WarmResult, baseDir: String, version: Long,
-                        layout: SnapshotLayout = SnapshotLayout.Plain): Long = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val current = currentVersion(baseDir).getOrElse(0L)
-    if (version <= current) return current // already committed: replay no-op
-    // changelog also lands under v=N: a crash before the pointer move
-    // leaves the orphan invisible to readChangelog (which filters v <=
-    // pointer), and a retry overwrites rather than duplicating history
-    r.changelog.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/changelog/v=$version")
-    writeSnapshot(r.newSnapshot, s"$baseDir/snapshot/v=$version", layout)
-    r.newState.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/state/v=$version")
-    val tmp = Paths.get(s"$baseDir/VERSION.tmp")
-    Files.createDirectories(Paths.get(baseDir))
-    Files.writeString(tmp, version.toString)
-    Files.move(tmp, Paths.get(s"$baseDir/VERSION"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    version
-  }
+                        layout: SnapshotLayout = SnapshotLayout.Plain): Long =
+    Commit.publish(baseDir, version) { _ =>
+      // changelog also lands under v=N: a crash before the pointer move
+      // leaves the orphan invisible to readChangelog (which filters v <=
+      // pointer), and a retry overwrites rather than duplicating history
+      r.changelog.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/changelog/v=$version")
+      writeSnapshot(r.newSnapshot, s"$baseDir/snapshot/v=$version", layout)
+      r.newState.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/state/v=$version")
+    }
 
-  def currentVersion(baseDir: String): Option[Long] = {
-    val p = java.nio.file.Paths.get(s"$baseDir/VERSION")
-    if (java.nio.file.Files.exists(p))
-      Some(java.nio.file.Files.readString(p).trim.toLong)
-    else None
-  }
+  def currentVersion(baseDir: String): Option[Long] = Commit.currentVersion(baseDir)
 
   /** Read the committed snapshot/state ("snapshot" | "state") at the
     * version the pointer names.
@@ -328,77 +244,28 @@ object Pipeline {
     * maintenance cadence. Reference analog: the `{t}_changelog` table
     * grows per-run with no compaction at all (download.py:585-595).
     *
-    * Crash safety — no state ever shows DUPLICATED history, and no
-    * recovery path can delete un-restored history: the rewrite lands in
-    * a dot-prefixed staging dir (invisible to partition discovery); a
-    * `_target` marker recording the compaction's target version is
-    * written inside a dot-prefixed aside dir; every superseded version
-    * dir is MOVED (renamed) under the aside, `v=$target` last; staging
-    * moves into `v=$target`; aside is deleted. Readers mid-sequence may
-    * see a temporarily incomplete history (this is an offline
-    * maintenance op, like [[vacuum]]) but never a doubled row.
-    *
-    * Recovery at the start of the next invocation reads the marker's
-    * target N (NOT the current pointer — a commit may have advanced it
-    * since the crash): the swap completed iff root `v=N` exists AND the
-    * aside ALSO holds a `v=N` (the original moves aside strictly before
-    * staging moves in, so both-present can only mean root holds the
-    * compacted result) — then the aside is deleted; in every other state
-    * the swap never landed (root `v=N` is the original or still aside),
-    * so every aside dir is restored and staging discarded. Both branches
-    * are idempotent under repeated crashes mid-recovery: a partial
-    * restore leaves the aside without `v=N` or the root without it,
-    * which re-enters the restore branch.
+    * Crash safety: the rewrite is staged, then swapped in for every
+    * superseded version dir with `v=current` as the target
+    * ([[Commit.swap]]); a crashed swap is finished or undone by
+    * [[Commit.recover]] at the start of the next invocation. No state ever
+    * shows DUPLICATED history, and recovery never deletes un-restored
+    * history. Readers mid-swap may see a temporarily incomplete history
+    * (this is an offline maintenance op, like [[vacuum]]) but never a
+    * doubled row.
     */
   def compactChangelog(spark: org.apache.spark.sql.SparkSession, baseDir: String,
                        key: Seq[String]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
     val current = currentVersion(baseDir).getOrElse(return)
-    val clogRoot = Paths.get(s"$baseDir/changelog")
-    if (!Files.isDirectory(clogRoot)) return
-    val aside = clogRoot.resolve(".compact_aside")
-    val staging = clogRoot.resolve(".compact_staging")
-    if (Files.isDirectory(aside)) {
-      val markerPath = aside.resolve("_target")
-      val markerTarget =
-        if (Files.exists(markerPath))
-          Files.readString(markerPath).trim.toLongOption
-        else None
-      val swapDone = markerTarget.exists { n =>
-        Files.isDirectory(clogRoot.resolve(s"v=$n")) &&
-          Files.isDirectory(aside.resolve(s"v=$n"))
-      }
-      if (swapDone) deleteRecursively(aside)
-      else { // swap never landed: restore every moved-aside version dir
-        val l = Files.list(aside)
-        try l.iterator.asScala.foreach { p =>
-          if (p.getFileName.toString.startsWith("v="))
-            Files.move(p, clogRoot.resolve(p.getFileName.toString),
-              StandardCopyOption.ATOMIC_MOVE)
-        } finally l.close()
-        deleteRecursively(aside)
-        deleteRecursively(staging)
-      }
-    }
-    val versions = listVersionDirs(clogRoot).filter(_._1 <= current)
+    val clogRoot = s"$baseDir/changelog"
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(clogRoot))) return
+    Commit.recover(clogRoot)
+    val versions = listVersionDirs(java.nio.file.Paths.get(clogRoot)).filter(_._1 <= current)
     if (versions.size <= 1) return
-    val target = clogRoot.resolve(s"v=$current")
     val compacted = Changelog.latest(
       readChangelog(spark, baseDir).withColumn("v_row", col("v").cast("long")),
       key, "v_row").drop("v")
-    deleteRecursively(staging)
-    compacted.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    Files.createDirectories(aside)
-    Files.writeString(aside.resolve("_target"), current.toString)
-    // v=current moved LAST: root-present + aside-absent v=current is the
-    // recovery's completed-swap witness, so it must be the final move
-    versions.sortBy(v => (v._1 == current, v._1)).foreach { case (_, p) =>
-      Files.move(p, aside.resolve(p.getFileName.toString),
-        StandardCopyOption.ATOMIC_MOVE)
-    }
-    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(aside)
+    compacted.write.mode(SaveMode.Overwrite).parquet(Commit.staging(clogRoot))
+    Commit.swap(clogRoot, versions.map(_._2.getFileName.toString), s"v=$current")
   }
 
   private def listVersionDirs(root: java.nio.file.Path): Seq[(Long, java.nio.file.Path)] = {

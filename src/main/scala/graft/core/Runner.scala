@@ -111,7 +111,7 @@ object Runner {
                             tribeKey: String, memberTribeFk: String,
                             memberKey: String, factKey: String,
                             statCols: Seq[String]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val activeDir = s"$baseDir/tribe_active"
     val statsDir = s"$baseDir/tribe_stats"
     // the two-directory swap cannot be atomic as a pair; the marker makes
@@ -145,11 +145,8 @@ object Runner {
     newActive.write.mode(SaveMode.Overwrite).parquet(aTmp)
     newStats.write.mode(SaveMode.Overwrite).parquet(sTmp)
     Files.writeString(marker, "swap")
-    for ((tmp, dst) <- Seq(aTmp -> activeDir, sTmp -> statsDir)) {
-      val dstPath = Paths.get(dst)
-      Pipeline.deleteRecursively(dstPath)
-      Files.move(Paths.get(tmp), dstPath, StandardCopyOption.ATOMIC_MOVE)
-    }
+    Commit.replaceDir(aTmp, activeDir)
+    Commit.replaceDir(sTmp, statsDir)
     Files.deleteIfExists(marker)
   }
 }

@@ -97,44 +97,26 @@ private[stream] object IngestState {
     * that could still replay would put its own rows in the corpus it
     * probes against (the corpus/delta disjointness both gates rely on).
     *
-    * Crash discipline mirrors `Pipeline.compactChangelog`: staging is
-    * written complete first, sources move into a dot-prefixed aside
-    * (`batch=0` last), staging renames in, aside is deleted; recovery at
-    * the next call either finishes the cleanup or restores the aside.
-    * Like changelog compaction this is an OFFLINE maintenance op — a
-    * probe racing the swap could transiently miss index rows.
+    * Crash discipline is [[graft.core.Commit.swap]] (the one changelog
+    * compaction uses): staging is written complete first, then swapped in
+    * as `batch=0`; [[graft.core.Commit.recover]] at the next call finishes
+    * or undoes a crashed swap. The swap runs on the LOCAL filesystem, so
+    * `root` must be a local path (a non-`file` URI is rejected); the
+    * batch listing and the parquet reads and writes go through Spark and
+    * the Hadoop filesystem of the path. Like changelog compaction this is
+    * an OFFLINE maintenance op — a probe racing the swap could
+    * transiently miss index rows.
     */
   def compactIndex(spark: SparkSession, root: String, uptoExclusive: Long): Unit = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val aside = new org.apache.hadoop.fs.Path(root, ".compact_aside")
-    val staging = new org.apache.hadoop.fs.Path(root, ".compact_staging")
-    if (fs.exists(aside)) {
-      val swapLanded = fs.exists(new org.apache.hadoop.fs.Path(root, "batch=0")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(aside, "batch=0"))
-      if (swapLanded) fs.delete(aside, true)
-      else { // restore: the swap never landed
-        fs.listStatus(aside).foreach { st =>
-          if (st.getPath.getName.startsWith("batch="))
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(root, st.getPath.getName))
-        }
-        fs.delete(aside, true)
-        fs.delete(staging, true)
-      }
-    }
+    graft.core.Commit.recover(root)
     val dirs = listBatchDirs(spark, root).filter(_._2 < uptoExclusive)
     if (dirs.size < 2) return // nothing to fold
     val all = dirs.map { case (p, _) => spark.read.parquet(p.toString) }
       .reduce(_ unionByName _)
     all.repartition(col("pb"))
-      .write.mode(SaveMode.Overwrite).partitionBy("pb").parquet(staging.toString)
-    fs.mkdirs(aside)
-    // batch=0 moves aside LAST so recovery can distinguish swap-landed
-    dirs.sortBy { case (_, v) => if (v == 0) Long.MaxValue else v }.foreach {
-      case (p, _) => fs.rename(p, new org.apache.hadoop.fs.Path(aside, p.getName))
-    }
-    fs.rename(staging, new org.apache.hadoop.fs.Path(root, "batch=0"))
-    fs.delete(aside, true)
+      .write.mode(SaveMode.Overwrite).partitionBy("pb")
+      .parquet(graft.core.Commit.staging(root))
+    graft.core.Commit.swap(root, dirs.map(_._1.getName), "batch=0")
   }
 
   /** Read a `batch=N`-partitioned state dir restricted to partitions
@@ -144,7 +126,9 @@ private[stream] object IngestState {
     * in-flight `batch=version` partition — which the caller is about to
     * Overwrite — are never opened, even though the eager file listing saw
     * them. Existence is probed through the Hadoop filesystem of the path,
-    * so state may live on HDFS/S3, not only the local disk.
+    * so this state may live on HDFS/S3, not only the local disk — as may
+    * the index reads/writes and the params manifest here; only
+    * [[compactIndex]]'s swap needs a local path.
     */
   def readOrEmpty(spark: SparkSession, dir: String, template: DataFrame,
                   maxBatchExclusive: Long): DataFrame = {

@@ -27,22 +27,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(phantoms > 0, "phantom 'deleted' rows must survive when the breaker trips")
   }
 
-  test("commit writes changelog, snapshot, state in order; state matches snapshot") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_commit").toString
-    val e = Fixture.external(spark, TestSpark.Sf)
-    val i = Fixture.internal(spark, TestSpark.Sf)
-    val r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols)
-    Pipeline.commit(r, dir)
-    val snap = spark.read.parquet(s"$dir/snapshot")
-    val state = spark.read.parquet(s"$dir/state")
-    assert(snap.count() == e.count())
-    assert(state.count() == e.count())
-    assert(state.columns.toSet == (Fixture.Key :+ Diff.SigCol).toSet)
-    // a second warm run from the committed state finds nothing to do
-    val r2 = Pipeline.warm(snap, e, Fixture.Key, Fixture.DataCols)
-    assert(r2.kinds.filter(col("kind") =!= "unchanged").count() == 0)
-  }
-
   test("versioned commit: pointer advances, readers see the committed version") {
     val dir = java.nio.file.Files.createTempDirectory("graft_vcommit").toString
     val e = Fixture.external(spark, TestSpark.Sf)
@@ -54,12 +38,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.currentVersion(dir).contains(2L))
     assert(Pipeline.readLatest(spark, dir, "snapshot").count() == e.count())
     assert(Pipeline.readLatest(spark, dir, "state").count() == e.count())
+    assert(Pipeline.readLatest(spark, dir, "state").columns.toSet ==
+      (Fixture.Key :+ Diff.SigCol).toSet)
     // changelog history readable with the v partition as version column;
     // orphan versions past the pointer are invisible
     val clog = Pipeline.readChangelog(spark, dir)
     assert(clog.count() == 2 * r.changelog.count())
     r.changelog.limit(5).write.mode("overwrite").parquet(s"$dir/changelog/v=9")
     assert(Pipeline.readChangelog(spark, dir).count() == 2 * r.changelog.count())
+    // a second warm run from the committed state finds nothing to do
+    val r2 = Pipeline.warm(Pipeline.readLatest(spark, dir, "snapshot"), e,
+      Fixture.Key, Fixture.DataCols, state = Some(Pipeline.readLatest(spark, dir, "state")))
+    assert(r2.kinds.filter(col("kind") =!= "unchanged").count() == 0)
+    // deriveFetched re-applies the score columns to fetched rows, so a
+    // scored replica round-trips through warm runs
+    val scored = (df: org.apache.spark.sql.DataFrame) => Scores.withOverall(Scores.withScores(df))
+    val r3 = Pipeline.warm(scored(e).limit(0), e, Fixture.Key, Fixture.DataCols,
+      deriveFetched = scored)
+    assert(r3.newSnapshot.columns.contains("score_overall"))
+    assert(r3.newSnapshot.count() == e.count())
   }
 
   test("commitVersionedAt is idempotent: a replayed version is a no-op") {
@@ -101,29 +98,5 @@ class PipelineSpec extends AnyFunSuite {
         "boom" -> (() => throw new RuntimeException("table failed"))))
     }
     assert(ex.getMessage.contains("table failed"))
-  }
-
-  test("commitCold fans one pass out to snapshot + state sinks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cold").toString
-    val e = Fixture.external(spark, TestSpark.Sf)
-    Pipeline.commitCold(e, Fixture.Key, Fixture.DataCols, dir)
-    val snap = spark.read.parquet(s"$dir/snapshot")
-    val state = spark.read.parquet(s"$dir/state")
-    assert(snap.count() == e.count() && state.count() == e.count())
-    assert(snap.columns.contains("score_overall"))
-    // a warm run consumes the scored snapshot directly (deriveFetched
-    // re-applies the score columns to incoming rows) and finds no changes
-    val r = Pipeline.warm(snap, e, Fixture.Key, Fixture.DataCols,
-      deriveFetched = df => Scores.withOverall(Scores.withScores(df)))
-    assert(r.kinds.filter(col("kind") =!= "unchanged").count() == 0)
-    assert(r.newSnapshot.columns.contains("score_overall"))
-  }
-
-  test("cold load emits scored snapshot + signature state") {
-    val e = Fixture.external(spark, TestSpark.Sf)
-    val (scored, state) = Pipeline.cold(e, Fixture.Key, Fixture.DataCols)
-    assert(scored.columns.contains("score_overall"))
-    assert(state.columns.toSet == (Fixture.Key :+ Diff.SigCol).toSet)
-    assert(state.count() == e.count())
   }
 }

@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.TestSpark
 
 /** Crash windows of [[IngestState.compactIndex]]'s aside/staging swap —
-  * the recovery branches the gates' LSM compaction relies on. The
-  * changelog compaction's equivalent discipline is pinned in
-  * ChangelogCompactionSpec; this is the INDEX implementation (separate
-  * code), exercised at both crash points the rename ordering creates:
-  * before the staging swap lands (restore) and after it lands but
-  * before the aside cleanup (finish).
+  * the recovery branches the gates' LSM compaction relies on. Both this
+  * and changelog compaction (ChangelogCompactionSpec) run the one
+  * `core.Commit.swap`, whose every crash prefix CommitSpec sweeps; this
+  * pins the INDEX layout at both crash points the rename ordering
+  * creates: before the staging swap lands (restore) and after it lands
+  * but before the aside cleanup (finish).
   */
 class IngestStateCompactionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
