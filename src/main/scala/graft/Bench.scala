@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * Fit (same verdict item): two budget levers keep the full run well
   * under the kill window.
   *  - The md5/oracle-gear twins that double-pay their production
-  *    siblings at full bench scale (`ReducedScale` below) run against
+  *    siblings at full bench scale (`Session.ReducedScale`) run against
   *    the RAW sf fixtures (docs_scale 1) instead of the 10×-scaled
   *    corpus — ~500 s recovered; Verify still gates their correctness
   *    at sf0.01 and the production modes stay at scale. Which queries
@@ -58,11 +58,6 @@ import org.apache.spark.sql.SparkSession
   * read as measured.
   */
 object Bench {
-  /** Oracle-gear (md5 / all-positions-audit) twins whose production
-    * siblings already pay full scaled-corpus price in the same bench:
-    * these run at the raw fixture scale. Kept deliberately short — every
-    * name here loses scaled-corpus continuity with rounds ≤ 11.
-    */
   /** Pass-2 repeat priority (VERDICT r13 #1): how far a first run sits
     * from the previous record's median, symmetric in direction (a 30×
     * spike and a 30× drop are equally suspect). No prior (a query new
@@ -73,41 +68,9 @@ object Bench {
     prior.map(p => math.max(t1 / math.max(p, 1e-3), p / math.max(t1, 1e-3)))
       .getOrElse(Double.MaxValue)
 
-  private[graft] val ReducedScale = Set(
-    "dedup_substring_exact",       // all-positions oracled audit; winnowed = scale path
-    "dedup_substring_gate",        // md5 oracle mode; _xx production mode stays scaled
-    "dedup_substring_winnowed_md5",// md5 twin; dedup_substring_winnowed stays scaled
-    "corpus_ingest_e2e")           // md5 3-wave replay; _xx production stays scaled
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan exchanges that sit UNDER a cached plan: the
-      // Fixture frames are persisted, and with this off (the default)
-      // every downstream shuffle inherits the cached plan's partition
-      // count verbatim — which is how r7's global 128-partition posture
-      // taxed the whole CDC family 4-10× (VERDICT r7 #1)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // AQE coalescing targets COMPRESSED map-output bytes; the heavy
-      // gram/pair exchanges here decompress ~4× into sorter memory, so
-      // the advisory target is effectively a per-task memory knob.
-      // Env-overridable for A/B measurement (r15); default justified in
-      // OPTIMIZATION_r15.md.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "64") + "m")
-      // AQE SMJ→SHJ rewrite threshold (guide §3.1): default 0 = off (the
-      // Spark default). Env-overridable for A/B measurement (r15).
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_MB", "0") + "m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder(Session.cores).getOrCreate()
     // warm the JVM/codegen/scan paths before timing: without this the
     // alphabetically-first query absorbs several seconds of one-time
     // session setup and the per-query numbers misattribute it
@@ -119,12 +82,7 @@ object Bench {
     // (~50k docs at sf0.1) so the dedup/text/ANN numbers measure data,
     // not fixed overhead; materialization happens ONCE here, outside any
     // per-query timing. Correctness (Verify) still runs the raw fixtures.
-    val scaledDir =
-      try graft.queries.ScaledFixtures.ensure(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] fixture scaling failed, using raw: ${e.getMessage}")
-        sfDir
-      }
+    val scaledDir = Session.scaledFixtures(spark, sfDir, "bench")
     // untimed corpus warm pass (r10 verdict #3: same-HEAD cuts spread up
     // to 1.66× on median sum, worst on the first heavy documents
     // queries): one full scan of the scaled docs + embeddings pulls both
@@ -276,32 +234,13 @@ object Bench {
       summary
     }
 
-    /** The query's input dir, with the per-family partition posture set:
-      * the 10×-scaled doc corpus needs 128 initial partitions so the
-      * gram-index shuffles fit execution memory (r7 sf0.1 OOM at 32),
-      * but 128 applied globally ran the 600k-row CDC family in 128
-      * tiny tasks (4-10× the honest medians — VERDICT r7 #1). AQE
-      * coalesces the wide start back down where exchanges are small,
-      * and at 100 TB this is the real posture anyway: partition count
-      * sized by the data the family actually touches. Called before
-      * EVERY run — pass 2's deviation order interleaves families, so the
-      * posture must travel with the query, not with loop position.
-      */
-    def postureFor(name: String): String = {
-      val reduced = ReducedScale.contains(name) && scaledDir != sfDir
-      val scaled = !reduced && graft.queries.ScaledFixtures.appliesTo(name)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        if (scaled) "128" else cpus)
-      if (scaled) scaledDir else sfDir
-    }
-
     // ---- pass 1: every query once, alphabetical — the driver record's
     // `value` (sum of first runs) completes before any repeat is spent
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     ordered.foreach { case (name, fn) =>
-      if (ReducedScale.contains(name) && scaledDir != sfDir) reducedRan += name
-      val dir = postureFor(name)
+      if (Session.reduced(name, sfDir, scaledDir)) reducedRan += name
+      val dir = Session.postureFor(spark, name, sfDir, scaledDir)
       val (t1, ok1) = runOnce(name, fn, dir)
       if (!ok1) failures += name
       results += ((name, t1, t1, 1))
@@ -335,7 +274,7 @@ object Bench {
       // per-candidate gate, no early break: a cheap high-deviation query
       // later in the list may still fit after an expensive one didn't
       if (elapsed() + nReps * t1 <= RepeatBudget) {
-        val dir = postureFor(name)
+        val dir = Session.postureFor(spark, name, sfDir, scaledDir)
         val reps = (1 to nReps).map(_ => runOnce(name, SparkEntry.queries(name), dir))
         // a failed REPEAT is a failure too — silently dropping it from the
         // sample reports the run healthy while the "median" of the two

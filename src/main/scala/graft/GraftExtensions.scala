@@ -8,7 +8,7 @@ import graft.plans.{PushFilterThroughTopK, TopKStrategy}
 
 /** The engine's canonical integration point:
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`) installs
+  * `withExtensions(new GraftExtensions)` on a session builder) installs
   *  - the [[graft.plans.TopKPerGroup]] planner strategy,
   *  - the [[graft.plans.PushFilterThroughTopK]] optimizer rule,
   *  - SQL bindings for the codegen'd vector kernels

@@ -1160,7 +1160,7 @@ object Catalog {
       // the CDC core at SYNTHETIC scale, declared so its at-scale
       // throughput is tracked round-over-round like the dedup family
       // (the fixture diffs ~600k keys at sf0.1; this runs 100k × the sf
-      // multiplier — 10M keys at sf0.1, the tools/DiffBench shape):
+      // multiplier — 10M keys at sf0.1):
       // ~1% changed / 0.5% new / 0.5% deleted, full classify + apply.
       // Output: per-kind counts plus the applied snapshot's row count —
       // wrong classification or apply algebra shifts the counts.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for declared queries to one file per
@@ -9,8 +8,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * (Exchange counts, join strategy, PushedFilters/ReadSchema) are
   * checked against these files, since the grader cannot run Spark.
   *
-  * Mirrors Bench's session posture exactly (same master/conf, same
-  * scaled-dir routing, same per-family `initialPartitionNum`) so the
+  * Runs Bench's posture through [[graft.Session]] (same session conf,
+  * same scaled-dir routing, same per-family `initialPartitionNum`) so the
   * captured plan is the one the bench executes — a plan captured under
   * a different partition posture can differ in join strategy and AQE
   * shape. Note: plans are captured at PLAN time (AQE
@@ -18,44 +17,28 @@ import org.apache.spark.sql.execution.ExplainMode
   * broadcast demotion) is by design not in these files.
   *
   *   SPARK_GRAFT_PLAN_ONLY=q1,q2   subset (default: every declared query)
-  *   SPARK_GRAFT_PLAN_DIR=...      output dir (default plans/r14)
+  *   SPARK_GRAFT_PLAN_DIR=...      output dir (default target/plans, so a
+  *                                 default run never overwrites a record)
   *   SPARK_GRAFT_PLAN_SUFFIX=...   file suffix (default "before")
   */
 object PlanDump {
+  private[tools] val DefaultDir = "target/plans"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "/root/repo/plans/r14"))
+      sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", DefaultDir))
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val scaledDir =
-      try graft.queries.ScaledFixtures.ensure(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[plandump] fixture scaling failed, using raw: ${e.getMessage}")
-        sfDir
-      }
+    val spark = graft.Session.builder(graft.Session.cores).getOrCreate()
+    val scaledDir = graft.Session.scaledFixtures(spark, sfDir, "plandump")
     val names = sys.env.get("SPARK_GRAFT_PLAN_ONLY").map(_.split(',').toSeq)
       .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
     names.foreach { name =>
       graft.SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[plandump] unknown query: $name")
         case Some(fn) =>
-          val reduced = graft.Bench.ReducedScale.contains(name) && scaledDir != sfDir
-          val scaled = !reduced && graft.queries.ScaledFixtures.appliesTo(name)
-          spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            if (scaled) "128" else cpus)
-          val dir = if (scaled) scaledDir else sfDir
+          val dir = graft.Session.postureFor(spark, name, sfDir, scaledDir)
           try {
             val df = fn(spark, dir)
             val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * vectors), same warm JVM. Linear paths should show ~4× wall; anything
   * past its family threshold is a scale bug the 500k corpus hid.
   *
-  * Output is a TRACKED artifact (default `/root/repo/SCALE_r12.json`):
+  * Output is the round's SCALE record (default [[DefaultOut]], under
+  * `target/` so a default run never overwrites a committed record):
   * per-query base/4× WALL seconds and PHYSICAL-WORK seconds (task CPU +
   * GC), both ratios, the threshold, and pass/fail — a family passes if
   * its wall ratio is under threshold, or if its work ratio is under
@@ -61,9 +62,12 @@ import org.apache.spark.sql.SparkSession
   *     sbt "runMain graft.tools.ScaleProbe"
   * (the sbt-forked JVM becomes the parent; children are plain
   * `java -cp` re-invocations of this class with
-  * SPARK_GRAFT_SCALE_CHILD=1).
+  * SPARK_GRAFT_SCALE_CHILD=1). Every JVM's heap is the `-Xmx` sbt forks
+  * with, `SPARK_DRIVER_MEM` in build.sbt.
   */
 object ScaleProbe {
+  private[tools] val DefaultOut = "target/SCALE.json"
+
   private val DefaultProbes = Seq(
     "mm_image_dedup_check",
     "dedup_substring_winnowed", "dedup_substring_winnowed_hub",
@@ -202,8 +206,8 @@ object ScaleProbe {
                                      // (auto-sized xxhash hyperplanes) as a
                                      // round-over-round family — the declared
                                      // query, 38 s at bench scale, previously
-                                     // measured only by the one-off
-                                     // VecGateProbe per-batch tool. Measured
+                                     // measured only by a one-off
+                                     // per-batch probe. Measured
                                      // r10: wall 0.95 / work 1.04 at 4× —
                                      // the prefix-partitioned state layout's
                                      // fixed per-prefix costs (3 waves ×
@@ -217,8 +221,7 @@ object ScaleProbe {
                                      // through the 4× leg — far past any
                                      // constant). The delta-bounded
                                      // per-batch READ contract is pinned
-                                     // separately (StreamVecDupSpec at unit
-                                     // scale, VecGateProbe at corpus scale).
+                                     // separately (StreamVecDupSpec).
     "corpus_ingest_e2e_xx" -> 5.5,   // composed 3-wave gate chain: LM score
                                      // + exact sig + winnowed substring vs
                                      // accumulating admitted state; linear
@@ -456,7 +459,7 @@ object ScaleProbe {
       "/root/testdata/sf0.1").split(",").toSeq
     val probes = sys.env.get("SPARK_GRAFT_SCALE_PROBES")
       .map(_.split(",").toSeq).getOrElse(DefaultProbes) ++ args
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/root/repo/SCALE_r12.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", DefaultOut)
     if (sys.env.contains("SPARK_GRAFT_SCALE_CHILD")) runFamilies(probes, dirs, outPath)
     else runParent(probes.distinct, dirs, outPath)
   }
@@ -589,13 +592,6 @@ object ScaleProbe {
     // quadratics the probe exists to catch) inflates BOTH.
     val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
     val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val builder0 = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.driver.memory", "32g")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // Every probe child measures with the SORT-BASED shuffle writer on
     // BOTH legs. Mechanism (root-caused r13, closing three rounds of
     // span-stats ratio flapping): Spark flips from the bypass-merge
@@ -615,11 +611,9 @@ object ScaleProbe {
     // session creation; fork-per-family keeps Bench and tests on the
     // default writer (at bench scale bypass is legitimately the fast
     // path, exactly as a small deployment would run it).
-    val spark0 = builder0
+    val spark = graft.Session.builder(graft.Session.cores)
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .getOrCreate()
-    val spark = spark0
-    spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         Option(te.taskMetrics).foreach { m =>

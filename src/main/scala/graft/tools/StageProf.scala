@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-STAGE profiler for declared queries (optimization-round dev tool;
   * the driver uses graft.Bench). Runs each named query under the exact
@@ -30,23 +29,8 @@ object StageProf {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StageProf <query> [query ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val scaledDir =
-      try graft.queries.ScaledFixtures.ensure(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[stageprof] fixture scaling failed, using raw: ${e.getMessage}")
-        sfDir
-      }
+    val spark = graft.Session.builder(graft.Session.cores).getOrCreate()
+    val scaledDir = graft.Session.scaledFixtures(spark, sfDir, "stageprof")
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, Agg]()
     // @volatile + waitUntilEmpty below (ADVICE r14): the flag is read on
     // the async listener-bus thread and written from main; without the
@@ -84,11 +68,7 @@ object StageProf {
       graft.SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[stageprof] unknown query: $name")
         case Some(fn) =>
-          val reduced = graft.Bench.ReducedScale.contains(name) && scaledDir != sfDir
-          val scaled = !reduced && graft.queries.ScaledFixtures.appliesTo(name)
-          spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            if (scaled) "128" else cpus)
-          val dir = if (scaled) scaledDir else sfDir
+          val dir = graft.Session.postureFor(spark, name, sfDir, scaledDir)
           org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
           stages.clear()
           collecting = true

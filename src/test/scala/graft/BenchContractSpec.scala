@@ -12,9 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchContractSpec extends AnyFunSuite {
 
   test("ReducedScale names only declared, scaled-family queries") {
-    val unknown = Bench.ReducedScale -- SparkEntry.queries.keySet
+    val unknown = Session.ReducedScale -- SparkEntry.queries.keySet
     assert(unknown.isEmpty, s"reduced-scale names not declared: $unknown")
-    val unscaled = Bench.ReducedScale.filterNot(queries.ScaledFixtures.appliesTo)
+    val unscaled = Session.ReducedScale.filterNot(queries.ScaledFixtures.appliesTo)
     assert(unscaled.isEmpty,
       s"reduced-scale names outside the scaled families (reduction is a no-op): $unscaled")
   }
@@ -36,12 +36,12 @@ class BenchContractSpec extends AnyFunSuite {
       "dedup_substring_gate" -> "dedup_substring_gate_xx",
       "dedup_substring_winnowed_md5" -> "dedup_substring_winnowed",
       "corpus_ingest_e2e" -> "corpus_ingest_e2e_xx")
-    assert(Bench.ReducedScale == sibling.keySet,
+    assert(Session.ReducedScale == sibling.keySet,
       "sibling map must cover exactly the reduced set — update both together")
     sibling.foreach { case (reduced, prod) =>
       assert(SparkEntry.queries.contains(prod),
         s"$reduced's full-scale sibling $prod is not declared")
-      assert(!Bench.ReducedScale.contains(prod),
+      assert(!Session.ReducedScale.contains(prod),
         s"$reduced's sibling $prod is itself reduced — the operator would lose its at-scale number")
     }
   }

@@ -4,30 +4,49 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Keeps the "how staged bytes become durable state" decision behind one
-  * module: outside [[Commit]], no main source renames a file or directory.
+/** Keeps each engine-wide decision behind one module: outside its owning
+  * file (and a reasoned allow-list), no main source spells the calls that
+  * make it — how staged bytes become durable state ([[Commit]]), and how
+  * an engine session is configured ([[graft.Session]]).
   */
 class CommitDisciplineSpec extends AnyFunSuite {
-  /** file name -> why it may still rename on its own */
-  private val allowed = Map(
-    "Commit.scala" -> "the durable-commit primitive itself",
-    "IvfIndex.scala" -> ("rebuild swaps a multi-component index in place " +
-      "through the Hadoop filesystem, documented as non-atomic"))
+  /** what the patterns do, the patterns, the owning file, and
+    * file name -> why it may still use them */
+  private case class Rule(what: String, patterns: Seq[String], owner: String,
+                          allowed: Map[String, String])
 
-  test("ATOMIC_MOVE and .rename( appear only in Commit.scala (and the allow-list)") {
-    val src = Paths.get("src/main/scala")
-    assert(Files.isDirectory(src), s"main sources not found from ${Paths.get("").toAbsolutePath}")
-    val walk = Files.walk(src)
-    val offenders = try walk.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && !allowed.contains(p.getFileName.toString))
-      .flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("ATOMIC_MOVE") || line.contains(".rename(") =>
-            s"$p:${i + 1}: ${line.trim}"
+  private val rules = Seq(
+    Rule("durable renames", Seq("ATOMIC_MOVE", ".rename("), "Commit.scala", Map(
+      "IvfIndex.scala" -> ("rebuild swaps a multi-component index in place " +
+        "through the Hadoop filesystem, documented as non-atomic"))),
+    Rule("session builders", Seq("SparkSession.builder"), "Session.scala", Map.empty))
+
+  rules.foreach { case Rule(what, patterns, owner, allowed) =>
+    test(s"${patterns.mkString(" and ")} appear only in $owner (and the allow-list)") {
+      val src = Paths.get("src/main/scala")
+      assert(Files.isDirectory(src), s"main sources not found from ${Paths.get("").toAbsolutePath}")
+      val walk = Files.walk(src)
+      val offenders = try walk.iterator.asScala
+        .filter { p =>
+          val name = p.getFileName.toString
+          name.endsWith(".scala") && name != owner && !allowed.contains(name)
         }
-      }.toVector
-    finally walk.close()
-    assert(offenders.isEmpty,
-      s"durable renames outside Commit.scala:\n${offenders.mkString("\n")}")
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if patterns.exists(line.contains) => s"$p:${i + 1}: ${line.trim}"
+          }
+        }.toVector
+      finally walk.close()
+      assert(offenders.isEmpty,
+        s"$what outside $owner:\n${offenders.mkString("\n")}")
+    }
+  }
+
+  test("Session.builder(n) yields n shuffle partitions and re-plannable cached exchanges") {
+    // the shared test session is built by Session.builder(TestSpark.Cores)
+    val conf = graft.TestSpark.spark.conf
+    assert(conf.get("spark.sql.shuffle.partitions") == graft.TestSpark.Cores.toString)
+    assert(conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(graft.TestSpark.spark.sparkContext.master == s"local[${graft.TestSpark.Cores}]")
   }
 }

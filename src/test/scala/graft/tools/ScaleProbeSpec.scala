@@ -65,6 +65,12 @@ class ScaleProbeSpec extends AnyFunSuite {
     assert(!ScaleProbe.gatePass(wallRatio = 8.0, workRatio = 7.0, thr = 5.0))
   }
 
+  test("default outputs land under target/, never on a committed record") {
+    Seq(ScaleProbe.DefaultOut, PlanDump.DefaultDir).foreach { p =>
+      assert(java.nio.file.Paths.get(p).normalize.startsWith("target"), p)
+    }
+  }
+
   test("breach scan finds exactly the ok:false rows") {
     val json = ScaleProbe.spliceFragments(Seq(
       "fam_ok" -> frag("fam_ok", 2.0, ok = true),
