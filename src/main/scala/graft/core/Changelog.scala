@@ -18,13 +18,11 @@ object Changelog {
     * semantically a left-semi join, which we use so no right-side columns
     * are ever materialized (narrower shuffle at scale).
     */
-  def captureOld(oldSnapshot: DataFrame, changed: DataFrame, key: Seq[String],
-                 nullSafe: Boolean = true): DataFrame =
+  def captureOld(oldSnapshot: DataFrame, changed: DataFrame, key: Seq[String]): DataFrame =
     // null-safe (<=>) like the rest of the diff algebra: a null-key row
     // classified 'changed' must have its old version captured too, or the
     // upsert rewrites it with no history trail
-    oldSnapshot.join(Diff.rightKeys(changed, key, nullSafe).distinct(),
-      Diff.nsCond(key, nullSafe), "left_semi")
+    oldSnapshot.join(Diff.rightKeys(changed, key).distinct(), Diff.nsCond(key), "left_semi")
 
   /** changelog_latest: reconstruct latest-version-per-key from an
     * append-only changelog. The reference keeps history implicitly ordered

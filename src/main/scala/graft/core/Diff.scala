@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions._
   * full-row fetch is a `left_semi` join against the (small) changed-key
   * set, which AQE broadcasts when it fits — exactly the reference's
   * semi-join-reduction intent (download.py:435 "waaaay faster").
+  * WarmPlanSpec pins the (key, sig)-only shuffle on the warm path.
+  * Every operator matches keys by one rule, null-safe `<=>` ([[nsCond]]).
   */
 object Diff {
   val KindCol = "kind"
@@ -31,48 +33,17 @@ object Diff {
   /** Key equi condition between `left`'s key columns and the
     * `__dk_`-renamed key columns of a right side built by [[rightKeys]].
     *
-    * Null-safe (`<=>`, the default) keeps every operator in the algebra
-    * consistent for nullable keys: a null-key row matches its null-key
-    * counterpart (instead of an internal null-key row classifying
+    * Null-safe (`<=>`) is the one key rule of the algebra: it keeps every
+    * operator consistent for nullable keys — a null-key row matches its
+    * null-key counterpart (instead of an internal null-key row classifying
     * 'deleted' while the external null-key row appends as 'new', which
     * broke the documented apply(diff(i,e),i)==e round-trip).
-    *
-    * `nullSafe = false` (for keys declared non-null — every CDC primary
-    * key in the reference is a MySQL NOT NULL PK) uses plain `===`. This
-    * is not just cosmetic: Catalyst rewrites `a <=> b` join keys into
-    * `(coalesce(a, d), isnull(a))`, whose hash partitioning a bucketed
-    * table's layout does NOT satisfy — the planner disables the bucketed
-    * scan and shuffles the 100 TB side. Plain `===` on the raw key keeps
-    * the snapshot/state side of every warm-diff join exchange-free over
-    * [[Bucketing]] tables (proven in WarmBucketedPlanSpec).
     */
-  /** Fail-fast guard for the `nullSafe = false` contract: a null value in
-    * a key declared non-null would silently mis-join on EVERY run under
-    * `===` (null never equals) — classify 'deleted'+'new', never fetch,
-    * never replace — breaking the apply(diff(i,e),i)==e round-trip
-    * forever. Instead the job itself fails with a clear message. The
-    * check is a per-row branch woven into the key expressions every
-    * operator in the algebra joins on ([[nsCond]] guards the left side,
-    * [[rightKeys]] the projected right side), so no operator can consume
-    * a null key silently — distributed, codegen'd, no extra job — and it
-    * folds away entirely when the column's schema already says
-    * non-nullable.
-    */
-  private def requireKey(c: Column, k: String, nullSafe: Boolean): Column =
-    if (nullSafe) c
-    else when(c.isNotNull, c).otherwise(raise_error(lit(
-      s"Diff: null value in key '$k' under nullSafe=false — use nullSafe=true " +
-        "(null-safe <=>) for nullable keys or repair the input")))
+  private[core] def nsCond(key: Seq[String]): Column =
+    key.map(k => col(k) <=> col(s"__dk_$k")).reduce(_ && _)
 
-  private[core] def nsCond(key: Seq[String], nullSafe: Boolean = true): Column =
-    key.map(k =>
-      if (nullSafe) col(k) <=> col(s"__dk_$k")
-      else requireKey(col(k), k, nullSafe = false) === col(s"__dk_$k"))
-      .reduce(_ && _)
-
-  private[core] def rightKeys(df: DataFrame, key: Seq[String],
-                              nullSafe: Boolean = true): DataFrame =
-    df.select(key.map(k => requireKey(col(k), k, nullSafe).as(s"__dk_$k")): _*)
+  private[core] def rightKeys(df: DataFrame, key: Seq[String]): DataFrame =
+    df.select(key.map(k => col(k).as(s"__dk_$k")): _*)
 
   /** (key, sig) projection — the persisted signature cache the reference
     * keeps in its `{t}_hashes_0/1` side tables (table.py:107-117).
@@ -86,9 +57,8 @@ object Diff {
     * (download.py:130-141). Prefer [[classifyState]] for recurring runs.
     */
   def classify(internal: DataFrame, external: DataFrame,
-               key: Seq[String], dataCols: Seq[String],
-               nullSafe: Boolean = true): DataFrame =
-    classifyState(sigTable(internal, key, dataCols), external, key, dataCols, nullSafe)
+               key: Seq[String], dataCols: Seq[String]): DataFrame =
+    classifyState(sigTable(internal, key, dataCols), external, key, dataCols)
 
   /** [[classify]] against a PRECOMPUTED signature state (key, sig) — the
     * reference-faithful protocol: it diffs its persisted hash side-table
@@ -101,15 +71,11 @@ object Diff {
     * data column does not re-classify every row 'changed' forever.
     */
   def classifyState(state: DataFrame, external: DataFrame,
-                    key: Seq[String], dataCols: Seq[String],
-                    nullSafe: Boolean = true): DataFrame = {
-    val i = state.select(key.map(k => requireKey(col(k), k, nullSafe).as(s"__ki_$k"))
-      :+ col(SigCol).as("sig_i"): _*)
-    val e = external.select(key.map(k => requireKey(col(k), k, nullSafe).as(s"__ke_$k"))
+                    key: Seq[String], dataCols: Seq[String]): DataFrame = {
+    val i = state.select(key.map(k => col(k).as(s"__ki_$k")) :+ col(SigCol).as("sig_i"): _*)
+    val e = external.select(key.map(k => col(k).as(s"__ke_$k"))
       :+ Signatures.md5Sig(dataCols.map(col)).as("sig_e"): _*)
-    val cond = key.map(k =>
-      if (nullSafe) col(s"__ki_$k") <=> col(s"__ke_$k")
-      else col(s"__ki_$k") === col(s"__ke_$k")).reduce(_ && _)
+    val cond = key.map(k => col(s"__ki_$k") <=> col(s"__ke_$k")).reduce(_ && _)
     i.join(e, cond, "full_outer")
       .withColumn(KindCol,
         when(col("sig_i").isNull, "new")                 // download.py:276-315
@@ -124,25 +90,22 @@ object Diff {
     * (reference: batched `WHERE pk IN (...)`, download.py:435-476).
     * `keys` is typically small (the delta) → AQE broadcast.
     */
-  def semiJoinChanged(source: DataFrame, keys: DataFrame, key: Seq[String],
-                      nullSafe: Boolean = true): DataFrame =
-    source.join(rightKeys(keys, key, nullSafe).distinct(), nsCond(key, nullSafe), "left_semi")
+  def semiJoinChanged(source: DataFrame, keys: DataFrame, key: Seq[String]): DataFrame =
+    source.join(rightKeys(keys, key).distinct(), nsCond(key), "left_semi")
 
   /** anti_join_deleted: rows present in `snapshot` but absent from
     * `source` (reference collects internal-only residue then issues
     * batched DELETEs, download.py:326-366).
     */
-  def antiJoinDeleted(snapshot: DataFrame, source: DataFrame, key: Seq[String],
-                      nullSafe: Boolean = true): DataFrame =
-    snapshot.join(rightKeys(source, key, nullSafe), nsCond(key, nullSafe), "left_anti")
+  def antiJoinDeleted(snapshot: DataFrame, source: DataFrame, key: Seq[String]): DataFrame =
+    snapshot.join(rightKeys(source, key), nsCond(key), "left_anti")
 
   /** upsert_replace: REPLACE INTO semantics — new rows supersede old by
     * key, unmatched old rows survive (reference: download.py:572-577,
     * 597-604). anti-join + union keeps this a pure column-pruned plan.
     */
-  def upsertReplace(old: DataFrame, replacements: DataFrame, key: Seq[String],
-                    nullSafe: Boolean = true): DataFrame =
-    old.join(rightKeys(replacements, key, nullSafe), nsCond(key, nullSafe), "left_anti")
+  def upsertReplace(old: DataFrame, replacements: DataFrame, key: Seq[String]): DataFrame =
+    old.join(rightKeys(replacements, key), nsCond(key), "left_anti")
       .unionByName(replacements)
 
   /** diff_apply: the end-to-end CDC contract —
@@ -151,10 +114,8 @@ object Diff {
     * Pure function; commit ordering lives in [[Pipeline]].
     */
   def diffApply(internal: DataFrame, external: DataFrame,
-                key: Seq[String], dataCols: Seq[String],
-                nullSafe: Boolean = true): DataFrame =
-    applyClassified(internal, external,
-      classify(internal, external, key, dataCols, nullSafe), key, nullSafe)
+                key: Seq[String], dataCols: Seq[String]): DataFrame =
+    applyClassified(internal, external, classify(internal, external, key, dataCols), key)
 
   /** The apply half of [[diffApply]] with a PRECOMPUTED classification —
     * the compute-once-consume-many shape a real replicator runs (classify
@@ -167,12 +128,11 @@ object Diff {
     * input avoids recomputing the classify join entirely.
     */
   def applyClassified(internal: DataFrame, external: DataFrame,
-                      kinds: DataFrame, key: Seq[String],
-                      nullSafe: Boolean = true): DataFrame = {
+                      kinds: DataFrame, key: Seq[String]): DataFrame = {
     val touched = kinds.filter(col(KindCol).isin("changed", "new"))
-    val fetched = semiJoinChanged(external, touched, key, nullSafe)
+    val fetched = semiJoinChanged(external, touched, key)
     val deleted = kinds.filter(col(KindCol) === "deleted")
-    val kept    = internal.join(rightKeys(deleted, key, nullSafe), nsCond(key, nullSafe), "left_anti")
-    upsertReplace(kept, fetched, key, nullSafe)
+    val kept    = internal.join(rightKeys(deleted, key), nsCond(key), "left_anti")
+    upsertReplace(kept, fetched, key)
   }
 }

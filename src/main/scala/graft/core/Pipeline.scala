@@ -44,33 +44,24 @@ object Pipeline {
   /** How a committed snapshot's files are laid out (reference:
     * README.md:14 stores replicas MyISAM "optimized for reads" — this is
     * the columnar form of that intent). `Plain` writes partitions as
-    * produced; `Sorted` range-partitions + sorts so parquet min/max
-    * statistics prune key-range scans to a handful of files; `Zordered`
-    * clusters along the z-curve so filters on ANY curve column prune
-    * ([[Layout]]). `numFiles = None` sizes from the session's default
-    * parallelism. The layout pass costs one extra shuffle of the
-    * snapshot at commit time — paid once per commit, repaid by every
-    * subsequent selective scan.
+    * produced; `Zordered` clusters along the z-curve so parquet min/max
+    * statistics prune filters on ANY curve column ([[Layout]]), one file
+    * per default-parallelism slot. The layout pass costs one extra
+    * shuffle of the snapshot at commit time — paid once per commit,
+    * repaid by every subsequent selective scan.
     */
   sealed trait SnapshotLayout
   object SnapshotLayout {
     case object Plain extends SnapshotLayout
-    final case class Sorted(cols: Seq[String], numFiles: Option[Int] = None)
-      extends SnapshotLayout
-    final case class Zordered(cols: Seq[String], numFiles: Option[Int] = None)
-      extends SnapshotLayout
+    final case class Zordered(cols: Seq[String]) extends SnapshotLayout
   }
 
   private def writeSnapshot(df: DataFrame, dir: String, layout: SnapshotLayout): Unit =
     layout match {
       case SnapshotLayout.Plain =>
         df.write.mode(SaveMode.Overwrite).parquet(dir)
-      case SnapshotLayout.Sorted(cols, nf) =>
-        Layout.writeSorted(df, dir, cols,
-          nf.getOrElse(df.sparkSession.sparkContext.defaultParallelism))
-      case SnapshotLayout.Zordered(cols, nf) =>
-        Layout.writeZordered(df, dir, cols,
-          nf.getOrElse(df.sparkSession.sparkContext.defaultParallelism))
+      case SnapshotLayout.Zordered(cols) =>
+        Layout.writeZordered(df, dir, cols, df.sparkSession.sparkContext.defaultParallelism)
     }
 
   /** Warm incremental run (reference download.py:44-63 + post_download
@@ -101,16 +92,15 @@ object Pipeline {
            key: Seq[String], dataCols: Seq[String],
            maxDeletes: Long = DefaultMaxDeletes,
            deriveFetched: DataFrame => DataFrame = identity,
-           state: Option[DataFrame] = None,
-           nullSafeKeys: Boolean = true): WarmResult = {
-    val kinds = state.map(Diff.classifyState(_, external, key, dataCols, nullSafeKeys))
-      .getOrElse(Diff.classify(internal, external, key, dataCols, nullSafeKeys))
+           state: Option[DataFrame] = None): WarmResult = {
+    val kinds = state.map(Diff.classifyState(_, external, key, dataCols))
+      .getOrElse(Diff.classify(internal, external, key, dataCols))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val touched  = kinds.filter(col(Diff.KindCol).isin("changed", "new"))
-    val rawFetch = Diff.semiJoinChanged(external, touched, key, nullSafeKeys)
+    val rawFetch = Diff.semiJoinChanged(external, touched, key)
     val fetched  = deriveFetched(rawFetch)
     val changedKeys = kinds.filter(col(Diff.KindCol) === "changed")
-    val changelog   = Changelog.captureOld(internal, changedKeys, key, nullSafeKeys)
+    val changelog   = Changelog.captureOld(internal, changedKeys, key)
 
     // Deleted-rows circuit breaker (download.py:326-330): if the source
     // lost too many keys, treat it as a source fault and skip deletes.
@@ -119,9 +109,9 @@ object Pipeline {
     val skipDeletes  = deleteCount >= maxDeletes
     val afterDeletes =
       if (skipDeletes) internal
-      else Diff.antiJoinDeleted(internal, deletedKeys, key, nullSafeKeys)
+      else Diff.antiJoinDeleted(internal, deletedKeys, key)
 
-    val newSnapshot = Diff.upsertReplace(afterDeletes, fetched, key, nullSafeKeys)
+    val newSnapshot = Diff.upsertReplace(afterDeletes, fetched, key)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val newState = state match {
       case Some(st) =>
@@ -130,8 +120,8 @@ object Pipeline {
         // (the reference updates `{t}_hashes` from downloaded rows,
         // download.py:577-583 — never from the post-derive replica)
         val afterDelState =
-          if (skipDeletes) st else Diff.antiJoinDeleted(st, deletedKeys, key, nullSafeKeys)
-        Diff.upsertReplace(afterDelState, Diff.sigTable(rawFetch, key, dataCols), key, nullSafeKeys)
+          if (skipDeletes) st else Diff.antiJoinDeleted(st, deletedKeys, key)
+        Diff.upsertReplace(afterDelState, Diff.sigTable(rawFetch, key, dataCols), key)
       case None =>
         Diff.sigTable(newSnapshot, key, dataCols)
     }

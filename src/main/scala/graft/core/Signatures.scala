@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Row-signature expressions.
@@ -14,11 +14,11 @@ import org.apache.spark.sql.functions._
   *  - a non-empty separator (``) is used so `("ab","c")` and
   *    `("a","bc")` don't collide — the reference's empty separator is a
   *    latent collision bug we do not reproduce;
-  *  - a 128-bit `md5` variant is provided for the diff pipeline (collision
-  *    probability at 100 TB key counts makes 32-bit crc unsafe for
-  *    correctness-critical classification) and because the DuckDB oracle
-  *    has `md5` but not `crc32`;
-  *  - both are Spark built-ins → whole-stage codegen, no UDFs.
+  *  - the signature is a 128-bit `md5`, not the reference's 32-bit crc:
+  *    collision probability at 100 TB key counts makes crc unsafe for
+  *    correctness-critical classification, and the DuckDB oracle has
+  *    `md5` but not `crc32`;
+  *  - it is a Spark built-in → whole-stage codegen, no UDF.
   */
 object Signatures {
   /** Bumped when Sep / NullSentinel / sig composition changes: persisted
@@ -40,22 +40,6 @@ object Signatures {
   private def concatCols(cols: Seq[Column]): Column =
     concat_ws(Sep, cols.map(c => coalesce(c.cast("string"), lit(NullSentinel))): _*)
 
-  /** 32-bit signature, cheapest form (reference mechanism: download.py:133). */
-  def crc32Sig(cols: Seq[Column]): Column = crc32(concatCols(cols).cast("binary"))
-
   /** 128-bit signature used by the CDC diff (collision-safe at scale). */
   def md5Sig(cols: Seq[Column]): Column = md5(concatCols(cols).cast("binary"))
-
-  /** 64-bit xxhash signature — fastest; for bucketing/sketching, not CDC. */
-  def xxSig(cols: Seq[Column]): Column = xxhash64(concatCols(cols))
-
-  /** Append a signature column over all columns except `exclude`
-    * (reference ships id + CRC32 pairs through the pipeline,
-    * download.py:421-429).
-    */
-  def withSignature(df: DataFrame, sigName: String = "sig",
-                    exclude: Set[String] = Set.empty): DataFrame = {
-    val cols = df.columns.filterNot(exclude.contains).map(col).toSeq
-    df.withColumn(sigName, md5Sig(cols))
-  }
 }

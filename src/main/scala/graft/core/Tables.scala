@@ -57,19 +57,4 @@ object Tables {
     AllTables.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
     loadEvents(spark, sfDir).createOrReplaceTempView("events")
   }
-
-  /** Dynamic column discovery (reference: src/table.py:66-93 builds select
-    * lists from discovered columns). Returns field names, optionally
-    * filtered to numeric stat columns (used by the schema-driven aggregate
-    * list of group_tribe_stats, reference: src/post_update.py:57-66).
-    */
-  def numericColumns(df: DataFrame, exclude: Set[String] = Set.empty): Seq[String] = {
-    import org.apache.spark.sql.types._
-    df.schema.fields.collect {
-      case f if !exclude.contains(f.name) && (f.dataType match {
-        case _: NumericType => true
-        case _              => false
-      }) => f.name
-    }.toSeq
-  }
 }

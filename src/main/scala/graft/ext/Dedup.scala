@@ -51,16 +51,6 @@ object Dedup {
       array_min(transform(shinglesCol, s => md5(concat(lit(s"$i|"), s))))
     }: _*)
 
-  /** LSH band keys: the k minhashes split into `bands` groups of
-    * k/bands rows, each group hashed to one bucket key.
-    */
-  def bandKeys(mhCol: Column, k: Int, bands: Int): Seq[Column] = {
-    val rows = k / bands
-    (0 until bands).map { b =>
-      md5(concat_ws("|", slice(mhCol, b * rows + 1, rows))).as(s"band_$b")
-    }
-  }
-
   /** Per-doc MinHash+LSH signature table: (id, band_0..band_{b-1}).
     *
     * Three implementations were measured; this uses the third:

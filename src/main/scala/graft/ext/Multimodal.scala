@@ -44,13 +44,6 @@ object Multimodal {
   final case class FrameFeatures(media_id: Long, frame_idx: Int, decode_ok: Boolean,
                                  width: Int, height: Int, ahash: Long)
 
-  /** Simulate an opaque media payload column from the documents fixture
-    * (text bytes as stand-in blob) + typed metadata.
-    */
-  def asMedia(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol).cast("long").as("media_id"),
-      col(textCol).cast("binary").as("payload"))
-
   /** Batched per-partition decode with REAL codecs behind a magic-byte
     * dispatch: PNG/JPEG/BMP/GIF payloads run the ImageIO pixel path,
     * RIFF/WAVE the direct PCM parser, RIFF/AVI the MJPEG demux (first

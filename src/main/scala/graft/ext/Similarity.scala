@@ -22,8 +22,6 @@ import graft.functions.vectors
 object Similarity {
   def dot(a: Column, b: Column): Column = vectors.float_dot(a, b)
 
-  def l2norm(a: Column): Column = vectors.float_norm(a)
-
   def cosine(a: Column, b: Column): Column = vectors.float_cosine(a, b)
 
   /** Exact top-k by cosine for each query vector. `queries` must be small
@@ -86,12 +84,6 @@ object Similarity {
       .agg(round(sum(coalesce(col("__hit"), lit(0))) / count(lit(1)), 6)
         .as(s"recall_at_$k"))
   }
-
-  /** Random-hyperplane LSH bucket (int; bit per plane), computed map-side
-    * in one codegen'd pass over the vector.
-    */
-  def hyperplaneBucket(vec: Column, planes: Int): Column =
-    vectors.hyperplane_bucket(vec, planes)
 
   /** Deterministic AXIS-SIGN plane family for the LSH oracle twin: band
     * `band`, bit `p` is the sign of dimension `band*planes + p` — the

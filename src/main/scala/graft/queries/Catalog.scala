@@ -1949,11 +1949,11 @@ object Catalog {
         val dataCols = Fixture.dataCols(e)
         // v1: cold ingest of the internal fixture via the same warm
         // algebra (empty replica -> all rows classify new)
-        val r1 = Pipeline.warm(i.limit(0), i, K, dataCols, nullSafeKeys = false)
+        val r1 = Pipeline.warm(i.limit(0), i, K, dataCols)
         Pipeline.commitVersionedAt(r1, root, 1L)
         r1.release()
         // v2: the warm incremental run lands the external state
-        val r2 = Pipeline.warm(i, e, K, dataCols, nullSafeKeys = false)
+        val r2 = Pipeline.warm(i, e, K, dataCols)
         Pipeline.commitVersionedAt(r2, root, 2L)
         r2.release()
         // read AS OF v1 while the pointer names v2
@@ -1981,11 +1981,11 @@ object Catalog {
         val i = Fixture.internal(s, d)
         val e = Fixture.external(s, d)
         val dataCols = Fixture.dataCols(e)
-        val r1 = Pipeline.warm(i.limit(0), i, K, dataCols, nullSafeKeys = false)
+        val r1 = Pipeline.warm(i.limit(0), i, K, dataCols)
         Pipeline.commitVersionedAt(r1, root, 1L); r1.release()
-        val r2 = Pipeline.warm(i, e, K, dataCols, nullSafeKeys = false)
+        val r2 = Pipeline.warm(i, e, K, dataCols)
         Pipeline.commitVersionedAt(r2, root, 2L); r2.release()
-        val r3 = Pipeline.warm(e, i, K, dataCols, nullSafeKeys = false)
+        val r3 = Pipeline.warm(e, i, K, dataCols)
         Pipeline.commitVersionedAt(r3, root, 3L); r3.release()
         Pipeline.compactChangelog(s, root, K)
         val vDirs = Option(new java.io.File(s"$root/changelog").listFiles())

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.SubstringDedup
 
@@ -168,23 +168,4 @@ object StreamSubstringGate {
     */
   def compactIndex(spark: SparkSession, stateDir: String, uptoExclusive: Long): Unit =
     IngestState.compactIndex(spark, s"$stateDir/index", uptoExclusive)
-
-  /** Wire [[processBatch]] to a file-source stream and drain it
-    * synchronously (tests / bounded backfills; production swaps the
-    * source for Kafka/Delta — the per-batch plan is unchanged).
-    */
-  def runIngestGate(spark: SparkSession, inputDir: String, checkpointDir: String,
-                    stateDir: String, p: Params = Params()): Unit = {
-    val schema = spark.read.parquet(inputDir).schema
-    val q = spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(batch.toDF(), stateDir, batchId + 1, p)
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
 }

@@ -76,6 +76,22 @@ object StreamingCdc {
     spark.read.parquet(outputDir)
   }
 
+  /** Intra-batch dedup per key for the apply paths: deterministic
+    * last-write-wins when the source carries an ordering column
+    * (sequence/ts); without one, a file stream has no per-row arrival
+    * order — arbitrary-but-deterministic-per-retry via dropDuplicates.
+    */
+  private def lastWritePerKey(batch: DataFrame, keyCol: String,
+                              orderCol: Option[String]): DataFrame =
+    orderCol match {
+      case Some(oc) =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(keyCol).orderBy(col(oc).desc)
+        batch.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
+      case None => batch.dropDuplicates(keyCol)
+    }
+
   /** The APPLY side of streaming CDC: continuously maintain the durable
     * snapshot from a stream of row updates — the full "replica stays
     * current" contract of the reference (start.py run loop) in streaming
@@ -94,18 +110,7 @@ object StreamingCdc {
     val q = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // intra-batch dedup per key: deterministic last-write-wins when
-        // the source carries an ordering column (sequence/ts); without
-        // one, a file stream has no per-row arrival order — arbitrary-
-        // but-deterministic-per-retry via dropDuplicates
-        val updates = orderCol match {
-          case Some(oc) =>
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(keyCol).orderBy(col(oc).desc)
-            batch.withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-              .filter(col("__rn") === 1).drop("__rn")
-          case None => batch.dropDuplicates(keyCol)
-        }
+        val updates = lastWritePerKey(batch, keyCol, orderCol)
         val current = Pipeline.currentVersion(snapshotDir) match {
           case Some(_) => Pipeline.readLatest(spark, snapshotDir, "snapshot")
           case None    => updates.limit(0)
@@ -162,15 +167,8 @@ object StreamingCdc {
     val q = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val deduped = orderCol match {
-          case Some(oc) =>
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(keyCol).orderBy(col(oc).desc)
-            batch.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") === 1).drop("__rn")
-          case None => batch.dropDuplicates(keyCol)
-        }
-        val ub = deduped.withColumn(BS.BucketCol, BS.bucketOf(keyCol, nBuckets))
+        val ub = lastWritePerKey(batch, keyCol, orderCol)
+          .withColumn(BS.BucketCol, BS.bucketOf(keyCol, nBuckets))
           .persist()
         try {
           val touched = ub.select(BS.BucketCol).distinct()

@@ -67,38 +67,20 @@ class DiffSpec extends AnyFunSuite {
       .filter(col("kind") === "changed")
     val old = Changelog.captureOld(internal, changed, key).collect()
     assert(old.length == 1 && old.head.isNullAt(0) && old.head.getString(1) == "n")
-  }
-
-  test("nullSafe=false fails fast on a null key instead of silently mis-classifying") {
-    val internal = Seq((Some(1), "a", 1.0), (None, "n", 5.0)).toDF("id", "v", "w")
-    val external = Seq((Some(1), "a", 1.0), (None, "n", 5.0)).toDF("id", "v", "w")
-    val ex = intercept[Exception] {
-      Diff.classify(internal, external, key, cols, nullSafe = false).collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(ex).exists(_.contains("null value in key 'id'")))
-  }
-
-  test("nullSafe=false guard covers every join operator, both sides") {
-    // the guard lives in nsCond (left keys) + rightKeys (right keys), so
-    // upsertReplace/semiJoinChanged/antiJoinDeleted can't silently
-    // mis-join a null key either (a null-key old row would otherwise
-    // survive an upsert AND its replacement would append — duplicates)
-    val withNull = Seq((Some(1), "a", 1.0), (None, "n", 5.0)).toDF("id", "v", "w")
-    val clean    = Seq((Some(2), "b", 2.0)).toDF("id", "v", "w")
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
-    for (q <- Seq(
-        () => Diff.upsertReplace(withNull, clean, key, nullSafe = false),  // left
-        () => Diff.upsertReplace(clean, withNull, key, nullSafe = false),  // right
-        () => Diff.semiJoinChanged(withNull, clean, key, nullSafe = false),
-        () => Diff.antiJoinDeleted(withNull, clean, key, nullSafe = false),
-        () => Diff.antiJoinDeleted(clean, withNull, key, nullSafe = false))) {
-      val ex = intercept[Exception](q().collect())
-      assert(messages(ex).exists(_.contains("null value in key 'id'")),
-        s"expected fail-fast, got: ${messages(ex).take(2).mkString(" | ")}")
-    }
+    // the warm pipeline against a signature state: the changed null-key
+    // row is classified, logged, replaced and re-signed like any other
+    val r = Pipeline.warm(internal, external, key, cols,
+      state = Some(Diff.sigTable(internal, key, cols)))
+    try {
+      val warmKinds = r.kinds.collect()
+        .map(r2 => (if (r2.isNullAt(0)) -99 else r2.getInt(0)) -> r2.getString(1)).toMap
+      assert(warmKinds == Map(1 -> "unchanged", -99 -> "changed"))
+      val logged = r.changelog.collect()
+      assert(logged.length == 1 && logged.head.isNullAt(0) && logged.head.getString(1) == "n")
+      assert(r.newSnapshot.exceptAll(external).isEmpty && external.exceptAll(r.newSnapshot).isEmpty)
+      val wantState = Diff.sigTable(external, key, cols)
+      assert(r.newState.exceptAll(wantState).isEmpty && wantState.exceptAll(r.newState).isEmpty)
+    } finally r.release()
   }
 
   test("upsertReplace: new version wins, unmatched rows survive") {

@@ -62,8 +62,7 @@ class LayoutSpec extends AnyFunSuite {
     val e = Fixture.external(spark, TestSpark.Sf)
     val i = Fixture.internal(spark, TestSpark.Sf)
     val r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols)
-    val v = Pipeline.commitVersioned(r, dir,
-      Pipeline.SnapshotLayout.Sorted(Seq("l_orderkey"), numFiles = Some(4)))
+    val v = Pipeline.commitVersioned(r, dir, Pipeline.SnapshotLayout.Zordered(Seq("l_orderkey")))
     val snap = Pipeline.readLatest(spark, dir, "snapshot")
     assert(snap.count() == r.newSnapshot.count())
     // files carry disjoint key ranges → a key-range scan prunes files
