@@ -373,39 +373,55 @@ object Dedup {
                                broadcastDelta: Boolean = false): DataFrame = {
     // deltaIndex short-circuits the sketch when the caller has already
     // materialized the batch's index (StreamNearDup persists it anyway) —
-    // the dc/dd self-join below references the delta index three times,
-    // so a materialized input evaluates the sketch once, not thrice.
+    // the dc/dd self-join references the delta index three times, so a
+    // materialized input evaluates the sketch once, not thrice.
     // broadcastDelta: when the delta is micro-batch-sized (the streaming
     // ingest gate — trigger-bounded by construction), broadcasting it
     // makes the delta×corpus probe a broadcast hash join, so the corpus
     // index side is scanned but NEVER shuffled, whatever its size.
-    val deltaIdx0 = deltaIndex.getOrElse(lshIndex(delta, idCol, textCol, shingleN, k, bands))
-    val deltaIdx = if (broadcastDelta) broadcast(deltaIdx0) else deltaIdx0
+    val deltaIdx = deltaIndex.getOrElse(lshIndex(delta, idCol, textCol, shingleN, k, bands))
+    probePairs(corpusIndex, corpusDocs, delta,
+      if (broadcastDelta) broadcast(deltaIdx) else deltaIdx, Seq("bucket"),
+      idCol, textCol, "__t", "jaccard", wordJaccard, threshold)
+  }
+
+  /** The incremental candidate probe both [[incrementalVerifiedPairs]]
+    * and [[incrementalEmbeddingPairs]] run: candidates are delta×index
+    * plus delta×delta joins on the collision columns `keys`; the
+    * payloads (`payCol`, aliased `<alias>a`/`<alias>b`) are fetched by
+    * id for candidates only and `score`d, and pairs scoring below
+    * `threshold` are dropped. Output: (id_a, id_b, `scoreName`) with
+    * id_a < id_b.
+    */
+  private def probePairs(corpusIndex: DataFrame, corpusPayload: DataFrame,
+                         delta: DataFrame, deltaIdx: DataFrame, keys: Seq[String],
+                         idCol: String, payCol: String, alias: String, scoreName: String,
+                         score: (Column, Column) => Column, threshold: Double): DataFrame = {
+    def on(l: String, r: String) = keys.map(k => col(s"$l.$k") === col(s"$r.$k")).reduce(_ && _)
     val d = deltaIdx.as("d")
-    val dc = d.join(corpusIndex.as("ci"), col("d.bucket") === col("ci.bucket"))
+    val dc = d.join(corpusIndex.as("ci"), on("d", "ci"))
       .select(least(col("d.id"), col("ci.id")).as("id_a"),
         greatest(col("d.id"), col("ci.id")).as("id_b"))
-    val dd = d.join(deltaIdx.as("e"),
-        col("d.bucket") === col("e.bucket") && col("d.id") < col("e.id"))
+    val dd = d.join(deltaIdx.as("e"), on("d", "e") && col("d.id") < col("e.id"))
       .select(col("d.id").as("id_a"), col("e.id").as("id_b"))
     // self-pairs appear only when corpus and delta overlap — i.e. a
-    // replayed ingest batch whose docs were already absorbed into the
+    // replayed ingest batch whose rows were already absorbed into the
     // index. Dropping them (plus the distinct) makes such a replay
     // reproduce exactly the original pairs: idempotent by construction.
     val cands = dc.filter(col("id_a") =!= col("id_b")).unionByName(dd).distinct()
-    // corpus ids already in the delta are excluded from the text side
-    // (replay overlap would otherwise double every text-join row) via a
+    // corpus ids already in the delta are excluded from the payload side
+    // (replay overlap would otherwise double every fetch-join row) via a
     // broadcastable anti join — a no-op under the disjoint-id contract,
     // and never a corpus-wide shuffle
-    val texts = corpusDocs.select(col(idCol), col(textCol))
+    val payloads = corpusPayload.select(col(idCol), col(payCol))
       .join(delta.select(col(idCol)), Seq(idCol), "left_anti")
-      .unionByName(delta.select(col(idCol), col(textCol)))
-    val a = texts.select(col(idCol).as("id_a"), col(textCol).as("__ta"))
-    val b = texts.select(col(idCol).as("id_b"), col(textCol).as("__tb"))
+      .unionByName(delta.select(col(idCol), col(payCol)))
+    val a = payloads.select(col(idCol).as("id_a"), col(payCol).as(s"${alias}a"))
+    val b = payloads.select(col(idCol).as("id_b"), col(payCol).as(s"${alias}b"))
     cands.join(a, "id_a").join(b, "id_b")
       .select(col("id_a"), col("id_b"),
-        wordJaccard(col("__ta"), col("__tb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+        score(col(s"${alias}a"), col(s"${alias}b")).as(scoreName))
+      .filter(col(scoreName) >= threshold)
   }
 
   /** Jaccard-verified LSH candidate pairs: the production near-dup edge
@@ -569,8 +585,11 @@ object Dedup {
     * DELTA of newly-ingested vectors, probing a pre-built corpus
     * [[embeddingIndex]] — the ANN analog of [[incrementalVerifiedPairs]],
     * with (band, bucket) as the collision key and exact cosine as the
-    * verifier. Only the delta is sketched; candidates are delta×index
-    * plus delta×delta band-bucket joins; vectors are fetched by id for
+    * verifier. `deltaIndex` is the delta sketched by the caller in the
+    * corpus index's geometry (hyperplane or axis-cell) and is broadcast:
+    * the delta is a trigger-bounded micro-batch, so the corpus index is
+    * scanned but never shuffled. Candidates are delta×index plus
+    * delta×delta band-bucket joins; vectors are fetched by id for
     * candidates only. Per-ingest cost ∝ delta size + bucket collisions —
     * independent of corpus size except the keyed vector-fetch join.
     * Contract: corpus and delta id sets are disjoint; replay overlap is
@@ -578,34 +597,15 @@ object Dedup {
     * Output: (id_a, id_b, cosine) with id_a < id_b, cosine >= threshold.
     */
   def incrementalEmbeddingPairs(corpusIndex: DataFrame, corpusVecs: DataFrame,
-                                delta: DataFrame, idCol: String, vecCol: String,
-                                threshold: Double, planes: Int = 18, bands: Int = 8,
-                                deltaIndex: Option[DataFrame] = None,
-                                broadcastDelta: Boolean = false): DataFrame = {
+                                delta: DataFrame, deltaIndex: DataFrame,
+                                idCol: String, vecCol: String,
+                                threshold: Double): DataFrame = {
     import graft.functions.vectors
-    val deltaIdx0 = deltaIndex.getOrElse(embeddingIndex(delta, idCol, vecCol, planes, bands))
-    val deltaIdx = if (broadcastDelta) broadcast(deltaIdx0) else deltaIdx0
-    val d = deltaIdx.as("d")
-    val dc = d.join(corpusIndex.as("ci"),
-        col("d.band") === col("ci.band") && col("d.bucket") === col("ci.bucket"))
-      .select(least(col("d.id"), col("ci.id")).as("id_a"),
-        greatest(col("d.id"), col("ci.id")).as("id_b"))
-    val dd = d.join(deltaIdx.as("e"),
-        col("d.band") === col("e.band") && col("d.bucket") === col("e.bucket") &&
-          col("d.id") < col("e.id"))
-      .select(col("d.id").as("id_a"), col("e.id").as("id_b"))
-    val cands = dc.filter(col("id_a") =!= col("id_b")).unionByName(dd).distinct()
-    val vecs = corpusVecs.select(col(idCol), col(vecCol))
-      .join(delta.select(col(idCol)), Seq(idCol), "left_anti")
-      .unionByName(delta.select(col(idCol), col(vecCol)))
-    val a = vecs.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
-    val b = vecs.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
-    cands.join(a, "id_a").join(b, "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(vectors.float_dot(col("__va"), col("__vb")) /
-          (vectors.float_norm(col("__va")) * vectors.float_norm(col("__vb"))), 6)
-          .as("cosine"))
-      .filter(col("cosine") >= threshold)
+    probePairs(corpusIndex, corpusVecs, delta, broadcast(deltaIndex), Seq("band", "bucket"),
+      idCol, vecCol, "__v", "cosine",
+      (va, vb) => round(vectors.float_dot(va, vb) /
+        (vectors.float_norm(va) * vectors.float_norm(vb)), 6),
+      threshold)
   }
 
   /** Embedding near-dup: pairs with cosine above `threshold`, via BANDED

@@ -2076,8 +2076,7 @@ object Catalog {
         graft.stream.StreamNearDup.processBatch(all.filter(col("doc_id") % 3 === 1), st, 1L, p)
         graft.stream.StreamNearDup.processBatch(all.filter(col("doc_id") % 3 === 2), st, 2L, p)
         graft.stream.StreamNearDup.pairs(s, st)
-          .select(col("id_a"), col("id_b"), col("jaccard"),
-            col("ingest_version").cast("long").as("ingest_version"))
+          .select(col("id_a"), col("id_b"), col("jaccard"), col("ingest_version"))
           .orderBy("id_a", "id_b")
       },
       Some(Oracles.ingestGateOracle)),
@@ -2109,8 +2108,7 @@ object Catalog {
         graft.stream.StreamSubstringGate.processBatch(
           all.filter(col("doc_id") % 3 === 2), st, 2L, p)
         graft.stream.StreamSubstringGate.pairs(s, st)
-          .select(col("id_a"), col("id_b"), col("n_shared"),
-            col("ingest_version").cast("long").as("ingest_version"))
+          .select(col("id_a"), col("id_b"), col("n_shared"), col("ingest_version"))
           .orderBy("id_a", "id_b")
       },
       Some(Oracles.substringGateOracle(l = 40, w = 8, minShared = 2))),
@@ -2140,8 +2138,7 @@ object Catalog {
         graft.stream.StreamSubstringGate.processBatch(
           all.filter(col("doc_id") % 3 === 2), st, 2L, p)
         graft.stream.StreamSubstringGate.pairs(s, st)
-          .select(col("id_a"), col("id_b"), col("n_shared"),
-            col("ingest_version").cast("long").as("ingest_version"))
+          .select(col("id_a"), col("id_b"), col("n_shared"), col("ingest_version"))
           .orderBy("id_a", "id_b")
       },
       None), // xxhash64 fingerprints — not expressible in DuckDB; the
@@ -2742,8 +2739,7 @@ object Catalog {
         graft.stream.StreamVecDup.processBatch(all.filter(col("vec_id") % 3 === 1), st, 1L, p)
         graft.stream.StreamVecDup.processBatch(all.filter(col("vec_id") % 3 === 2), st, 2L, p)
         graft.stream.StreamVecDup.pairs(s, st)
-          .select(col("id_a"), col("id_b"), col("cosine"),
-            col("ingest_version").cast("long").as("ingest_version"))
+          .select(col("id_a"), col("id_b"), col("cosine"), col("ingest_version"))
           .orderBy("id_a", "id_b")
       },
       None), // xxhash64 hyperplanes — not expressible in DuckDB
@@ -2769,8 +2765,7 @@ object Catalog {
         graft.stream.StreamVecDup.processBatch(all.filter(col("vec_id") % 3 === 1), st, 1L, p)
         graft.stream.StreamVecDup.processBatch(all.filter(col("vec_id") % 3 === 2), st, 2L, p)
         graft.stream.StreamVecDup.pairs(s, st)
-          .select(col("id_a"), col("id_b"),
-            col("ingest_version").cast("long").as("ingest_version"))
+          .select(col("id_a"), col("id_b"), col("ingest_version"))
           .orderBy("id_a", "id_b")
       },
       Some(Oracles.vecIngestGateMd5Oracle(threshold = 0.9,

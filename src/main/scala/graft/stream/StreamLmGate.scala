@@ -25,11 +25,11 @@ import graft.ext.TextLm
   * (shuffle_hash: the batch side explodes to bigrams, the LM side is
   * bounded). Scoring cost per batch ∝ batch tokens. The per-batch
   * partition overwrite makes replays idempotent — a crash-redelivered
-  * batch rewrites exactly its own `scores/batch=N` partition (the
-  * [[StreamNearDup]] exactly-once discipline). The LM being static is
-  * CCNet-faithful: quality reference corpora are curated, not
-  * self-reinforcing — admitting scored docs into the model would drift
-  * the filter toward whatever passes it.
+  * batch rewrites exactly its own `scores/batch=N` partition through the
+  * dedup gates' versioned write ([[IngestState.writeVersion]]). The LM
+  * being static is CCNet-faithful: quality reference corpora are
+  * curated, not self-reinforcing — admitting scored docs into the model
+  * would drift the filter toward whatever passes it.
   */
 object StreamLmGate {
   final case class Params(idCol: String = "doc_id", textCol: String = "text",
@@ -61,20 +61,17 @@ object StreamLmGate {
       spark.read.parquet(s"$stateDir/lm/meta").head().getLong(0))
 
   /** Score one micro-batch against the persisted LM and record the
-    * admission decision under `scores/batch=version` (partition
-    * overwrite ⇒ replay-idempotent).
+    * admission decision under `scores/batch=version` (the gates'
+    * versioned overwrite ⇒ replay-idempotent).
     */
   def processBatch(batch: DataFrame, stateDir: String, version: Long,
                    p: Params = Params()): Unit = {
     val spark = batch.sparkSession
     val lm = loadLm(spark, stateDir)
-    TextLm.scoreWith(lm, batch, p.idCol, p.textCol)
+    IngestState.writeVersion(TextLm.scoreWith(lm, batch, p.idCol, p.textCol)
       .withColumn("admitted",
-        (col("avg_nll") <= lit(p.maxAvgNllFrac * math.log(lm.v.toDouble))).cast("int"))
-      .withColumn("batch", lit(version))
-      .write.partitionBy("batch").mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$stateDir/scores")
+        (col("avg_nll") <= lit(p.maxAvgNllFrac * math.log(lm.v.toDouble))).cast("int")),
+      s"$stateDir/scores", version)
   }
 
   /** All admission decisions so far: (id, n_bigrams, avg_nll, admitted,

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 
@@ -8,19 +8,12 @@ import graft.ext.Dedup
   * documents is checked against the committed corpus — WITHOUT ever
   * re-sketching the corpus — then absorbed into it.
   *
-  * State layout under `stateDir` (all partitioned by ingest version, so a
-  * replayed batch overwrites exactly its own contribution):
-  * {{{
-  *   docs/batch=N/           raw (id, text) of every absorbed batch
-  *   index/batch=N/pb=X/     the batch's LSH band rows (Dedup.lshIndex),
-  *                           sub-partitioned by bucket prefix
-  *                           pb = xxhash64(bucket) mod indexPrefixes
-  *   pairs/batch=N/          verified near-dup pairs the batch introduced
-  * }}}
-  *
-  * Per batch: the batch is sketched ONCE (native MinHashSig, map-side)
-  * straight into its index partition; the persisted rows are read back to
-  * probe the accumulated index by bucket and Jaccard-verify candidates
+  * One of the three [[IngestState.Gate]]s, so its state layout, replay
+  * safety and write order are the shared protocol's. What is its own:
+  * the payload is `docs/` (id, text); the batch is sketched ONCE
+  * (native MinHashSig, map-side) into LSH band rows ([[Dedup.lshIndex]],
+  * pb = xxhash64(bucket) mod indexPrefixes); and verify probes the
+  * accumulated index by bucket and Jaccard-verifies candidates
   * ([[Dedup.incrementalVerifiedPairs]]).
   *
   * The probe never scans or shuffles the full accumulated index. The
@@ -35,17 +28,6 @@ import graft.ext.Dedup
   * (StreamNearDupSpec pins the delta-bounded probe via task input
   * metrics, the same witness ContinuousApplyBucketedSpec uses for CDC
   * state).
-  *
-  * Exactly-once: the corpus snapshot reads state with a
-  * `batch < version` partition filter, so a replayed batch's own prior
-  * partitions are pruned out of every plan before the partition
-  * Overwrite rewrites them — a crash-replayed batch rewrites identical
-  * state whatever write the crash interrupted, and the streaming
-  * checkpoint re-delivers any batch whose processing did not finish
-  * (StreamNearDupSpec). [[seedCorpus]] sits outside the checkpoint, so a
-  * crashed seed must simply be re-run (it overwrites its own version-0
-  * partitions; docs land before index so a half-seed can never produce
-  * index ids whose text is missing).
   *
   * Reference analog: none — the reference replicates rows; this is the
   * §7.5 training-pipeline extension running at ingest instead of as a
@@ -64,117 +46,53 @@ object StreamNearDup {
                           // production at 100 TB wants O(10^4).
                           indexPrefixes: Int = 256)
 
-  // state layout + replay-safe reads shared with the vector gate
-  private def pbCols = Seq(col("bucket"))
-
-  private def writeIndex(idx: DataFrame, dir: String, p: Params): Unit =
-    IngestState.writeIndex(idx, dir, p.indexPrefixes, pbCols)
-
-  private def readOrEmpty(spark: SparkSession, dir: String, template: DataFrame,
-                          maxBatchExclusive: Long): DataFrame =
-    IngestState.readOrEmpty(spark, dir, template, maxBatchExclusive)
+  private object gate extends IngestState.Gate[Params] {
+    protected val geometry = Seq(
+      int("shingleN", _.shingleN, (p, v) => p.copy(shingleN = v)),
+      int("k", _.k, (p, v) => p.copy(k = v)),
+      int("bands", _.bands, (p, v) => p.copy(bands = v)),
+      int("indexPrefixes", _.indexPrefixes, (p, v) => p.copy(indexPrefixes = v)))
+    protected def indexPrefixes(p: Params): Int = p.indexPrefixes
+    protected val pbCols = Seq(col("bucket"))
+    protected def payload(p: Params) = Some("docs" -> Seq(col(p.idCol), col(p.textCol)))
+    protected def sketch(docs: DataFrame, p: Params): DataFrame =
+      Dedup.lshIndex(docs, p.idCol, p.textCol, p.shingleN, p.k, p.bands)
+    protected def verify(probe: IngestState.Probe, p: Params): DataFrame =
+      Dedup.incrementalVerifiedPairs(probe.corpusIdx, probe.corpus.get, probe.batch,
+        p.idCol, p.textCol, p.threshold, p.shingleN, p.k, p.bands,
+        deltaIndex = Some(probe.deltaIdx), broadcastDelta = true)
+  }
 
   /** Seed the state with an existing corpus as ingest version 0. Not
     * covered by a streaming checkpoint — re-run on failure (idempotent).
     */
-  def seedCorpus(docs: DataFrame, stateDir: String, p: Params = Params()): Unit = {
-    docs.select(col(p.idCol), col(p.textCol))
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/docs/batch=0")
-    writeIndex(Dedup.lshIndex(docs, p.idCol, p.textCol, p.shingleN, p.k, p.bands),
-      s"$stateDir/index/batch=0", p)
-    // geometry is a property of the state dir — later batches adopt it
-    // (see IngestState.writeParams)
-    IngestState.writeParams(docs.sparkSession, stateDir, Seq(
-      "shingleN" -> p.shingleN.toLong, "k" -> p.k.toLong,
-      "bands" -> p.bands.toLong, "indexPrefixes" -> p.indexPrefixes.toLong))
-  }
+  def seedCorpus(docs: DataFrame, stateDir: String, p: Params = Params()): Unit =
+    gate.seed(docs, stateDir, p)
 
   /** Process one ingest batch at `version` (streaming uses batchId+1;
     * version 0 is the seed): emit its near-dup pairs and absorb it.
     * Idempotent under replay of the same (batch, version). The sketch
     * geometry (shingleN/k/bands/indexPrefixes) is ADOPTED from the state
     * dir's seed-time manifest when present — only idCol/textCol/threshold
-    * are taken from the caller's `p`.
+    * are taken from the caller's `p0`.
     */
   def processBatch(batch: DataFrame, stateDir: String, version: Long,
-                   p0: Params = Params()): Unit = {
-    val spark = batch.sparkSession
-    val seeded = IngestState.readParams(spark, stateDir)
-    val p = p0.copy(
-      shingleN = seeded.getOrElse("shingleN", p0.shingleN.toLong).toInt,
-      k = seeded.getOrElse("k", p0.k.toLong).toInt,
-      bands = seeded.getOrElse("bands", p0.bands.toLong).toInt,
-      indexPrefixes = seeded.getOrElse("indexPrefixes", p0.indexPrefixes.toLong).toInt)
-    // the accumulated corpus is everything absorbed at versions BELOW this
-    // one: the `batch < version` partition filter keeps a replay's prior
-    // `batch=version` files out of the plan entirely (directory-level
-    // pruning), so the Overwrite below can never invalidate the lazily
-    // executed probe join. With the overlap excluded here, the disjoint
-    // corpus/delta id contract of incrementalVerifiedPairs is a plain
-    // invariant, replay or not.
-    val corpusDocs = readOrEmpty(spark, s"$stateDir/docs",
-        batch.select(col(p.idCol), col(p.textCol)), version)
-      .select(col(p.idCol), col(p.textCol))
-    // sketch the batch exactly once, straight into ONE flat delta file
-    // (pb as a data column — the partitioned layout is for the big
-    // seed/compacted side only; see IngestState.writeIndexFlat), and
-    // probe with the materialized rows read back
-    IngestState.writeIndexFlat(
-      Dedup.lshIndex(batch, p.idCol, p.textCol, p.shingleN, p.k, p.bands),
-      s"$stateDir/index/batch=$version", p.indexPrefixes, pbCols)
-    val deltaIdx = spark.read.parquet(s"$stateDir/index/batch=$version")
-    // the delta's bucket-prefix footprint: ≤ indexPrefixes distinct small
-    // ints (bounded by construction, NOT by data volume). It prunes the
-    // corpus-index read below — at DIRECTORY level for the partitioned
-    // seed/compacted dirs, by row filter for the (small) flat deltas.
-    val deltaPbs = deltaIdx.select("pb").distinct().collect().map(_.getInt(0)).toSeq
-    val idxTemplate = IngestState.withPb(
-      Dedup.lshIndex(batch.limit(0), p.idCol, p.textCol, p.shingleN, p.k, p.bands),
-      p.indexPrefixes, pbCols)
-    val corpusIdx = IngestState.readIndexPruned(spark, s"$stateDir/index",
-        idxTemplate, version, deltaPbs)
-      .select(col("id"), col("bucket"))
-    Dedup.incrementalVerifiedPairs(corpusIdx, corpusDocs, batch,
-        p.idCol, p.textCol, p.threshold, p.shingleN, p.k, p.bands,
-        deltaIndex = Some(deltaIdx.select(col("id"), col("bucket"))),
-        broadcastDelta = true)
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/pairs/batch=$version")
-    batch.select(col(p.idCol), col(p.textCol))
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/docs/batch=$version")
-  }
+                   p0: Params = Params()): Unit =
+    gate.processBatch(batch, stateDir, version, p0)
 
-  /** All near-dup pairs detected so far (batch partition column exposed
-    * as `ingest_version`).
+  /** All near-dup pairs detected so far (`ingest_version`: the detecting
+    * batch, a long).
     */
-  def pairs(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/pairs")
-      .withColumnRenamed("batch", "ingest_version")
+  def pairs(spark: SparkSession, stateDir: String): DataFrame = gate.pairs(spark, stateDir)
 
-  /** Fold the flat delta indexes of every batch below `uptoExclusive`
-    * into the pb-partitioned seed layout. Run on a maintenance cadence;
-    * `uptoExclusive` must not exceed the stream checkpoint's last
-    * COMMITTED version (see [[IngestState.compactIndex]] for the replay
-    * argument).
+  /** Fold flat delta indexes below `uptoExclusive` into the seed layout
+    * (the contract on `uptoExclusive`: [[IngestState.compactIndex]]).
     */
   def compactIndex(spark: SparkSession, stateDir: String, uptoExclusive: Long): Unit =
-    IngestState.compactIndex(spark, s"$stateDir/index", uptoExclusive)
+    gate.compactIndex(spark, stateDir, uptoExclusive)
 
-  /** Wire [[processBatch]] to a file-source stream and drain it
-    * synchronously (tests / bounded backfills; production swaps the
-    * source for Kafka/Delta — the per-batch plan is unchanged).
-    */
+  /** Drain a file-source stream through [[processBatch]]. */
   def runIngestDedup(spark: SparkSession, inputDir: String, checkpointDir: String,
-                     stateDir: String, p: Params = Params()): Unit = {
-    val schema = spark.read.parquet(inputDir).schema
-    val q = spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(batch.toDF(), stateDir, batchId + 1, p)
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                     stateDir: String, p: Params = Params()): Unit =
+    gate.runIngestDedup(spark, inputDir, checkpointDir, stateDir, p)
 }

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.SubstringDedup
 
@@ -17,13 +17,8 @@ import graft.ext.SubstringDedup
   * no docs/ state: a shared fingerprint count IS the decision (each
   * fingerprint witnesses a verbatim ≥ L-byte run; `minShared` of them is
   * the MOSS evidence threshold), so the state is just the fingerprint
-  * index — rows of (id, h) under the [[IngestState]] layout:
-  * {{{
-  *   index/batch=N/pb=X/   seed (+compacted) winnowed fingerprints,
-  *                         pb = xxhash64(h) mod indexPrefixes
-  *   index/batch=N/        flat per-trigger deltas (pb as data column)
-  *   pairs/batch=N/        substring-overlap pairs the batch introduced
-  * }}}
+  * index: rows of (id, h), pb = xxhash64(h) mod indexPrefixes, in the
+  * shared [[IngestState]] layout.
   *
   * Per batch: the delta is fingerprinted ONCE (map-side kernel) into its
   * flat index partition; the rows are read back, their distinct
@@ -37,8 +32,8 @@ import graft.ext.SubstringDedup
   * pair join bounds per-gram fanout to maxDf — the hub set itself is
   * bounded by the delta's fingerprint count, never corpus-sized.
   * In-batch pairs go through the same capped posting-pair path as the
-  * batch variant. Exactly-once replay: `batch < version` partition
-  * pruning + per-version Overwrite, the shared [[IngestState]] contract.
+  * batch variant. Exactly-once replay is the shared [[IngestState]]
+  * protocol's.
   *
   * Two fingerprint modes, fixed at seed time in the state manifest
   * (mismatched geometry would silently probe a disjoint hash space):
@@ -54,118 +49,95 @@ object StreamSubstringGate {
                           maxDf: Int = 1000, md5Mode: Boolean = false,
                           indexPrefixes: Int = 256)
 
-  private def pbCols = Seq(col("h"))
+  private object gate extends IngestState.Gate[Params] {
+    protected val geometry = Seq(
+      int("L", _.L, (p, v) => p.copy(L = v)),
+      int("w", _.w, (p, v) => p.copy(w = v)),
+      int("minShared", _.minShared, (p, v) => p.copy(minShared = v)),
+      int("maxDf", _.maxDf, (p, v) => p.copy(maxDf = v)),
+      flag("md5Mode", _.md5Mode, (p, v) => p.copy(md5Mode = v)),
+      int("indexPrefixes", _.indexPrefixes, (p, v) => p.copy(indexPrefixes = v)))
+    protected def indexPrefixes(p: Params): Int = p.indexPrefixes
+    protected val pbCols = Seq(col("h"))
+    protected def payload(p: Params) = None
+    protected def sketch(docs: DataFrame, p: Params): DataFrame =
+      if (p.md5Mode) SubstringDedup.md5WinnowGrams(docs, p.idCol, p.textCol, p.L, p.w)
+      else SubstringDedup.xxWinnowGrams(docs, p.idCol, p.textCol, p.L, p.w)
 
-  private def grams(docs: DataFrame, p: Params): DataFrame =
-    if (p.md5Mode) SubstringDedup.md5WinnowGrams(docs, p.idCol, p.textCol, p.L, p.w)
-    else SubstringDedup.xxWinnowGrams(docs, p.idCol, p.textCol, p.L, p.w)
+    protected def verify(probe: IngestState.Probe, p: Params): DataFrame = {
+      val deltaIdx = probe.deltaIdx
+      // corpus rows matching a delta fingerprint. NO broadcast hint: a
+      // trigger-sized delta's fingerprint set is broadcast by AQE's size
+      // rule anyway, while a wave-sized backfill (the bench seeds 167k
+      // docs ≈ 17M fingerprints per wave) must shuffle — a forced
+      // broadcast there ran the executor out of BytesToBytesMap memory.
+      // Letting the planner pick per batch IS the 100 TB posture: the
+      // same code serves both regimes.
+      // PERSISTED for the batch (the IngestPipeline admMatches discipline,
+      // r14): cand feeds BOTH the hub census and the cross-pair join, and
+      // an unpersisted plan re-ran the corpus-index probe join once per
+      // consumer — at wave scale that is the two heaviest stages of the
+      // whole batch executing twice (StageProf r14: 469 + 445 task-s on
+      // near-identical join subtrees). At 100 TB the corpus index is the
+      // big side; scanning and joining it once per batch instead of twice
+      // is the difference that matters.
+      val cand = probe.persist(
+        probe.corpusIdx.join(deltaIdx.select(col("h")).distinct(), Seq("h"))
+          .select(col("id").as("c_id"), col("h")))
+      // hub cap at probe time: total df of h across corpus matches + the
+      // delta itself; everything here is bounded by the delta's gram count.
+      // hubs feeds the cross-pair anti join AND the in-batch posting path;
+      // it is delta-bounded small, so persist it too rather than re-running
+      // its two aggregations over cand per consumer.
+      val hubs = probe.persist(cand.groupBy("h").agg(count(lit(1)).as("n_c"))
+        .join(deltaIdx.groupBy("h").agg(count(lit(1)).as("n_d")), Seq("h"))
+        .filter(col("n_c") + col("n_d") > p.maxDf)
+        .select(col("h")))
+      val crossPairs = cand.join(hubs, Seq("h"), "left_anti")
+        .join(deltaIdx.select(col("id").as("d_id"), col("h")), Seq("h"))
+        .select(least(col("c_id"), col("d_id")).as("id_a"),
+          greatest(col("c_id"), col("d_id")).as("id_b"))
+        .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= p.minShared)
+      // in-batch pairs reuse the materialized delta fingerprints through
+      // the capped posting-pair path, with the probe-time hub set removed
+      // here too: a gram the CORPUS already proves to be template noise
+      // must not pair docs within the batch either (a delta-only count
+      // would miss hubs whose df is split across corpus and batch); grams
+      // hot within the batch alone are nulled by the capped aggregate
+      val innerPairs = SubstringDedup.postingPairs(
+        deltaIdx.join(hubs, Seq("h"), "left_anti"),
+        p.minShared, p.maxDf)
+      crossPairs.unionByName(innerPairs)
+    }
+  }
 
   /** Seed the state with an existing corpus as ingest version 0 (index
     * only — no pairs are emitted for the seed, mirroring the other
     * gates). Not covered by a streaming checkpoint — re-run on failure.
     */
-  def seedCorpus(docs: DataFrame, stateDir: String, p: Params = Params()): Unit = {
-    IngestState.writeIndex(grams(docs, p), s"$stateDir/index/batch=0",
-      p.indexPrefixes, pbCols)
-    IngestState.writeParams(docs.sparkSession, stateDir, Seq(
-      "L" -> p.L.toLong, "w" -> p.w.toLong, "minShared" -> p.minShared.toLong,
-      "maxDf" -> p.maxDf.toLong, "md5Mode" -> (if (p.md5Mode) 1L else 0L),
-      "indexPrefixes" -> p.indexPrefixes.toLong))
-  }
+  def seedCorpus(docs: DataFrame, stateDir: String, p: Params = Params()): Unit =
+    gate.seed(docs, stateDir, p)
 
   /** Process one ingest batch at `version` (streaming uses batchId+1):
     * emit the substring-overlap pairs it introduces — against the
     * accumulated corpus AND within the batch — and absorb its
     * fingerprints. Idempotent under replay of the same (batch, version).
     * Geometry is ADOPTED from the seed-time manifest; only idCol/textCol
-    * come from the caller's `p`.
+    * come from the caller's `p0`.
     */
   def processBatch(batch: DataFrame, stateDir: String, version: Long,
-                   p0: Params = Params()): Unit = {
-    val spark = batch.sparkSession
-    val seeded = IngestState.readParams(spark, stateDir)
-    val p = p0.copy(
-      L = seeded.getOrElse("L", p0.L.toLong).toInt,
-      w = seeded.getOrElse("w", p0.w.toLong).toInt,
-      minShared = seeded.getOrElse("minShared", p0.minShared.toLong).toInt,
-      maxDf = seeded.getOrElse("maxDf", p0.maxDf.toLong).toInt,
-      md5Mode = seeded.getOrElse("md5Mode", if (p0.md5Mode) 1L else 0L) == 1L,
-      indexPrefixes = seeded.getOrElse("indexPrefixes", p0.indexPrefixes.toLong).toInt)
-    // fingerprint the batch exactly once, straight into ONE flat delta
-    // file; probe with the materialized rows read back
-    IngestState.writeIndexFlat(grams(batch, p),
-      s"$stateDir/index/batch=$version", p.indexPrefixes, pbCols)
-    val deltaIdx = spark.read.parquet(s"$stateDir/index/batch=$version")
-      .select(col("id"), col("h"))
-    val deltaPbs = spark.read.parquet(s"$stateDir/index/batch=$version")
-      .select("pb").distinct().collect().map(_.getInt(0)).toSeq
-    val idxTemplate = IngestState.withPb(grams(batch.limit(0), p),
-      p.indexPrefixes, pbCols)
-    // corpus fingerprints restricted to the delta's bucket prefixes and
-    // to batches strictly below this version (replay safety)
-    val corpusIdx = IngestState.readIndexPruned(spark, s"$stateDir/index",
-      idxTemplate, version, deltaPbs)
-    // corpus rows matching a delta fingerprint. NO broadcast hint: a
-    // trigger-sized delta's fingerprint set is broadcast by AQE's size
-    // rule anyway, while a wave-sized backfill (the bench seeds 167k
-    // docs ≈ 17M fingerprints per wave) must shuffle — a forced
-    // broadcast there ran the executor out of BytesToBytesMap memory.
-    // Letting the planner pick per batch IS the 100 TB posture: the
-    // same code serves both regimes.
-    // PERSISTED for the batch (the IngestPipeline admMatches discipline,
-    // r14): cand feeds BOTH the hub census and the cross-pair join, and
-    // an unpersisted plan re-ran the corpus-index probe join once per
-    // consumer — at wave scale that is the two heaviest stages of the
-    // whole batch executing twice (StageProf r14: 469 + 445 task-s on
-    // near-identical join subtrees). At 100 TB the corpus index is the
-    // big side; scanning and joining it once per batch instead of twice
-    // is the difference that matters.
-    val cand = corpusIdx.join(deltaIdx.select(col("h")).distinct(), Seq("h"))
-      .select(col("id").as("c_id"), col("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // hub cap at probe time: total df of h across corpus matches + the
-    // delta itself; everything here is bounded by the delta's gram count.
-    // hubs feeds the cross-pair anti join AND the in-batch posting path;
-    // it is delta-bounded small, so persist it too rather than re-running
-    // its two aggregations over cand per consumer.
-    val hubs = cand.groupBy("h").agg(count(lit(1)).as("n_c"))
-      .join(deltaIdx.groupBy("h").agg(count(lit(1)).as("n_d")), Seq("h"))
-      .filter(col("n_c") + col("n_d") > p.maxDf)
-      .select(col("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val crossPairs = cand.join(hubs, Seq("h"), "left_anti")
-      .join(deltaIdx.select(col("id").as("d_id"), col("h")), Seq("h"))
-      .select(least(col("c_id"), col("d_id")).as("id_a"),
-        greatest(col("c_id"), col("d_id")).as("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= p.minShared)
-    // in-batch pairs reuse the materialized delta fingerprints through
-    // the capped posting-pair path, with the probe-time hub set removed
-    // here too: a gram the CORPUS already proves to be template noise
-    // must not pair docs within the batch either (a delta-only count
-    // would miss hubs whose df is split across corpus and batch); grams
-    // hot within the batch alone are nulled by the capped aggregate
-    val innerPairs = SubstringDedup.postingPairs(
-      deltaIdx.join(hubs, Seq("h"), "left_anti"),
-      p.minShared, p.maxDf)
-    try crossPairs.unionByName(innerPairs)
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/pairs/batch=$version")
-    finally { cand.unpersist(); hubs.unpersist() }
-  }
+                   p0: Params = Params()): Unit =
+    gate.processBatch(batch, stateDir, version, p0)
 
-  /** All substring-overlap pairs detected so far, versioned by the batch
-    * that detected them.
+  /** All substring-overlap pairs detected so far (`ingest_version`: the
+    * detecting batch, a long).
     */
-  def pairs(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/pairs")
-      // partition discovery infers the batch column as int — surface it
-      // as the long the other gates expose
-      .withColumn("ingest_version", col("batch").cast("long")).drop("batch")
+  def pairs(spark: SparkSession, stateDir: String): DataFrame = gate.pairs(spark, stateDir)
 
-  /** Fold flat delta indexes below `uptoExclusive` into the partitioned
-    * seed layout (see [[IngestState.compactIndex]] for the replay-safety
-    * contract on `uptoExclusive`).
+  /** Fold flat delta indexes below `uptoExclusive` into the seed layout
+    * (the contract on `uptoExclusive`: [[IngestState.compactIndex]]).
     */
   def compactIndex(spark: SparkSession, stateDir: String, uptoExclusive: Long): Unit =
-    IngestState.compactIndex(spark, s"$stateDir/index", uptoExclusive)
+    gate.compactIndex(spark, stateDir, uptoExclusive)
 }

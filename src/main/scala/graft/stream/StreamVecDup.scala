@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 
@@ -11,24 +11,16 @@ import graft.ext.Dedup
   * gates compose at ingest the way `dedup_multimodal` composes their
   * batch outputs.
   *
-  * State layout under `stateDir` (partitioned by ingest version, so a
-  * replayed batch overwrites exactly its own contribution):
-  * {{{
-  *   vecs/batch=N/           raw (id, vec) of every absorbed batch
-  *   index/batch=N/pb=X/     the batch's (id, band, bucket) LSH rows
-  *                           (Dedup.embeddingIndex), sub-partitioned by
-  *                           pb = xxhash64(band, bucket) mod indexPrefixes
-  *   pairs/batch=N/          cosine-verified pairs the batch introduced
-  * }}}
-  *
-  * The probe never scans or shuffles the full accumulated index: the
-  * delta's distinct bucket-prefix set prunes the corpus-index read at
-  * DIRECTORY level, and the delta index is broadcast (micro-batches are
-  * trigger-bounded), so surviving corpus rows are scanned once and never
-  * shuffled — the same delta-bounded witness StreamNearDupSpec pins for
-  * text. Exactly-once follows the identical `batch < version` partition
-  * filter + Overwrite discipline (see [[StreamNearDup]]'s scaladoc for
-  * the replay argument; the layout is the same shape).
+  * One of the three [[IngestState.Gate]]s, so its state layout, replay
+  * safety and write order are the shared protocol's. What is its own:
+  * the payload is `vecs/` (id, vec); index rows are (id, band, bucket)
+  * ([[Dedup.embeddingIndex]], or [[Dedup.axisCellIndex]] in cellMode),
+  * pb = xxhash64(band, bucket) mod indexPrefixes; and verify probes by
+  * (band, bucket) and checks exact cosine
+  * ([[Dedup.incrementalEmbeddingPairs]]). The delta index is broadcast
+  * (micro-batches are trigger-bounded), so surviving corpus rows are
+  * scanned once and never shuffled — the same delta-bounded witness
+  * StreamNearDupSpec pins for text.
   *
   * Reference analog: none — §7.5 training-pipeline extension.
   */
@@ -51,112 +43,60 @@ object StreamVecDup {
                           threshold: Double = 0.9, planes: Int = 18, bands: Int = 8,
                           indexPrefixes: Int = 256, cellMode: Boolean = false)
 
-  // state layout + replay-safe reads shared with the text gate
-  private def pbCols = Seq(col("band"), col("bucket"))
-
-  private def index(vecs: DataFrame, p: Params): DataFrame =
+  private object gate extends IngestState.Gate[Params] {
+    protected val geometry = Seq(
+      int("planes", _.planes, (p, v) => p.copy(planes = v)),
+      int("bands", _.bands, (p, v) => p.copy(bands = v)),
+      int("indexPrefixes", _.indexPrefixes, (p, v) => p.copy(indexPrefixes = v)),
+      flag("cellMode", _.cellMode, (p, v) => p.copy(cellMode = v)))
+    protected def indexPrefixes(p: Params): Int = p.indexPrefixes
+    protected val pbCols = Seq(col("band"), col("bucket"))
+    protected def payload(p: Params) = Some("vecs" -> Seq(col(p.idCol), col(p.vecCol)))
     // cellMode's geometry is the FIXED [[Dedup.CellBands]]×[[Dedup.CellDims]]
     // split (p.bands/p.planes are hyperplane knobs and don't apply: the
     // cell index is capped by the vector's physical dimension, so its
     // bucket budget is a corpus-independent constant — see the CellBands
     // scaladoc for the candidate-volume/recall accounting); oracles
     // hardwire the same constants
-    if (p.cellMode) Dedup.axisCellIndex(vecs, p.idCol, p.vecCol)
-    else Dedup.embeddingIndex(vecs, p.idCol, p.vecCol, p.planes, p.bands)
-
-  private def writeIndex(idx: DataFrame, dir: String, p: Params): Unit =
-    IngestState.writeIndex(idx, dir, p.indexPrefixes, pbCols)
-
-  private def readOrEmpty(spark: SparkSession, dir: String, template: DataFrame,
-                          maxBatchExclusive: Long): DataFrame =
-    IngestState.readOrEmpty(spark, dir, template, maxBatchExclusive)
+    protected def sketch(vecs: DataFrame, p: Params): DataFrame =
+      if (p.cellMode) Dedup.axisCellIndex(vecs, p.idCol, p.vecCol)
+      else Dedup.embeddingIndex(vecs, p.idCol, p.vecCol, p.planes, p.bands)
+    protected def verify(probe: IngestState.Probe, p: Params): DataFrame =
+      Dedup.incrementalEmbeddingPairs(probe.corpusIdx, probe.corpus.get, probe.batch,
+        probe.deltaIdx, p.idCol, p.vecCol, p.threshold)
+  }
 
   /** Seed the state with an existing corpus as ingest version 0 (outside
-    * the checkpoint — re-run on failure, idempotent).
+    * the checkpoint — re-run on failure, idempotent). The geometry is
+    * then a property of the state dir: auto-sized planes at seed time
+    * can no longer de-sync from a caller's default Params.
     */
-  def seedCorpus(vecs: DataFrame, stateDir: String, p: Params = Params()): Unit = {
-    vecs.select(col(p.idCol), col(p.vecCol))
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/vecs/batch=0")
-    writeIndex(index(vecs, p), s"$stateDir/index/batch=0", p)
-    // the geometry is now a property of the state dir — later batches
-    // adopt it (see IngestState.writeParams); auto-sized planes at seed
-    // time can no longer de-sync from a caller's default Params
-    IngestState.writeParams(vecs.sparkSession, stateDir, Seq(
-      "planes" -> p.planes.toLong, "bands" -> p.bands.toLong,
-      "indexPrefixes" -> p.indexPrefixes.toLong,
-      "cellMode" -> (if (p.cellMode) 1L else 0L)))
-  }
+  def seedCorpus(vecs: DataFrame, stateDir: String, p: Params = Params()): Unit =
+    gate.seed(vecs, stateDir, p)
 
   /** Process one ingest batch at `version` (streaming uses batchId+1;
     * version 0 is the seed). Idempotent under replay. The sketch geometry
-    * (planes/bands/indexPrefixes) is ADOPTED from the state dir's
-    * seed-time manifest when present — only idCol/vecCol/threshold are
-    * taken from the caller's `p`.
+    * (planes/bands/indexPrefixes/cellMode) is ADOPTED from the state
+    * dir's seed-time manifest when present — only idCol/vecCol/threshold
+    * are taken from the caller's `p0`.
     */
   def processBatch(batch: DataFrame, stateDir: String, version: Long,
-                   p0: Params = Params()): Unit = {
-    val spark = batch.sparkSession
-    val seeded = IngestState.readParams(spark, stateDir)
-    val p = p0.copy(
-      planes = seeded.getOrElse("planes", p0.planes.toLong).toInt,
-      bands = seeded.getOrElse("bands", p0.bands.toLong).toInt,
-      indexPrefixes = seeded.getOrElse("indexPrefixes", p0.indexPrefixes.toLong).toInt,
-      cellMode = seeded.getOrElse("cellMode", if (p0.cellMode) 1L else 0L) == 1L)
-    val corpusVecs = readOrEmpty(spark, s"$stateDir/vecs",
-        batch.select(col(p.idCol), col(p.vecCol)), version)
-      .select(col(p.idCol), col(p.vecCol))
-    // trigger-sized delta: ONE flat index file (pb as data column) — the
-    // partitioned layout is for the seed/compacted corpus side only (a
-    // small batch touching most prefixes would land thousands of tiny
-    // files; see IngestState.writeIndexFlat)
-    IngestState.writeIndexFlat(index(batch, p),
-      s"$stateDir/index/batch=$version", p.indexPrefixes, pbCols)
-    val deltaIdx = spark.read.parquet(s"$stateDir/index/batch=$version")
-    val deltaPbs = deltaIdx.select("pb").distinct().collect().map(_.getInt(0)).toSeq
-    val idxTemplate = IngestState.withPb(index(batch.limit(0), p),
-      p.indexPrefixes, pbCols)
-    val corpusIdx = IngestState.readIndexPruned(spark, s"$stateDir/index",
-        idxTemplate, version, deltaPbs)
-      .select(col("id"), col("band"), col("bucket"))
-    Dedup.incrementalEmbeddingPairs(corpusIdx, corpusVecs, batch,
-        p.idCol, p.vecCol, p.threshold, p.planes, p.bands,
-        deltaIndex = Some(deltaIdx.select(col("id"), col("band"), col("bucket"))),
-        broadcastDelta = true)
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/pairs/batch=$version")
-    batch.select(col(p.idCol), col(p.vecCol))
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/vecs/batch=$version")
-  }
+                   p0: Params = Params()): Unit =
+    gate.processBatch(batch, stateDir, version, p0)
 
-  /** All cosine-verified pairs detected so far. */
-  def pairs(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/pairs")
-      .withColumnRenamed("batch", "ingest_version")
+  /** All cosine-verified pairs detected so far (`ingest_version`: the
+    * detecting batch, a long).
+    */
+  def pairs(spark: SparkSession, stateDir: String): DataFrame = gate.pairs(spark, stateDir)
 
-  /** Fold the flat delta indexes of every batch below `uptoExclusive`
-    * into the pb-partitioned seed layout. Run on a maintenance cadence;
-    * `uptoExclusive` must not exceed the stream checkpoint's last
-    * COMMITTED version (see [[IngestState.compactIndex]] for the replay
-    * argument).
+  /** Fold flat delta indexes below `uptoExclusive` into the seed layout
+    * (the contract on `uptoExclusive`: [[IngestState.compactIndex]]).
     */
   def compactIndex(spark: SparkSession, stateDir: String, uptoExclusive: Long): Unit =
-    IngestState.compactIndex(spark, s"$stateDir/index", uptoExclusive)
+    gate.compactIndex(spark, stateDir, uptoExclusive)
 
-  /** Wire [[processBatch]] to a file-source stream and drain it
-    * synchronously (tests / bounded backfills; production swaps the
-    * source for Kafka/Delta — the per-batch plan is unchanged).
-    */
+  /** Drain a file-source stream through [[processBatch]]. */
   def runIngestDedup(spark: SparkSession, inputDir: String, checkpointDir: String,
-                     stateDir: String, p: Params = Params()): Unit = {
-    val schema = spark.read.parquet(inputDir).schema
-    val q = spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(batch.toDF(), stateDir, batchId + 1, p)
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                     stateDir: String, p: Params = Params()): Unit =
+    gate.runIngestDedup(spark, inputDir, checkpointDir, stateDir, p)
 }

@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** Keeps each engine-wide decision behind one module: outside its owning
   * file (and a reasoned allow-list), no main source spells the calls that
-  * make it — how staged bytes become durable state ([[Commit]]), and how
-  * an engine session is configured ([[graft.Session]]).
+  * make it — how staged bytes become durable state ([[Commit]]), how
+  * an engine session is configured ([[graft.Session]]), and how an
+  * ingest gate versions its state ([[graft.stream.IngestState]]).
   */
 class CommitDisciplineSpec extends AnyFunSuite {
   /** what the patterns do, the patterns, the owning file, and
@@ -19,7 +20,9 @@ class CommitDisciplineSpec extends AnyFunSuite {
     Rule("durable renames", Seq("ATOMIC_MOVE", ".rename("), "Commit.scala", Map(
       "IvfIndex.scala" -> ("rebuild swaps a multi-component index in place " +
         "through the Hadoop filesystem, documented as non-atomic"))),
-    Rule("session builders", Seq("SparkSession.builder"), "Session.scala", Map.empty))
+    Rule("session builders", Seq("SparkSession.builder"), "Session.scala", Map.empty),
+    Rule("gate state layout", Seq("_params.json", "batch=$", "batch=0"), "IngestState.scala",
+      Map.empty))
 
   rules.foreach { case Rule(what, patterns, owner, allowed) =>
     test(s"${patterns.mkString(" and ")} appear only in $owner (and the allow-list)") {

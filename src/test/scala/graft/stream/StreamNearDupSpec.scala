@@ -34,6 +34,27 @@ class StreamNearDupSpec extends AnyFunSuite {
     StreamNearDup.processBatch(b2, st, 2L)
     assert(pairSet() == Set((1L, 10L), (11L, 20L), (21L, 22L)))
     assert(StreamNearDup.pairs(spark, st).count() == 3)
+    assert(StreamNearDup.pairs(spark, st).schema("ingest_version").dataType ==
+      org.apache.spark.sql.types.LongType)
+  }
+
+  test("sketch geometry is adopted from the seed manifest, not the caller's Params") {
+    // seed with non-default bands/prefixes, then process with DEFAULT
+    // Params (bands = 4, indexPrefixes = 256): the delta must be sketched
+    // in the seed's geometry, or it probes a disjoint bucket space
+    val st = java.nio.file.Files.createTempDirectory("graft_snd4").toString
+    StreamNearDup.seedCorpus(Seq(1L -> tA, 2L -> tB).toDF("doc_id", "text"), st,
+      StreamNearDup.Params(bands = 2, indexPrefixes = 8))
+    StreamNearDup.processBatch(Seq(10L -> tA, 11L -> tC).toDF("doc_id", "text"), st, 1L)
+    val got = StreamNearDup.pairs(spark, st)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == Set((1L, 10L)), s"cross-geometry batch missed the planted duplicate: $got")
+    val idx = spark.read.parquet(s"$st/index/batch=1")
+    val rowsPerDoc = idx.groupBy("id").count().collect().map(_.getLong(1)).toSet
+    assert(rowsPerDoc == Set(2L), s"delta not sketched with the seed's 2 bands: $rowsPerDoc")
+    val pbs = idx.select("pb").distinct().collect().map(_.getInt(0))
+    assert(pbs.forall(pb => pb >= 0 && pb < 8),
+      s"batch index written outside the seeded prefix space: ${pbs.toSeq}")
   }
 
   test("crash between the index and pairs/docs writes: replay converges to the uninterrupted run") {

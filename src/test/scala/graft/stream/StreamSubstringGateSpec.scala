@@ -43,6 +43,8 @@ class StreamSubstringGateSpec extends AnyFunSuite {
     StreamSubstringGate.processBatch(b2, st, 2L)
     assert(pairSet() == Set((1L, 10L, 1L), (11L, 20L, 2L), (1L, 21L, 2L), (10L, 21L, 2L)))
     assert(StreamSubstringGate.pairs(spark, st).count() == 4)
+    assert(StreamSubstringGate.pairs(spark, st).schema("ingest_version").dataType ==
+      org.apache.spark.sql.types.LongType)
   }
 
   test("in-batch twins are detected through the capped posting path") {

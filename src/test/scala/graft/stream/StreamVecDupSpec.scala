@@ -44,6 +44,8 @@ class StreamVecDupSpec extends AnyFunSuite {
     val cos = StreamVecDup.pairs(spark, st).select("cosine")
       .collect().map(_.getDouble(0))
     assert(cos.forall(_ >= 0.9))
+    assert(StreamVecDup.pairs(spark, st).schema("ingest_version").dataType ==
+      org.apache.spark.sql.types.LongType)
   }
 
   test("sketch geometry is adopted from the seed manifest, not the caller's Params") {
