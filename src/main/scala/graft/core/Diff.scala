@@ -25,6 +25,9 @@ import org.apache.spark.sql.functions._
   * semi-join-reduction intent (download.py:435 "waaaay faster").
   * WarmPlanSpec pins the (key, sig)-only shuffle on the warm path.
   * Every operator matches keys by one rule, null-safe `<=>` ([[nsCond]]).
+  * Semi and anti joins do not deduplicate their key side: a duplicate
+  * build key changes no output row of a left-semi or left-anti join, and
+  * a `distinct()` there would only add an aggregate exchange.
   */
 object Diff {
   val KindCol = "kind"
@@ -71,7 +74,19 @@ object Diff {
     * data column does not re-classify every row 'changed' forever.
     */
   def classifyState(state: DataFrame, external: DataFrame,
-                    key: Seq[String], dataCols: Seq[String]): DataFrame = {
+                    key: Seq[String], dataCols: Seq[String]): DataFrame =
+    classifyWithSig(state, external, key, dataCols).drop(SigCol)
+
+  /** [[classifyState]] that also keeps the source signature `sig_e` as
+    * `sig` on changed/new rows (null on deleted/unchanged ones): the
+    * (key, sig) rows a warm run upserts into its signature state, so the
+    * state is maintained without fetching and re-hashing the source rows
+    * a second time. Exact when source keys are unique (the reference's
+    * primary keys): each touched key then has one source row, whose md5
+    * is `sig_e`.
+    */
+  private[core] def classifyWithSig(state: DataFrame, external: DataFrame,
+                                    key: Seq[String], dataCols: Seq[String]): DataFrame = {
     val i = state.select(key.map(k => col(k).as(s"__ki_$k")) :+ col(SigCol).as("sig_i"): _*)
     val e = external.select(key.map(k => col(k).as(s"__ke_$k"))
       :+ Signatures.md5Sig(dataCols.map(col)).as("sig_e"): _*)
@@ -82,8 +97,9 @@ object Diff {
           .when(col("sig_e").isNull, "deleted")          // download.py:326-336
           .when(col("sig_i") =!= col("sig_e"), "changed")// download.py:195-206
           .otherwise("unchanged"))                       // download.py:193-195
-      .select(key.map(k =>
-        coalesce(col(s"__ki_$k"), col(s"__ke_$k")).as(k)) :+ col(KindCol): _*)
+      .select(key.map(k => coalesce(col(s"__ki_$k"), col(s"__ke_$k")).as(k)) :+
+        col(KindCol) :+
+        when(col(KindCol).isin("changed", "new"), col("sig_e")).as(SigCol): _*)
   }
 
   /** semi_join_changed: fetch full rows only for the given key set
@@ -91,7 +107,7 @@ object Diff {
     * `keys` is typically small (the delta) → AQE broadcast.
     */
   def semiJoinChanged(source: DataFrame, keys: DataFrame, key: Seq[String]): DataFrame =
-    source.join(rightKeys(keys, key).distinct(), nsCond(key), "left_semi")
+    source.join(rightKeys(keys, key), nsCond(key), "left_semi")
 
   /** anti_join_deleted: rows present in `snapshot` but absent from
     * `source` (reference collects internal-only residue then issues

@@ -54,11 +54,18 @@ object Layout {
   /** Write `df` clustered along the z-order curve of `zCols` (numeric).
     * One min/max pass sizes the curve (at 100 TB, run it on a sample —
     * see [[zorderValue]] on clamping), then one range-partitioned write;
-    * the curve column itself is not persisted.
+    * the curve column itself is not persisted. A one-column curve is
+    * monotone in its column, so one column is the range-sorted writer
+    * ([[writeSorted]]) with no stats pass: its files get key-disjoint
+    * ranges at least as tight as the curve's 16-bit buckets.
     */
   def writeZordered(df: DataFrame, dir: String, zCols: Seq[String],
                     numFiles: Int, maxRecordsPerFile: Long = 5000000L,
                     bits: Int = 16): Unit = {
+    if (zCols.size == 1) {
+      writeSorted(df, dir, zCols, numFiles, maxRecordsPerFile)
+      return
+    }
     // shrink per-column bits for wide z keys so the interleave always
     // fits one long — locality degrades gracefully instead of throwing
     val useBits = math.max(1, math.min(bits, 63 / math.max(zCols.size, 1)))

@@ -27,10 +27,11 @@ object Pipeline {
   val DefaultMaxDeletes = 100000L
 
   final case class WarmResult(
-    kinds: DataFrame,        // (key*, kind) classification
+    kinds: DataFrame,        // (key*, kind, sig): sig set on changed/new rows only
     newSnapshot: DataFrame,  // post-apply table state
     changelog: DataFrame,    // old versions of changed rows
-    newState: DataFrame      // (key*, sig) cache for the next run
+    newState: DataFrame,     // (key*, sig) cache for the next run
+    counts: Map[String, Long] // rows per kind: changed/new/deleted/unchanged
   ) {
     /** Release the frames warm() pinned; call after committing. Repeated
       * warm runs (continuous apply) leak cache entries without this.
@@ -46,9 +47,10 @@ object Pipeline {
     * the columnar form of that intent). `Plain` writes partitions as
     * produced; `Zordered` clusters along the z-curve so parquet min/max
     * statistics prune filters on ANY curve column ([[Layout]]), one file
-    * per default-parallelism slot. The layout pass costs one extra
-    * shuffle of the snapshot at commit time — paid once per commit,
-    * repaid by every subsequent selective scan.
+    * per default-parallelism slot (one column: key-range-sorted files).
+    * The layout pass costs one extra shuffle of the snapshot at commit
+    * time — paid once per commit, repaid by every subsequent selective
+    * scan.
     */
   sealed trait SnapshotLayout
   object SnapshotLayout {
@@ -75,38 +77,46 @@ object Pipeline {
     * `Scores.withOverall(Scores.withScores(_))` to match.
     *
     * `kinds` is persisted here: the classify join feeds four downstream
-    * consumers (delete count, changelog, fetch, state) and is the
-    * dominant cost — without the persist it re-executes per action.
+    * consumers (per-kind counts, changelog, fetch, state) and is the
+    * dominant cost — without the persist it re-executes per action. Its
+    * per-kind counts ([[WarmResult.counts]]) are the one job warm runs.
     *
     * `state`: the committed (key, sig) signature cache from the previous
     * run. When provided, the diff runs against IT (the reference's hash
     * side-table protocol, download.py:89-111) — the snapshot's data
     * columns are never re-hashed, and the next state is maintained
-    * incrementally from the RAW source rows of touched keys, so derived
-    * columns (normalized names) never churn the diff. When absent
-    * (legacy/cold), the snapshot itself is hashed and the next state is
-    * derived from the new snapshot — only valid when `deriveFetched`
-    * leaves `dataCols` untouched.
+    * incrementally from the classify's own signatures of the RAW source
+    * rows of touched keys (the reference's `{t}_hashes` update,
+    * download.py:577-583), so derived columns (normalized names) never
+    * churn the diff and the source is neither re-fetched nor re-hashed
+    * for it. This takes source keys to be unique (the reference's
+    * primary keys). When absent (legacy/cold), the snapshot itself is
+    * hashed and the next state is derived from the new snapshot — only
+    * valid when `deriveFetched` leaves `dataCols` untouched.
     */
   def warm(internal: DataFrame, external: DataFrame,
            key: Seq[String], dataCols: Seq[String],
            maxDeletes: Long = DefaultMaxDeletes,
            deriveFetched: DataFrame => DataFrame = identity,
            state: Option[DataFrame] = None): WarmResult = {
-    val kinds = state.map(Diff.classifyState(_, external, key, dataCols))
-      .getOrElse(Diff.classify(internal, external, key, dataCols))
+    val kinds = Diff.classifyWithSig(state.getOrElse(Diff.sigTable(internal, key, dataCols)),
+        external, key, dataCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val touched  = kinds.filter(col(Diff.KindCol).isin("changed", "new"))
-    val rawFetch = Diff.semiJoinChanged(external, touched, key)
-    val fetched  = deriveFetched(rawFetch)
+    val fetched  = deriveFetched(Diff.semiJoinChanged(external, touched, key))
     val changedKeys = kinds.filter(col(Diff.KindCol) === "changed")
     val changelog   = Changelog.captureOld(internal, changedKeys, key)
+
+    // Per-kind counts in one global aggregate: the stages and the one job
+    // a bare count() runs, where a groupBy(kind) adds one of each.
+    val kindNames = Seq("changed", "new", "deleted", "unchanged")
+    val perKind = kindNames.map(k => count(when(col(Diff.KindCol) === k, 1)).as(k))
+    val counts = kinds.agg(perKind.head, perKind.tail: _*).head().getValuesMap[Long](kindNames)
 
     // Deleted-rows circuit breaker (download.py:326-330): if the source
     // lost too many keys, treat it as a source fault and skip deletes.
     val deletedKeys  = kinds.filter(col(Diff.KindCol) === "deleted")
-    val deleteCount  = deletedKeys.count()
-    val skipDeletes  = deleteCount >= maxDeletes
+    val skipDeletes  = counts("deleted") >= maxDeletes
     val afterDeletes =
       if (skipDeletes) internal
       else Diff.antiJoinDeleted(internal, deletedKeys, key)
@@ -116,16 +126,17 @@ object Pipeline {
     val newState = state match {
       case Some(st) =>
         // incremental state maintenance ∝ delta: previous state minus
-        // deleted keys, upserted with RAW-source sigs of touched keys
-        // (the reference updates `{t}_hashes` from downloaded rows,
-        // download.py:577-583 — never from the post-derive replica)
+        // deleted keys, upserted with the RAW-source sigs the classify
+        // computed for touched keys (the reference updates `{t}_hashes`
+        // from downloaded rows, download.py:577-583 — never from the
+        // post-derive replica)
         val afterDelState =
           if (skipDeletes) st else Diff.antiJoinDeleted(st, deletedKeys, key)
-        Diff.upsertReplace(afterDelState, Diff.sigTable(rawFetch, key, dataCols), key)
+        Diff.upsertReplace(afterDelState, touched.select(key.map(col) :+ col(Diff.SigCol): _*), key)
       case None =>
         Diff.sigTable(newSnapshot, key, dataCols)
     }
-    WarmResult(kinds, newSnapshot, changelog, newState)
+    WarmResult(kinds, newSnapshot, changelog, newState, counts)
   }
 
   /** Crash-consistent commit: changelog/snapshot/state land in fresh

@@ -23,10 +23,12 @@ object Runner {
     * snapshots carry tight parquet min/max statistics on every key
     * column, so the NEXT run's diff scan — and any keyed read-side query
     * — prunes files instead of scanning the whole snapshot
-    * (RunnerSpec pins the post-commit pruning). Non-numeric keys degrade
-    * to the range-sorted writer inside [[Layout.writeZordered]]; pass
-    * `layout = _ => Pipeline.SnapshotLayout.Plain` to skip the one extra
-    * commit-time shuffle the layout pass costs.
+    * (RunnerSpec pins the post-commit pruning). A one-column key and
+    * non-numeric keys take the range-sorted writer inside
+    * [[Layout.writeZordered]] (no min/max stats job); the layout pass
+    * then costs one range-bounds sample and one shuffle of the snapshot
+    * per commit, which `layout = _ => Pipeline.SnapshotLayout.Plain`
+    * skips.
     */
   def extractAll(spark: SparkSession, sources: Seq[Source], baseDir: String,
                  maxDeletes: Long = Pipeline.DefaultMaxDeletes,
@@ -133,7 +135,6 @@ object Runner {
       .withColumnRenamed(touchedKeys.columns.head, "__t")
       .unionByName(activeKeys
         .withColumnRenamed(activeKeys.columns.head, "__t"))
-      .distinct()
     val affected = TribeAgg.affectedTribes(oldMembers, members, touchedAll,
       memberTribeFk, memberKey)
     val (newActive, newStats) = TribeAgg.incrementalUpdate(

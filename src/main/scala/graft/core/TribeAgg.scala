@@ -88,7 +88,7 @@ object TribeAgg {
                      touchedKeys: DataFrame, memberTribeFk: String,
                      memberKey: String): DataFrame = {
     val keys = broadcast(touchedKeys
-      .withColumnRenamed(touchedKeys.columns.head, "__tk").distinct())
+      .withColumnRenamed(touchedKeys.columns.head, "__tk"))
     def tribesOf(m: DataFrame) =
       m.join(keys, col(memberKey) === col("__tk"), "left_semi")
         .select(col(memberTribeFk).as("__affected"))
@@ -115,7 +115,7 @@ object TribeAgg {
                         memberKey: String, factKey: String,
                         statCols: Seq[String]): (DataFrame, DataFrame) = {
     val aff = broadcast(affected
-      .withColumnRenamed(affected.columns.head, "__affected").distinct())
+      .withColumnRenamed(affected.columns.head, "__affected"))
     def pruneTribe(df: DataFrame, k: String) =
       df.join(aff, col(k) === col("__affected"), "left_semi")
     val tribeAff = pruneTribe(tribe, tribeKey)

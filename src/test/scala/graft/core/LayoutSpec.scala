@@ -8,23 +8,39 @@ import graft.queries.Fixture
 class LayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("range-sorted layout: disjoint key ranges per file enable min/max pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout").toString
-    val e = Fixture.external(spark, TestSpark.Sf)
-    Layout.writeSorted(e, dir, Seq("l_orderkey"), numFiles = 4)
+  /** `dir`'s files, read back, hold `rows` rows in sorted, key-disjoint
+    * `l_orderkey` ranges, and a key-range filter prunes the scan.
+    */
+  private def assertKeyRangeFiles(dir: String, rows: Long): Unit = {
     val back = spark.read.parquet(dir)
-    assert(back.count() == e.count())
+    assert(back.count() == rows)
     // per-file key ranges must be (nearly) disjoint: collect (file, min, max)
     val ranges = back.groupBy(input_file_name().as("f"))
       .agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi"))
       .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(ranges.length >= 2)
     ranges.sliding(2).foreach { case Array((_, hi1), (lo2, _)) =>
-      assert(lo2 >= hi1, s"file ranges overlap: $ranges") // range partitioner boundary
+      assert(lo2 >= hi1, s"file ranges overlap: ${ranges.toSeq}") // range partitioner boundary
     }
     // a key-range filter must prune files at the scan
     val pruned = spark.read.parquet(dir).filter(col("l_orderkey") < ranges.head._2)
     assert(pruned.count() > 0)
+    val touched = pruned.select(input_file_name()).distinct().count()
+    assert(touched < ranges.length, s"key-range filter should prune files ($touched/${ranges.length})")
+  }
+
+  test("range-sorted layout: disjoint key ranges per file enable min/max pruning") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val e = Fixture.external(spark, TestSpark.Sf)
+    Layout.writeSorted(e, dir, Seq("l_orderkey"), numFiles = 4)
+    assertKeyRangeFiles(dir, e.count())
+  }
+
+  test("one-column z-order is the range-sorted layout: disjoint key ranges, min/max pruning") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_layout_z1").toString
+    val e = Fixture.external(spark, TestSpark.Sf)
+    Layout.writeZordered(e, dir, Seq("l_orderkey"), numFiles = 4)
+    assertKeyRangeFiles(dir, e.count())
   }
 
   test("z-order layout: filters on EITHER curve column touch few files; linear layout touches all") {

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.queries.Fixture
@@ -17,6 +18,76 @@ class PipelineSpec extends AnyFunSuite {
     val changedKeys = r.kinds.filter(col("kind") === "changed").select(Fixture.Key.map(col): _*)
     val expected = i.join(changedKeys, Fixture.Key, "left_semi")
     assert(r.changelog.exceptAll(expected).isEmpty && expected.exceptAll(r.changelog).isEmpty)
+  }
+
+  test("signature state from the classify equals the source's signatures") {
+    val e = Fixture.external(spark, TestSpark.Sf)
+    val i = Fixture.internal(spark, TestSpark.Sf)
+    val st = Diff.sigTable(i, Fixture.Key, Fixture.DataCols)
+    val want = Diff.sigTable(e, Fixture.Key, Fixture.DataCols)
+    def same(a: DataFrame, b: DataFrame) = a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols, state = Some(st))
+    try {
+      assert(Seq("changed", "new", "deleted").forall(r.counts(_) > 0), s"fixture sanity: ${r.counts}")
+      assert(same(r.newState, want))
+    } finally r.release()
+    // the breaker skips deletes in the state as in the snapshot: the
+    // deleted keys keep their old state rows
+    val kept = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols, maxDeletes = 0L, state = Some(st))
+    try {
+      val deleted = kept.kinds.filter(col("kind") === "deleted").select(Fixture.Key.map(col): _*)
+      assert(same(kept.newState, want.unionByName(st.join(deleted, Fixture.Key, "left_semi"))))
+    } finally kept.release()
+  }
+
+  test("warm's per-kind counts equal the classification and cost no extra job") {
+    val e = Fixture.external(spark, TestSpark.Sf)
+    val i = Fixture.internal(spark, TestSpark.Sf)
+    e.count() // builds the memoized fixture, so neither job count below includes it
+    // the one action a warm run needs: the delete breaker's count over
+    // its persisted classification
+    val breakerJobs = jobsOf {
+      val k = Diff.classifyWithSig(Diff.sigTable(i, Fixture.Key, Fixture.DataCols), e,
+        Fixture.Key, Fixture.DataCols).persist()
+      try k.filter(col("kind") === "deleted").count() finally k.unpersist()
+    }
+    var r: Pipeline.WarmResult = null
+    val warmJobs = jobsOf { r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols) }
+    try {
+      val want = Fixture.kinds(spark, TestSpark.Sf).groupBy("kind").count().collect()
+        .map(r2 => r2.getString(0) -> r2.getLong(1)).toMap
+      assert(r.counts == Map("changed" -> 0L, "new" -> 0L, "deleted" -> 0L, "unchanged" -> 0L) ++ want)
+      assert(warmJobs == breakerJobs, s"warm ran $warmJobs jobs, the breaker count alone $breakerJobs")
+    } finally r.release()
+  }
+
+  /** Spark jobs started by `f`, counted by job group. A sentinel job in a
+    * group of its own flushes the listener bus, which delivers in order.
+    */
+  private def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val sentinel = s"$group-end"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted", interruptOnCancel = false)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel", interruptOnCancel = false)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+    } finally sc.removeSparkListener(listener)
+    jobs.get
   }
 
   test("delete circuit breaker: maxDeletes=0 keeps phantom rows") {
