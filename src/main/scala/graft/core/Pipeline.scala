@@ -82,25 +82,27 @@ object Pipeline {
     * per-kind counts ([[WarmResult.counts]]) are the one job warm runs.
     *
     * `state`: the committed (key, sig) signature cache from the previous
-    * run. When provided, the diff runs against IT (the reference's hash
-    * side-table protocol, download.py:89-111) — the snapshot's data
-    * columns are never re-hashed, and the next state is maintained
-    * incrementally from the classify's own signatures of the RAW source
-    * rows of touched keys (the reference's `{t}_hashes` update,
-    * download.py:577-583), so derived columns (normalized names) never
-    * churn the diff and the source is neither re-fetched nor re-hashed
-    * for it. This takes source keys to be unique (the reference's
-    * primary keys). When absent (legacy/cold), the snapshot itself is
-    * hashed and the next state is derived from the new snapshot — only
-    * valid when `deriveFetched` leaves `dataCols` untouched.
+    * run; absent (legacy/cold), it is the snapshot's own signatures
+    * (`Diff.sigTable(internal, …)`). The diff runs against it (the
+    * reference's hash side-table protocol, download.py:89-111) — a
+    * committed state means the snapshot's data columns are never
+    * re-hashed. The next state is maintained incrementally: the state
+    * minus deleted keys, upserted with the classify's own signatures of
+    * the RAW source rows of touched keys (the reference's `{t}_hashes`
+    * update, download.py:577-583), so derived columns (normalized names)
+    * never churn the diff and the source is neither re-fetched nor
+    * re-hashed for it. This takes source keys to be unique (the
+    * reference's primary keys). Without a committed state the diff
+    * compares the snapshot's own columns, which is only valid when
+    * `deriveFetched` leaves `dataCols` untouched.
     */
   def warm(internal: DataFrame, external: DataFrame,
            key: Seq[String], dataCols: Seq[String],
            maxDeletes: Long = DefaultMaxDeletes,
            deriveFetched: DataFrame => DataFrame = identity,
            state: Option[DataFrame] = None): WarmResult = {
-    val kinds = Diff.classifyWithSig(state.getOrElse(Diff.sigTable(internal, key, dataCols)),
-        external, key, dataCols)
+    val st = state.getOrElse(Diff.sigTable(internal, key, dataCols))
+    val kinds = Diff.classifyWithSig(st, external, key, dataCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val touched  = kinds.filter(col(Diff.KindCol).isin("changed", "new"))
     val fetched  = deriveFetched(Diff.semiJoinChanged(external, touched, key))
@@ -123,19 +125,13 @@ object Pipeline {
 
     val newSnapshot = Diff.upsertReplace(afterDeletes, fetched, key)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newState = state match {
-      case Some(st) =>
-        // incremental state maintenance ∝ delta: previous state minus
-        // deleted keys, upserted with the RAW-source sigs the classify
-        // computed for touched keys (the reference updates `{t}_hashes`
-        // from downloaded rows, download.py:577-583 — never from the
-        // post-derive replica)
-        val afterDelState =
-          if (skipDeletes) st else Diff.antiJoinDeleted(st, deletedKeys, key)
-        Diff.upsertReplace(afterDelState, touched.select(key.map(col) :+ col(Diff.SigCol): _*), key)
-      case None =>
-        Diff.sigTable(newSnapshot, key, dataCols)
-    }
+    // incremental state maintenance ∝ delta: previous state minus deleted
+    // keys, upserted with the RAW-source sigs the classify computed for
+    // touched keys (the reference updates `{t}_hashes` from downloaded
+    // rows, download.py:577-583 — never from the post-derive replica)
+    val afterDelState = if (skipDeletes) st else Diff.antiJoinDeleted(st, deletedKeys, key)
+    val newState = Diff.upsertReplace(afterDelState,
+      touched.select(key.map(col) :+ col(Diff.SigCol): _*), key)
     WarmResult(kinds, newSnapshot, changelog, newState, counts)
   }
 

@@ -17,9 +17,10 @@ object Runner {
                           deriveFetched: DataFrame => DataFrame = identity)
 
   /** Run all extracts in parallel, committing each as a new version under
-    * `$baseDir/$table`. Returns committed versions per table.
+    * `$baseDir/$table`. Returns committed versions per table. Deletes are
+    * bounded by [[Pipeline.DefaultMaxDeletes]].
     *
-    * The default commit layout is Z-ordered on the table key: committed
+    * The commit layout is Z-ordered on the table key: committed
     * snapshots carry tight parquet min/max statistics on every key
     * column, so the NEXT run's diff scan — and any keyed read-side query
     * — prunes files instead of scanning the whole snapshot
@@ -27,13 +28,9 @@ object Runner {
     * non-numeric keys take the range-sorted writer inside
     * [[Layout.writeZordered]] (no min/max stats job); the layout pass
     * then costs one range-bounds sample and one shuffle of the snapshot
-    * per commit, which `layout = _ => Pipeline.SnapshotLayout.Plain`
-    * skips.
+    * per commit.
     */
-  def extractAll(spark: SparkSession, sources: Seq[Source], baseDir: String,
-                 maxDeletes: Long = Pipeline.DefaultMaxDeletes,
-                 layout: Source => Pipeline.SnapshotLayout =
-                   src => Pipeline.SnapshotLayout.Zordered(src.key)): Map[String, Long] = {
+  def extractAll(spark: SparkSession, sources: Seq[Source], baseDir: String): Map[String, Long] = {
     val versions = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     Pipeline.runParallel(spark, sources.map { src =>
       src.name -> (() => {
@@ -50,8 +47,9 @@ object Runner {
             Diff.sigTable(external, src.key, src.dataCols).limit(0))
         }
         val r = Pipeline.warm(internal, external, src.key, src.dataCols,
-          maxDeletes, src.deriveFetched, state = Some(state))
-        try versions.put(src.name, Pipeline.commitVersioned(r, dir, layout(src)))
+          Pipeline.DefaultMaxDeletes, src.deriveFetched, state = Some(state))
+        try versions.put(src.name,
+          Pipeline.commitVersioned(r, dir, Pipeline.SnapshotLayout.Zordered(src.key)))
         finally r.release()
         ()
       })
@@ -82,29 +80,22 @@ object Runner {
     indexMaintenance.foreach(_.apply())
   }
 
-  /** post_update (reference post_update.py): rebuild the per-tribe
-    * aggregate tables from the freshly committed snapshots. `activeKeys`
-    * is the per-run delta (the `player_new` analog).
-    */
-  def postUpdate(spark: SparkSession, baseDir: String,
-                 tribe: DataFrame, members: DataFrame, facts: DataFrame,
-                 activeKeys: DataFrame, tribeKey: String, memberTribeFk: String,
-                 memberKey: String, factKey: String, statCols: Seq[String]): Unit = {
-    val active = TribeAgg.tribeActive(tribe, members, activeKeys,
-      tribeKey, memberTribeFk, memberKey)
-    active.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/tribe_active")
-    TribeAgg.tribeStats(tribe, members, facts, activeKeys, tribeKey,
-        memberTribeFk, memberKey, factKey, statCols,
-        precomputed = Some(spark.read.parquet(s"$baseDir/tribe_active")))
-      .write.mode(SaveMode.Overwrite).parquet(s"$baseDir/tribe_stats")
-  }
-
-  /** Incremental post_update: recompute only tribes invalidated by this
-    * run's member delta ([[TribeAgg.incrementalUpdate]]); everything else
-    * carries over from the committed aggregate tables. Falls back to the
-    * full [[postUpdate]] when no previous aggregates exist. Per-run cost
-    * ∝ delta instead of corpus — the shape the reference's full rebuild
-    * (post_update.py) cannot take.
+  /** post_update (reference post_update.py:22-91): the per-tribe
+    * aggregate tables `tribe_active` and `tribe_stats` under `baseDir`.
+    * `activeKeys` is the per-run delta (the `player_new` analog);
+    * `touchedKeys` the members whose membership may have moved.
+    *
+    * Incremental when the previous aggregates are in place: only tribes
+    * invalidated by this run's member delta are recomputed
+    * ([[TribeAgg.incrementalUpdate]]), everything else carries over — per-run
+    * cost ∝ delta instead of corpus, the shape the reference's full rebuild
+    * cannot take. In full otherwise (first run, or an interrupted swap).
+    *
+    * One write path either way: both tables are staged in `.next`
+    * directories, a marker is set, each staged directory replaces its live
+    * one ([[Commit.replaceDir]]), the marker is cleared. The live
+    * directories are never written in place, so a crash at any step leaves
+    * either the previous pair intact or the marker set.
     */
   def postUpdateIncremental(spark: SparkSession, baseDir: String,
                             tribe: DataFrame, oldMembers: DataFrame,
@@ -116,35 +107,39 @@ object Runner {
     import java.nio.file.{Files, Paths}
     val activeDir = s"$baseDir/tribe_active"
     val statsDir = s"$baseDir/tribe_stats"
+    val (aTmp, sTmp) = (s"$activeDir.next", s"$statsDir.next")
     // the two-directory swap cannot be atomic as a pair; the marker makes
     // a crash between the swaps detectable — next run rebuilds in full
     // instead of silently carrying one table a run behind the other
     val marker = Paths.get(s"$baseDir/_agg_swap_incomplete")
-    val havePrev = new java.io.File(activeDir).isDirectory &&
-      new java.io.File(statsDir).isDirectory && !Files.exists(marker)
-    if (!havePrev) {
-      postUpdate(spark, baseDir, tribe, members, facts, activeKeys,
+    // a live table counts only once its job committed (`_SUCCESS`): a
+    // directory a killed in-place writer left holds only `_temporary/`
+    def committed(dir: String) = Files.exists(Paths.get(dir, "_SUCCESS"))
+    val havePrev = committed(activeDir) && committed(statsDir) && !Files.exists(marker)
+    if (havePrev) {
+      // activeKeys must invalidate tribes too: a member whose row changed
+      // in place is active this run even if its membership didn't move —
+      // union it into the touched set instead of trusting the caller
+      val touchedAll = touchedKeys
+        .withColumnRenamed(touchedKeys.columns.head, "__t")
+        .unionByName(activeKeys
+          .withColumnRenamed(activeKeys.columns.head, "__t"))
+      val affected = TribeAgg.affectedTribes(oldMembers, members, touchedAll,
+        memberTribeFk, memberKey)
+      val (newActive, newStats) = TribeAgg.incrementalUpdate(
+        spark.read.parquet(activeDir), spark.read.parquet(statsDir),
+        tribe, members, facts, activeKeys, affected,
         tribeKey, memberTribeFk, memberKey, factKey, statCols)
-      Files.deleteIfExists(marker)
-      return
+      newActive.write.mode(SaveMode.Overwrite).parquet(aTmp)
+      newStats.write.mode(SaveMode.Overwrite).parquet(sTmp)
+    } else {
+      TribeAgg.tribeActive(tribe, members, activeKeys, tribeKey, memberTribeFk, memberKey)
+        .write.mode(SaveMode.Overwrite).parquet(aTmp)
+      TribeAgg.tribeStats(tribe, members, facts, activeKeys, tribeKey,
+          memberTribeFk, memberKey, factKey, statCols,
+          precomputed = Some(spark.read.parquet(aTmp)))
+        .write.mode(SaveMode.Overwrite).parquet(sTmp)
     }
-    // activeKeys must invalidate tribes too: a member whose row changed
-    // in place is active this run even if its membership didn't move —
-    // union it into the touched set instead of trusting the caller
-    val touchedAll = touchedKeys
-      .withColumnRenamed(touchedKeys.columns.head, "__t")
-      .unionByName(activeKeys
-        .withColumnRenamed(activeKeys.columns.head, "__t"))
-    val affected = TribeAgg.affectedTribes(oldMembers, members, touchedAll,
-      memberTribeFk, memberKey)
-    val (newActive, newStats) = TribeAgg.incrementalUpdate(
-      spark.read.parquet(activeDir), spark.read.parquet(statsDir),
-      tribe, members, facts, activeKeys, affected,
-      tribeKey, memberTribeFk, memberKey, factKey, statCols)
-    // overwrite-in-place would truncate the input mid-read: stage + swap
-    val (aTmp, sTmp) = (s"$activeDir.next", s"$statsDir.next")
-    newActive.write.mode(SaveMode.Overwrite).parquet(aTmp)
-    newStats.write.mode(SaveMode.Overwrite).parquet(sTmp)
     Files.writeString(marker, "swap")
     Commit.replaceDir(aTmp, activeDir)
     Commit.replaceDir(sTmp, statsDir)

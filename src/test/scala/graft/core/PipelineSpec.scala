@@ -26,18 +26,23 @@ class PipelineSpec extends AnyFunSuite {
     val st = Diff.sigTable(i, Fixture.Key, Fixture.DataCols)
     val want = Diff.sigTable(e, Fixture.Key, Fixture.DataCols)
     def same(a: DataFrame, b: DataFrame) = a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-    val r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols, state = Some(st))
-    try {
-      assert(Seq("changed", "new", "deleted").forall(r.counts(_) > 0), s"fixture sanity: ${r.counts}")
-      assert(same(r.newState, want))
-    } finally r.release()
-    // the breaker skips deletes in the state as in the snapshot: the
-    // deleted keys keep their old state rows
-    val kept = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols, maxDeletes = 0L, state = Some(st))
-    try {
-      val deleted = kept.kinds.filter(col("kind") === "deleted").select(Fixture.Key.map(col): _*)
-      assert(same(kept.newState, want.unionByName(st.join(deleted, Fixture.Key, "left_semi"))))
-    } finally kept.release()
+    // a committed state, and none: warm then takes the snapshot's own
+    // signatures, which are `st`
+    for ((state, at) <- Seq(Some(st) -> "committed state", None -> "no state")) {
+      val r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols, state = state)
+      try {
+        assert(Seq("changed", "new", "deleted").forall(r.counts(_) > 0), s"fixture sanity: ${r.counts}")
+        assert(same(r.newState, want), at)
+      } finally r.release()
+      // the breaker skips deletes in the state as in the snapshot: the
+      // deleted keys keep their old state rows
+      val kept = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols, maxDeletes = 0L, state = state)
+      try {
+        val deleted = kept.kinds.filter(col("kind") === "deleted").select(Fixture.Key.map(col): _*)
+        assert(same(kept.newState, want.unionByName(st.join(deleted, Fixture.Key, "left_semi"))),
+          at)
+      } finally kept.release()
+    }
   }
 
   test("warm's per-kind counts equal the classification and cost no extra job") {

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.queries.Fixture
@@ -41,14 +42,15 @@ class RunnerSpec extends AnyFunSuite {
     assert(clog.count() == liSnap.count()) // every row's old version captured
     assert(Pipeline.readChangelog(spark, base + "/orders").filter("v = 2").count() == 0)
 
-    // post-update: per-nation aggregates over the committed customer snapshot
+    // post-update on a fresh dir: per-nation aggregates over the committed
+    // customer snapshot, built in full
     val delta = Tables.load(spark, d, "orders")
       .filter(col("o_orderkey") % 10 === 0).select("o_custkey").distinct()
-    Runner.postUpdate(spark, base,
-      Tables.load(spark, d, "nation"),
-      Pipeline.readLatest(spark, base + "/customer", "snapshot"),
+    val customers = Pipeline.readLatest(spark, base + "/customer", "snapshot")
+    Runner.postUpdateIncremental(spark, base,
+      Tables.load(spark, d, "nation"), customers, customers,
       Pipeline.readLatest(spark, base + "/orders", "snapshot"),
-      delta, "n_nationkey", "c_nationkey", "c_custkey", "o_custkey",
+      delta, delta, "n_nationkey", "c_nationkey", "c_custkey", "o_custkey",
       Seq("o_totalprice"))
     val stats = spark.read.parquet(base + "/tribe_stats")
     assert(stats.count() == 25)
@@ -135,27 +137,135 @@ class RunnerSpec extends AnyFunSuite {
     assert(inc(20) == ((0L, 7.0)))                // carried over, active reset
   }
 
-  test("postUpdateIncremental: interrupted swap marker forces a full rebuild") {
+  /** Inputs of one post_update call over a fixed three-tribe dimension. */
+  private final case class PostUpdateIn(oldMembers: DataFrame, members: DataFrame,
+                                        facts: DataFrame, active: DataFrame,
+                                        touched: DataFrame)
+
+  private def postUpdate(base: String, in: PostUpdateIn): Unit = {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_inc_marker").toString
-    val tribe = Seq(10, 20).toDF("t_id")
-    val m = Seq((1, 10), (2, 20)).toDF("m_id", "m_tribe")
-    val facts = Seq((1, 5.0), (2, 7.0)).toDF("p_id", "stat")
-    Runner.postUpdateIncremental(spark, base, tribe, m, m, facts,
-      Seq(1).toDF("k"), Seq(1).toDF("k"), "t_id", "m_tribe", "m_id", "p_id", Seq("stat"))
-    // simulate a crash between the two directory swaps
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(base + "/_agg_swap_incomplete"), "swap")
-    val facts2 = Seq((1, 6.0), (2, 8.0)).toDF("p_id", "stat")
-    Runner.postUpdateIncremental(spark, base, tribe, m, m, facts2,
-      Seq(1).toDF("k"), Seq(1).toDF("k"), "t_id", "m_tribe", "m_id", "p_id", Seq("stat"))
-    // full rebuild ran: BOTH tribes reflect facts2, marker cleared
-    val stats = spark.read.parquet(base + "/tribe_stats")
-      .collect().map(r => r.getInt(0) -> r.getDouble(3)).toMap
-    assert(stats == Map(10 -> 6.0, 20 -> 8.0))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(base + "/_agg_swap_incomplete")))
+    Runner.postUpdateIncremental(spark, base, Seq(10, 20, 30).toDF("t_id"),
+      in.oldMembers, in.members, in.facts, in.active, in.touched,
+      "t_id", "m_tribe", "m_id", "p_id", Seq("stat"))
   }
+
+  /** `df` with its first column routed through a UDF that throws: any job
+    * that reads it fails inside its tasks, after the write it feeds began.
+    * The shuffle keeps the optimizer from evaluating the UDF over the local
+    * rows while it plans the write.
+    */
+  private def failing(df: DataFrame): DataFrame = {
+    val boom = udf((x: Int) =>
+      if (x != Int.MinValue) throw new IllegalStateException("injected crash") else x)
+      .asNondeterministic()
+    df.repartition(2).withColumn(df.columns.head, boom(col(df.columns.head)))
+  }
+
+  private def aggRows(base: String, table: String): Set[Seq[Any]] =
+    spark.read.parquet(s"$base/$table").collect().map(_.toSeq).toSet
+
+  /** Leaves under `base` what a crash of `postUpdate(base, in)` leaves;
+    * `ref` holds the tables of that call run uninterrupted.
+    */
+  private type Crash = (String, PostUpdateIn, String) => Unit
+
+  /** Post_update crash points. A crash inside a staged write is a job that
+    * fails on the input only that table reads (`activeKeys` for
+    * tribe_active, `facts` for tribe_stats); a killed job, unlike an
+    * aborted one, leaves `_temporary/0` in the directory it was writing, so
+    * that is put back. The crashes after the writes copy an uninterrupted
+    * run's tables (`ref`) into the step's directories. The last point is the
+    * state a writer that overwrote the live directories in place left when
+    * killed inside a first run's tribe_stats write: every later call failed
+    * reading the half-written directory.
+    */
+  private val crashPoints: Seq[(String, Crash)] = {
+    import java.nio.file.{Files, Path, Paths}
+    def p(d: String, n: String): Path = Paths.get(d, n)
+    def killed(base: String, dir: String): Unit = Files.createDirectories(p(base, s"$dir/_temporary/0"))
+    def copy(ref: String, table: String, base: String, as: String): Unit = {
+      Pipeline.deleteRecursively(p(base, as))
+      Files.createDirectories(p(base, as))
+      val l = Files.list(p(ref, table))
+      try l.forEach(f => Files.copy(f, p(base, as).resolve(f.getFileName)))
+      finally l.close()
+    }
+    def marker(base: String): Unit = Files.writeString(p(base, "_agg_swap_incomplete"), "swap")
+    Seq(
+      "inside the staged tribe_active write" -> ((base: String, in: PostUpdateIn, _: String) => {
+        intercept[Exception](postUpdate(base, in.copy(active = failing(in.active))))
+        killed(base, "tribe_active.next")
+      }),
+      "inside the staged tribe_stats write" -> ((base: String, in: PostUpdateIn, _: String) => {
+        intercept[Exception](postUpdate(base, in.copy(facts = failing(in.facts))))
+        killed(base, "tribe_stats.next")
+      }),
+      "after the marker" -> ((base: String, _: PostUpdateIn, ref: String) => {
+        copy(ref, "tribe_active", base, "tribe_active.next")
+        copy(ref, "tribe_stats", base, "tribe_stats.next")
+        marker(base)
+      }),
+      "between the two swaps" -> ((base: String, _: PostUpdateIn, ref: String) => {
+        copy(ref, "tribe_active", base, "tribe_active")
+        copy(ref, "tribe_stats", base, "tribe_stats.next")
+        marker(base)
+      }),
+      "after both swaps, before the marker is cleared" -> ((base: String, _: PostUpdateIn, ref: String) => {
+        copy(ref, "tribe_active", base, "tribe_active")
+        copy(ref, "tribe_stats", base, "tribe_stats")
+        marker(base)
+      }),
+      "inside an in-place tribe_stats write, no marker" -> ((base: String, _: PostUpdateIn, ref: String) => {
+        copy(ref, "tribe_active", base, "tribe_active")
+        Pipeline.deleteRecursively(p(base, "tribe_stats"))
+        killed(base, "tribe_stats")
+      }))
+  }
+
+  /** Three runs' inputs: a cold one; member 3 moves to tribe 20 and member
+    * 1's stat changes; member 2's stat changes.
+    */
+  private lazy val cycles: Seq[PostUpdateIn] = {
+    import spark.implicits._
+    val m0 = Seq((1, 10), (2, 20), (3, 30)).toDF("m_id", "m_tribe")
+    val m1 = Seq((1, 10), (2, 20), (3, 20)).toDF("m_id", "m_tribe")
+    Seq(PostUpdateIn(m0, m0, Seq((1, 5.0), (2, 7.0), (3, 9.0)).toDF("p_id", "stat"),
+        Seq(1, 2, 3).toDF("k"), Seq(1, 2, 3).toDF("k")),
+      PostUpdateIn(m0, m1, Seq((1, 6.0), (2, 7.0), (3, 9.0)).toDF("p_id", "stat"),
+        Seq(1).toDF("k"), Seq(3).toDF("k")),
+      PostUpdateIn(m1, m1, Seq((1, 6.0), (2, 8.0), (3, 9.0)).toDF("p_id", "stat"),
+        Seq(2).toDF("k"), Seq(2).toDF("k")))
+  }
+
+  // Before the marker the previous pair is intact and the crashed call is
+  // retried. With the marker left behind, the next call is the following
+  // run, with its own delta: only the full rebuild the marker forces gives
+  // the uninterrupted tables, since carrying over rows from a pair a run
+  // behind would miss the crashed run's delta.
+  for ((run, warm) <- Seq("first" -> false, "warm" -> true); (point, crash) <- crashPoints)
+    test(s"post_update crash on a $run run, $point: the next call equals an uninterrupted run") {
+      import java.nio.file.{Files, Paths}
+      val (prior, in, following) = if (warm) (cycles.take(1), cycles(1), cycles(2))
+        else (Nil, cycles(0), cycles(1))
+      def dir(n: String) = Files.createTempDirectory(s"graft_pu_$n").toString
+      val (base, ref) = (dir("crash"), dir("ref"))
+      for (d <- Seq(base, ref); c <- prior) postUpdate(d, c)
+      def live = Seq("tribe_active", "tribe_stats").map { t =>
+        t -> Option(Paths.get(base, t).toFile.list()).map(_.toSet)
+      }
+      val before = live
+      postUpdate(ref, in)
+      crash(base, in, ref)
+      val crashed = live
+      val marker = Paths.get(base, "_agg_swap_incomplete")
+      val next = if (Files.exists(marker)) { postUpdate(ref, following); following } else in
+      postUpdate(base, next)
+      for (t <- Seq("tribe_active", "tribe_stats"))
+        assert(aggRows(base, t) == aggRows(ref, t), s"$t after recovery")
+      assert(!Files.exists(marker))
+      if (point.startsWith("inside the staged"))
+        assert(crashed == before, "a crashed staged write must leave the live directories as they were")
+    }
 
   test("postUpdateIncremental: in-place change with no membership move still counts active") {
     import spark.implicits._
