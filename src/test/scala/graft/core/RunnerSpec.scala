@@ -267,6 +267,29 @@ class RunnerSpec extends AnyFunSuite {
         assert(crashed == before, "a crashed staged write must leave the live directories as they were")
     }
 
+  test("postUpdateIncremental: interrupted swap marker forces a full rebuild") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_inc_marker").toString
+    val tribe = Seq(10, 20).toDF("t_id")
+    val m = Seq((1, 10), (2, 20)).toDF("m_id", "m_tribe")
+    val facts = Seq((1, 5.0), (2, 7.0)).toDF("p_id", "stat")
+    Runner.postUpdateIncremental(spark, base, tribe, m, m, facts,
+      Seq(1).toDF("k"), Seq(1).toDF("k"), "t_id", "m_tribe", "m_id", "p_id", Seq("stat"))
+    // simulate a crash between the two directory swaps
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(base + "/_agg_swap_incomplete"), "swap")
+    val facts2 = Seq((1, 6.0), (2, 8.0)).toDF("p_id", "stat")
+    Runner.postUpdateIncremental(spark, base, tribe, m, m, facts2,
+      Seq(1).toDF("k"), Seq(1).toDF("k"), "t_id", "m_tribe", "m_id", "p_id", Seq("stat"))
+    // full rebuild ran: BOTH tribes reflect facts2, marker cleared
+    val stats = spark.read.parquet(base + "/tribe_stats")
+      .collect().map(r => r.getInt(0) -> r.getDouble(3)).toMap
+    assert(stats == Map(10 -> 6.0, 20 -> 8.0))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(base + "/_agg_swap_incomplete")))
+  }
+
+
   test("postUpdateIncremental: in-place change with no membership move still counts active") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_inc_active").toString
