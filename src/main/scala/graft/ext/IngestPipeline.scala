@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Bridge.sizedLocalCheckpoint
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -37,18 +38,23 @@ import org.apache.spark.storage.StorageLevel
   *
   * Execution discipline (learned at the 500k-doc bench corpus, where the
   * naive fold ran 1500 s): every per-wave DECISION frame is eagerly
-  * `localCheckpoint`ed the moment it is decided, and everything
-  * downstream — the next stage, the next wave, the fate assembly —
-  * derives from the checkpointed ids plus a CHEAP re-scan of the raw
-  * batch, never from the deciding pipeline's lineage. Without this each
-  * checkpoint/count re-executed the whole wave pipeline (the winnow
-  * kernel ran 3-4× per wave) and wave v+1's plan nested wave v's
-  * entirely (exponential in nWaves; the driver OOM'd building the plan
-  * STRING). The batch's gram table is persisted across its three
-  * consumers (cross-probe, in-batch pairs, admitted-state extraction)
-  * and dropped at wave end. This is also the honest streaming analog: a
-  * real foreachBatch reads admitted state back from parquet, not from
-  * lineage.
+  * checkpointed the moment it is decided, and everything downstream —
+  * the next stage, the next wave, the fate assembly — derives from the
+  * checkpointed ids plus a CHEAP re-scan of the raw batch, never from the
+  * deciding pipeline's lineage. Without this each checkpoint/count
+  * re-executed the whole wave pipeline (the winnow kernel ran 3-4× per
+  * wave) and wave v+1's plan nested wave v's entirely (exponential in
+  * nWaves; the driver OOM'd building the plan STRING). The checkpoints
+  * carry their materialized size (`Bridge.sizedLocalCheckpoint`), so a
+  * join against a small decided set plans as a broadcast from the start
+  * instead of shuffling both sides before AQE replans it; sets above the
+  * broadcast threshold keep their sort-merge joins. The hub set is
+  * decided once per wave and read by both the cross probe and the
+  * in-batch pairs. The batch's gram table is persisted across its
+  * consumers (hub census, cross-probe, in-batch pairs, admitted-state
+  * extraction) and dropped at wave end. This is also the honest
+  * streaming analog: a real foreachBatch reads admitted state back from
+  * parquet, not from lineage.
   */
 object IngestPipeline {
   /** `md5Mode = true` (default) runs md5 text signatures and md5 winnowed
@@ -79,35 +85,31 @@ object IngestPipeline {
     // admitted-state frames: ids are checkpointed per wave; sigs/grams
     // derive from raw scans + those ids (cheap lineage), checkpointed so
     // later waves read blocks, not plans
-    var admSigs = seed.select(sigOf(col("__t")).as("sig")).distinct()
-      .localCheckpoint(true)
-    var admGrams = gramsOf(seed)
-      .select(col("id").as("aid"), col("h"))
-      .localCheckpoint(true)
+    var admSigs = sizedLocalCheckpoint(seed.select(sigOf(col("__t")).as("sig")).distinct())
+    var admGrams = sizedLocalCheckpoint(gramsOf(seed).select(col("id").as("aid"), col("h")))
 
     val fates = scala.collection.mutable.ListBuffer.empty[DataFrame]
     for (v <- 1 until nWaves) {
       val batch = docs.filter(wave === v)
         .select(col(idCol).as("id"), col(textCol).as("__t"))
       // ---- stage 1: LM quality (one execution: the scoring join)
-      val lmVerdict = batch
+      val lmVerdict = sizedLocalCheckpoint(batch
         .join(TextLm.scoreWith(lm, batch, "id", "__t")
           .select(col("id"), col("avg_nll")), Seq("id"), "left_outer")
         .select(col("id"),
           when(col("avg_nll").isNull, "lm_short")
             .when(col("avg_nll") > ceiling, "lm")
-            .otherwise("pass").as("s1"))
-        .localCheckpoint(true)
+            .otherwise("pass").as("s1")))
       val lmPassIds = lmVerdict.filter(col("s1") === "pass").select("id")
       // ---- stage 2: exact dedup (cheap: batch re-scan + small id/sig sets)
       val batchSig = batch.join(lmPassIds, Seq("id"), "left_semi")
         .select(col("id"), sigOf(col("__t")).as("sig"))
-      val exactFailIds = batchSig.join(admSigs, Seq("sig"), "left_semi").select(col("id"))
-        .unionByName(batchSig
-          .join(batchSig.groupBy("sig").agg(min("id").as("__keep")), Seq("sig"))
-          .filter(col("id") =!= col("__keep")).select(col("id")))
-        .distinct()
-        .localCheckpoint(true)
+      val exactFailIds = sizedLocalCheckpoint(
+        batchSig.join(admSigs, Seq("sig"), "left_semi").select(col("id"))
+          .unionByName(batchSig
+            .join(batchSig.groupBy("sig").agg(min("id").as("__keep")), Seq("sig"))
+            .filter(col("id") =!= col("__keep")).select(col("id")))
+          .distinct())
       // ---- stage 3: substring overlap; the batch gram table feeds three
       // consumers — persist it for the wave
       val exactPass = batch.join(lmPassIds, Seq("id"), "left_semi")
@@ -132,28 +134,27 @@ object IngestPipeline {
       // of twice is the difference that matters.)
       val admMatches = admGrams.join(batchGrams.select(col("h")).distinct(), Seq("h"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val hubs = admMatches.groupBy("h").agg(count(lit(1)).as("n_c"))
+      // checkpointed: both consumers below read one decided set instead
+      // of each re-running the census
+      val hubs = sizedLocalCheckpoint(admMatches.groupBy("h").agg(count(lit(1)).as("n_c"))
         .join(batchGrams.groupBy("h").agg(count(lit(1)).as("n_d")), Seq("h"))
         .filter(col("n_c") + col("n_d") > maxDf)
-        .select(col("h"))
-      val crossSubIds = batchGrams.join(hubs, Seq("h"), "left_anti")
+        .select(col("h")))
+      val crossSubIds = sizedLocalCheckpoint(batchGrams.join(hubs, Seq("h"), "left_anti")
         .join(admMatches, Seq("h"))
         .groupBy("id", "aid").agg(count(lit(1)).as("ns"))
         .filter(col("ns") >= minShared)
-        .select(col("id")).distinct()
-        .localCheckpoint(true)
+        .select(col("id")).distinct())
       val candGrams = batchGrams.join(crossSubIds, Seq("id"), "left_anti")
         .join(hubs, Seq("h"), "left_anti")
-      val innerSubIds = Dedup.dupClusters(
+      val innerSubIds = sizedLocalCheckpoint(Dedup.dupClusters(
           SubstringDedup.postingPairs(candGrams, minShared, maxDf))
-        .filter(col("id") =!= col("cluster_id")).select(col("id"))
-        .localCheckpoint(true)
+        .filter(col("id") =!= col("cluster_id")).select(col("id")))
       val subFailIds = crossSubIds.unionByName(innerSubIds)
       // ---- fates + admitted-state absorption (all from checkpointed ids)
-      val admittedIds = lmPassIds
+      val admittedIds = sizedLocalCheckpoint(lmPassIds
         .join(exactFailIds, Seq("id"), "left_anti")
-        .join(subFailIds, Seq("id"), "left_anti")
-        .localCheckpoint(true)
+        .join(subFailIds, Seq("id"), "left_anti"))
       fates += lmVerdict.filter(col("s1") =!= "pass")
         .select(col("id"), col("s1").as("reason"))
         .unionByName(exactFailIds.select(col("id"), lit("exact").as("reason")))
@@ -161,13 +162,11 @@ object IngestPipeline {
         .select(col("id"), lit(v).as("wave"), lit(0).as("admitted"), col("reason"))
         .unionByName(admittedIds.select(col("id"), lit(v).as("wave"),
           lit(1).as("admitted"), lit("ok").as("reason")))
-      admSigs = admSigs.unionByName(
-        batchSig.join(admittedIds, Seq("id"), "left_semi").select("sig")
-          .localCheckpoint(true))
-      admGrams = admGrams.unionByName(
+      admSigs = admSigs.unionByName(sizedLocalCheckpoint(
+        batchSig.join(admittedIds, Seq("id"), "left_semi").select("sig")))
+      admGrams = admGrams.unionByName(sizedLocalCheckpoint(
         batchGrams.join(admittedIds, Seq("id"), "left_semi")
-          .select(col("id").as("aid"), col("h"))
-          .localCheckpoint(true))
+          .select(col("id").as("aid"), col("h"))))
       batchGrams.unpersist()
       admMatches.unpersist()
     }

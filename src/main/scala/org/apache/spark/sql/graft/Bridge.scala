@@ -2,7 +2,9 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Converters between the public `Column` API and catalyst `Expression`s.
   *
@@ -37,4 +39,39 @@ object Bridge {
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** An eager `localCheckpoint` whose statistics are its materialized
+    * size. A plain checkpoint keeps the logical estimate of the plan it
+    * froze, which for a join is a product of sizes: a 15 KB id set then
+    * plans as a sort-merge join, both sides shuffle, and AQE turns the
+    * join into a broadcast only after the shuffles ran. Sized, the
+    * planner's own `autoBroadcastJoinThreshold` rule decides from the
+    * start; above the threshold the plan is what it was.
+    */
+  def sizedLocalCheckpoint(df: DataFrame): DataFrame = withCachedSize(df.localCheckpoint(true))
+
+  /** `cp` (an eager local checkpoint) with `originStats` set to the
+    * bytes its RDD holds in memory and on disk, read from the storage
+    * report (driver-side, no job). The report is kept by a listener, so
+    * the bus is drained first: every block the checkpoint job stored is
+    * then counted, and the size does not depend on listener timing. An
+    * RDD with no partitions stores no block and is absent from the
+    * report; its size is 0. `cp` itself when its plan is not an RDD scan
+    * or not every partition is cached.
+    */
+  private[graft] def withCachedSize(cp: DataFrame): DataFrame = cp.queryExecution.logical match {
+    case r: LogicalRDD =>
+      val spark = cp.sparkSession
+      drainListenerBus(spark)
+      val bytes =
+        if (r.rdd.getNumPartitions == 0) Some(0L)
+        else spark.sparkContext.getRDDStorageInfo.find(_.id == r.rdd.id)
+          .filter(i => i.numCachedPartitions == i.numPartitions)
+          .map(i => i.memSize + i.diskSize)
+      bytes.fold(cp) { n =>
+        ofRows(spark, r.copy()(spark.asInstanceOf[classic.SparkSession],
+          Some(Statistics(BigInt(n))), Some(r.constraints)))
+      }
+    case _ => cp
+  }
 }

@@ -1,6 +1,15 @@
 package graft.ext
 
+import scala.collection.mutable.ListBuffer
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.TestSpark
 
 class IngestPipelineSpec extends AnyFunSuite {
@@ -103,5 +112,66 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(f(4L) == ((1, 0, "lm")))
     assert(f(2L) == ((2, 1, "ok")),
       s"overlap with a REJECTED doc must not block admission: ${f(2L)}")
+  }
+
+  /** Every node of an initial physical plan, with each cached frame's
+    * scan expanded into the initial plan that fills the cache.
+    */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan.flatMap {
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    })
+    case p => Seq(p)
+  }
+
+  test("decided id sets plan as broadcast joins in the initial plans") {
+    // The decided frames (lmVerdict, exactFailIds, hubs, crossSubIds,
+    // innerSubIds, admittedIds, the absorbed sigs and grams) are the
+    // checkpoints whose statistics are their stored bytes; a semi/anti
+    // join whose build side reads only those is a join against a decided
+    // set, and must plan as a broadcast from the start, with no AQE
+    // replanning after both sides shuffled.
+    val plans = ListBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.sparkPlan }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val run = randText(5, 60)
+    // the input's logical estimate is far above the broadcast threshold,
+    // as a bench corpus's is (a plain checkpoint of a join keeps the
+    // product of its sides' sizes), so only a checkpoint that carries
+    // its real size can plan a decided set's join as a broadcast
+    val docs = Seq(0L -> seedText, 3L -> s"$seedText $run", 1L -> "zz",
+        4L -> fluent("uaa", "ubb"), 7L -> fluent("uaa", "ubb"),
+        2L -> fluent("ucc", "udd", run), 5L -> fluent("uee", "uff", run),
+        8L -> fluent("ugg", "uhh")).toDF("doc_id", "text")
+      .join(spark.range(0, 100000).toDF("doc_id"), "doc_id")
+      .localCheckpoint(true)
+    assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes >
+      SQLConf.get.autoBroadcastJoinThreshold)
+    spark.listenerManager.register(listener)
+    try {
+      IngestPipeline.waveFates(docs, "doc_id", "text", nWaves = 3,
+        maxAvgNllFrac = 0.98, L = 40, w = 8, minShared = 1).collect()
+      Bridge.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    val stored = spark.sparkContext.getRDDStorageInfo
+      .map(i => i.id -> BigInt(i.memSize + i.diskSize)).toMap
+    def decided(p: SparkPlan) = p match {
+      case r: RDDScanExec => r.logicalLink.exists(l => stored.get(r.rdd.id).contains(l.stats.sizeInBytes))
+      case _ => false
+    }
+    val idSetJoins = plans.toSeq.flatMap(nodes).collect {
+      case j: BaseJoinExec if (j.joinType == LeftSemi || j.joinType == LeftAnti) &&
+          j.right.collectLeaves().forall(decided) => j
+    }.distinct
+    val notBroadcast = idSetJoins.filterNot(_.isInstanceOf[BroadcastHashJoinExec])
+    assert(notBroadcast.isEmpty, notBroadcast.mkString("\n"))
+    val buildSides = idSetJoins.map(_.right.collectLeaves().map(_.output.map(_.name))).toSet
+    assert(Set(Seq(Seq("id", "s1")), Seq(Seq("id")), Seq(Seq("h")), Seq(Seq("id"), Seq("id")))
+      .subsetOf(buildSides), buildSides)
+    assert(idSetJoins.size >= 2 * 9, idSetJoins.mkString("\n"))
   }
 }
