@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The reference's full run lifecycle (start.py:44-60): extract every
   * table concurrently with fail-fast cancellation, then materialize the
@@ -81,21 +80,21 @@ object Runner {
   }
 
   /** post_update (reference post_update.py:22-91): the per-tribe
-    * aggregate tables `tribe_active` and `tribe_stats` under `baseDir`.
-    * `activeKeys` is the per-run delta (the `player_new` analog);
-    * `touchedKeys` the members whose membership may have moved.
+    * aggregate tables `tribe_active` and `tribe_stats` under `baseDir`,
+    * rebuilt from scratch on every call as the reference does.
+    * `activeKeys` is the per-run delta (the `player_new` analog). A full
+    * rebuild carries no row over, so a deleted tribe or player leaves no
+    * stale aggregate behind.
     *
-    * Incremental when the previous aggregates are in place: only tribes
-    * invalidated by this run's member delta are recomputed
-    * ([[TribeAgg.incrementalUpdate]]), everything else carries over — per-run
-    * cost ∝ delta instead of corpus, the shape the reference's full rebuild
-    * cannot take. In full otherwise (first run, or an interrupted swap).
+    * `oldMembers` and `touchedKeys` are not read: a full rebuild needs
+    * neither. They stay in the signature because existing callers, the
+    * perfbench harness among them, pass them.
     *
-    * One write path either way: both tables are staged in `.next`
-    * directories, a marker is set, each staged directory replaces its live
-    * one ([[Commit.replaceDir]]), the marker is cleared. The live
-    * directories are never written in place, so a crash at any step leaves
-    * either the previous pair intact or the marker set.
+    * Both tables are staged in `.next` directories, a marker is set, each
+    * staged directory replaces its live one ([[Commit.replaceDir]]), the
+    * marker is cleared. The live directories are never written in place,
+    * so a crash at any step leaves either the previous pair intact or the
+    * marker set.
     */
   def postUpdateIncremental(spark: SparkSession, baseDir: String,
                             tribe: DataFrame, oldMembers: DataFrame,
@@ -108,38 +107,16 @@ object Runner {
     val activeDir = s"$baseDir/tribe_active"
     val statsDir = s"$baseDir/tribe_stats"
     val (aTmp, sTmp) = (s"$activeDir.next", s"$statsDir.next")
-    // the two-directory swap cannot be atomic as a pair; the marker makes
-    // a crash between the swaps detectable — next run rebuilds in full
-    // instead of silently carrying one table a run behind the other
+    // the two-directory swap cannot be atomic as a pair; the marker records
+    // that a crash between the swaps may have left one table a run ahead of
+    // the other, until the next call's rebuild replaces both and clears it
     val marker = Paths.get(s"$baseDir/_agg_swap_incomplete")
-    // a live table counts only once its job committed (`_SUCCESS`): a
-    // directory a killed in-place writer left holds only `_temporary/`
-    def committed(dir: String) = Files.exists(Paths.get(dir, "_SUCCESS"))
-    val havePrev = committed(activeDir) && committed(statsDir) && !Files.exists(marker)
-    if (havePrev) {
-      // activeKeys must invalidate tribes too: a member whose row changed
-      // in place is active this run even if its membership didn't move —
-      // union it into the touched set instead of trusting the caller
-      val touchedAll = touchedKeys
-        .withColumnRenamed(touchedKeys.columns.head, "__t")
-        .unionByName(activeKeys
-          .withColumnRenamed(activeKeys.columns.head, "__t"))
-      val affected = TribeAgg.affectedTribes(oldMembers, members, touchedAll,
-        memberTribeFk, memberKey)
-      val (newActive, newStats) = TribeAgg.incrementalUpdate(
-        spark.read.parquet(activeDir), spark.read.parquet(statsDir),
-        tribe, members, facts, activeKeys, affected,
-        tribeKey, memberTribeFk, memberKey, factKey, statCols)
-      newActive.write.mode(SaveMode.Overwrite).parquet(aTmp)
-      newStats.write.mode(SaveMode.Overwrite).parquet(sTmp)
-    } else {
-      TribeAgg.tribeActive(tribe, members, activeKeys, tribeKey, memberTribeFk, memberKey)
-        .write.mode(SaveMode.Overwrite).parquet(aTmp)
-      TribeAgg.tribeStats(tribe, members, facts, activeKeys, tribeKey,
-          memberTribeFk, memberKey, factKey, statCols,
-          precomputed = Some(spark.read.parquet(aTmp)))
-        .write.mode(SaveMode.Overwrite).parquet(sTmp)
-    }
+    TribeAgg.tribeActive(tribe, members, activeKeys, tribeKey, memberTribeFk, memberKey)
+      .write.mode(SaveMode.Overwrite).parquet(aTmp)
+    TribeAgg.tribeStats(tribe, members, facts, activeKeys, tribeKey,
+        memberTribeFk, memberKey, factKey, statCols,
+        precomputed = Some(spark.read.parquet(aTmp)))
+      .write.mode(SaveMode.Overwrite).parquet(sTmp)
     Files.writeString(marker, "swap")
     Commit.replaceDir(aTmp, activeDir)
     Commit.replaceDir(sTmp, statsDir)

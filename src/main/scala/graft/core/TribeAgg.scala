@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derived per-group aggregate statistics — the reference's `post_update`
@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: the dim side (`tribe`/`nation`) is tiny → broadcast; the
   * delta key set is small → broadcast; the only shuffle is the final
   * hash aggregate on the group key, with map-side partial aggregation.
+  *
+  * There is no incremental form. Like the reference, every post_update
+  * ([[Runner.postUpdateIncremental]]) recomputes both tables over all
+  * tribes, so no row outlives the tribe or member it was computed from.
   */
 object TribeAgg {
   /** group_tribe_active (reference: src/post_update.py:22-39):
@@ -76,59 +80,5 @@ object TribeAgg {
     val statOut = statCols.map(n => (col(s"__sum_$n") / col("members_sqrt")).as(n))
     sums.join(broadcast(active), Seq(tribeKey), "inner")
       .select(col(tribeKey) +: col("members") +: col("active") +: statOut: _*)
-  }
-
-  /** Tribes whose aggregates a member delta invalidates: every tribe a
-    * touched member belongs to NOW plus every tribe it belonged to
-    * BEFORE (covers moves and deletions — the old tribe loses the
-    * member, the new tribe gains it). Both joins are semi joins against
-    * the (small, broadcast) touched-key set.
-    */
-  def affectedTribes(oldMembers: DataFrame, newMembers: DataFrame,
-                     touchedKeys: DataFrame, memberTribeFk: String,
-                     memberKey: String): DataFrame = {
-    val keys = broadcast(touchedKeys
-      .withColumnRenamed(touchedKeys.columns.head, "__tk"))
-    def tribesOf(m: DataFrame) =
-      m.join(keys, col(memberKey) === col("__tk"), "left_semi")
-        .select(col(memberTribeFk).as("__affected"))
-    tribesOf(oldMembers).unionByName(tribesOf(newMembers)).distinct()
-  }
-
-  /** Incremental maintenance of the per-tribe aggregate tables — the
-    * 100 TB form of the reference's post_update, which rebuilds both
-    * tables from scratch every run (post_update.py:22-91). Only tribes
-    * in `affected` (see [[affectedTribes]]) are recomputed, over
-    * members/facts PRUNED to those tribes; every other row carries over
-    * from the previous run with `active` reset to 0 (activity is
-    * per-run: a tribe with no touched member this run has no active
-    * members this run, by definition).
-    *
-    * Returns (tribeActive, tribeStats), equal to the full recompute
-    * (TribeAggSpec asserts it), with per-run cost ∝ delta, not corpus:
-    * the facts join scans only rows of affected tribes' members.
-    */
-  def incrementalUpdate(oldActive: DataFrame, oldStats: DataFrame,
-                        tribe: DataFrame, members: DataFrame, facts: DataFrame,
-                        activeKeys: DataFrame, affected: DataFrame,
-                        tribeKey: String, memberTribeFk: String,
-                        memberKey: String, factKey: String,
-                        statCols: Seq[String]): (DataFrame, DataFrame) = {
-    val aff = broadcast(affected
-      .withColumnRenamed(affected.columns.head, "__affected"))
-    def pruneTribe(df: DataFrame, k: String) =
-      df.join(aff, col(k) === col("__affected"), "left_semi")
-    val tribeAff = pruneTribe(tribe, tribeKey)
-    val membersAff = pruneTribe(members, memberTribeFk)
-    val activeAff = tribeActive(tribeAff, membersAff, activeKeys,
-      tribeKey, memberTribeFk, memberKey)
-    val statsAff = tribeStats(tribeAff, membersAff, facts, activeKeys,
-      tribeKey, memberTribeFk, memberKey, factKey, statCols,
-      precomputed = Some(activeAff))
-    def carryOver(old: DataFrame) =
-      old.join(aff, col(tribeKey) === col("__affected"), "left_anti")
-        .withColumn("active", lit(0L))
-    (carryOver(oldActive).unionByName(activeAff),
-      carryOver(oldStats).unionByName(statsAff))
   }
 }

@@ -1591,31 +1591,26 @@ object Catalog {
               |ORDER BY ct.n_nationkey""".stripMargin)),
 
     Entry("group_tribe_stats_incremental",
-      (s, d) => { // the incremental-maintenance path, oracle-proven: build
-        // "previous-run" aggregates from a reduced membership (custkey
-        // % 50 == 0 absent), then incrementally fold this run's delta
-        // (joiners + changed members) — the result must equal the full
-        // cold recompute, which is exactly the shared oracle
+      (s, d) => { // the post_update lifecycle re-run, oracle-proven: a
+        // first Runner.postUpdateIncremental over a reduced membership
+        // (custkey % 50 == 0 absent) with no delta, then a second over the
+        // full membership with this run's delta — the second run's
+        // tribe_stats must equal the cold recompute, the shared oracle
         val n = Tables.load(s, d, "nation")
         val c = cust(s, d)
         val o = Tables.load(s, d, "orders")
           .withColumn("o_totalprice", col("o_totalprice").cast("decimal(18,2)"))
+        val dir = scratchDir("group_tribe_stats_incremental", d)
         val oldMembers = c.filter(col("c_custkey") % 50 =!= 0)
-        val joiners = c.filter(col("c_custkey") % 50 === 0).select("c_custkey")
-        val touched = joiners.unionByName(activeDelta(s, d)
-          .withColumnRenamed("o_custkey", "c_custkey")).distinct()
-        val noDelta = joiners.limit(0)
-        val oldActive = TribeAgg.tribeActive(n, oldMembers, noDelta,
-          "n_nationkey", "c_nationkey", "c_custkey")
-        val oldStats = TribeAgg.tribeStats(n, oldMembers, o, noDelta,
-          "n_nationkey", "c_nationkey", "c_custkey", "o_custkey",
-          Seq("o_totalprice"), precomputed = Some(oldActive))
-        val affected = TribeAgg.affectedTribes(oldMembers, c, touched,
-          "c_nationkey", "c_custkey")
-        val (_, stats) = TribeAgg.incrementalUpdate(oldActive, oldStats,
-          n, c, o, activeDelta(s, d), affected,
-          "n_nationkey", "c_nationkey", "c_custkey", "o_custkey", Seq("o_totalprice"))
-        stats.select(col("n_nationkey"), col("members"), col("active"),
+        val delta = activeDelta(s, d)
+        def postUpdate(members: DataFrame, active: DataFrame): Unit =
+          Runner.postUpdateIncremental(s, dir, n, oldMembers, members, o,
+            active, active, "n_nationkey", "c_nationkey", "c_custkey",
+            "o_custkey", Seq("o_totalprice"))
+        postUpdate(oldMembers, delta.limit(0))
+        postUpdate(c, delta)
+        s.read.parquet(s"$dir/tribe_stats")
+          .select(col("n_nationkey"), col("members"), col("active"),
             round(col("o_totalprice"), 6).as("o_totalprice"))
           .orderBy("n_nationkey")
       },

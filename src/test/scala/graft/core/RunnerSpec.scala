@@ -110,19 +110,19 @@ class RunnerSpec extends AnyFunSuite {
     assert(warm.count() == 3)
   }
 
-  test("postUpdateIncremental: equals full rebuild, carries over untouched tribes") {
+  test("postUpdateIncremental: equals full rebuild, keeps no stale rows") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_inc_pu").toString
     val tribe = Seq(10, 20, 30).toDF("t_id")
     val oldM = Seq((1, 10), (2, 20), (3, 30)).toDF("m_id", "m_tribe")
     val facts0 = Seq((1, 5.0), (2, 7.0), (3, 9.0)).toDF("p_id", "stat")
-    // cold: no previous aggregates -> full rebuild fallback
+    // cold: no previous aggregates
     Runner.postUpdateIncremental(spark, base, tribe, oldM, oldM, facts0,
       Seq(1).toDF("k"), Seq(1).toDF("k"),
       "t_id", "m_tribe", "m_id", "p_id", Seq("stat"))
     assert(spark.read.parquet(base + "/tribe_stats").count() == 3)
 
-    // warm: member 1 changed (tribe 10 affected); tribes 20/30 untouched
+    // warm: member 1 changed; tribes 20/30 have no active member this run
     val facts1 = Seq((1, 6.0), (2, 7.0), (3, 9.0)).toDF("p_id", "stat")
     Runner.postUpdateIncremental(spark, base, tribe, oldM, oldM, facts1,
       Seq(1).toDF("k"), Seq(1).toDF("k"),
@@ -133,8 +133,21 @@ class RunnerSpec extends AnyFunSuite {
       "t_id", "m_tribe", "m_id", "p_id", Seq("stat"), None)
       .collect().map(r => r.getInt(0) -> ((r.getLong(2), r.getDouble(3)))).toMap
     assert(inc == full)
-    assert(inc(10)._2 == 6.0 && inc(10)._1 == 1L) // recomputed, active
-    assert(inc(20) == ((0L, 7.0)))                // carried over, active reset
+    assert(inc(10)._2 == 6.0 && inc(10)._1 == 1L) // changed, active
+    assert(inc(20) == ((0L, 7.0)))                // unchanged, not active
+
+    // tribe 30 is deleted and player 2's fact row is gone, and the caller
+    // passes no touched member: neither may leave a row behind
+    val tribe2 = Seq(10, 20).toDF("t_id")
+    val facts2 = Seq((1, 4.0), (3, 9.0)).toDF("p_id", "stat")
+    Runner.postUpdateIncremental(spark, base, tribe2, oldM, oldM, facts2,
+      Seq(1).toDF("k"), Seq.empty[Int].toDF("k"),
+      "t_id", "m_tribe", "m_id", "p_id", Seq("stat"))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(aggRows(base, "tribe_active") == rows(TribeAgg.tribeActive(tribe2, oldM,
+      Seq(1).toDF("k"), "t_id", "m_tribe", "m_id")))
+    assert(aggRows(base, "tribe_stats") == rows(TribeAgg.tribeStats(tribe2, oldM, facts2,
+      Seq(1).toDF("k"), "t_id", "m_tribe", "m_id", "p_id", Seq("stat"), None)))
   }
 
   /** Inputs of one post_update call over a fixed three-tribe dimension. */
@@ -239,9 +252,8 @@ class RunnerSpec extends AnyFunSuite {
 
   // Before the marker the previous pair is intact and the crashed call is
   // retried. With the marker left behind, the next call is the following
-  // run, with its own delta: only the full rebuild the marker forces gives
-  // the uninterrupted tables, since carrying over rows from a pair a run
-  // behind would miss the crashed run's delta.
+  // run, with its own delta: its full rebuild gives the uninterrupted
+  // tables, since it reads nothing from a pair that may be a run behind.
   for ((run, warm) <- Seq("first" -> false, "warm" -> true); (point, crash) <- crashPoints)
     test(s"post_update crash on a $run run, $point: the next call equals an uninterrupted run") {
       import java.nio.file.{Files, Paths}

@@ -41,44 +41,4 @@ class TribeAggSpec extends AnyFunSuite {
     val cm = cold.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(cm(10) == 3L)
   }
-
-  test("incrementalUpdate equals full recompute under change/move/add/delete") {
-    import org.apache.spark.sql.functions._
-    val tribe = Seq(10, 20, 30, 40).toDF("t_id")
-    val oldMembers = Seq((1, 10), (2, 10), (3, 20), (4, 30), (5, 40)).toDF("m_id", "m_tribe")
-    // this run: member 3 moves 20 -> 30, member 5 deleted, member 6 joins 10,
-    // member 1 changed in place (the "active" delta)
-    val newMembers = Seq((1, 10), (2, 10), (3, 30), (4, 30), (6, 10)).toDF("m_id", "m_tribe")
-    val touched = Seq(1, 3, 5, 6).toDF("k") // changed + moved + deleted + new
-    val delta = Seq(1, 3, 6).toDF("changed_id") // activeKeys ⊆ touched
-    val facts = Seq((1, 7.0), (2, 3.0), (3, 5.0), (4, 11.0), (6, 2.0)).toDF("p_id", "stat")
-
-    // previous run's committed aggregates (stale active counts on purpose)
-    val oldActive = TribeAgg.tribeActive(tribe, oldMembers, Seq(2).toDF("c"),
-      "t_id", "m_tribe", "m_id")
-    val oldStats = TribeAgg.tribeStats(tribe, oldMembers,
-      Seq((1, 1.0), (2, 3.0), (3, 4.0), (4, 11.0), (5, 9.0)).toDF("p_id", "stat"),
-      Seq(2).toDF("c"), "t_id", "m_tribe", "m_id", "p_id", Seq("stat"), None)
-
-    val affected = TribeAgg.affectedTribes(oldMembers, newMembers, touched, "m_tribe", "m_id")
-    // tribes 10 (member 1 changed, 6 joined), 20 (3 left), 30 (3 arrived), 40 (5 left)
-    assert(affected.collect().map(_.getInt(0)).toSet == Set(10, 20, 30, 40))
-
-    val (incActive, incStats) = TribeAgg.incrementalUpdate(oldActive, oldStats,
-      tribe, newMembers, facts, delta, affected,
-      "t_id", "m_tribe", "m_id", "p_id", Seq("stat"))
-    val fullActive = TribeAgg.tribeActive(tribe, newMembers, delta, "t_id", "m_tribe", "m_id")
-    val fullStats = TribeAgg.tribeStats(tribe, newMembers, facts, delta,
-      "t_id", "m_tribe", "m_id", "p_id", Seq("stat"), None)
-
-    def mA(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(mA(incActive) == mA(fullActive))
-    def mS(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2),
-        BigDecimal(r.getDouble(3)).setScale(9, BigDecimal.RoundingMode.HALF_UP)))).toMap
-    assert(mS(incStats) == mS(fullStats))
-    // tribe 40 lost its only member: gone from both, like the full recompute
-    assert(!mA(incActive).contains(40) && !mS(incStats).contains(40))
-  }
 }
