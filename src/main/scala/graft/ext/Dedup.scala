@@ -1,8 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Deduplication operators for large-scale training-data pipelines
   * (extension beyond reference parity, SURVEY.md §7.5).
@@ -247,35 +251,93 @@ object Dedup {
   }
 
   /** Duplicate-cluster resolution: connected components over candidate
-    * pairs (from LSH / simhash / cosine) by iterative min-label
-    * propagation — each doc converges to the smallest id reachable from
-    * it, which becomes the cluster's canonical representative.
+    * pairs (from LSH / simhash / cosine). Each doc is labelled with the
+    * smallest id reachable from it, which becomes the cluster's
+    * canonical representative. Returns `(id, cluster_id)`, one row per
+    * distinct id of `pairs`; a null id keeps a null label and joins
+    * nothing.
     *
-    * Scale: per iteration one join + one aggregate on the edge list plus
-    * a pointer-jump, giving O(log diameter) rounds — 20 covers chains of
-    * ~10^6 (sf0.1's 5000-doc corpus produced chains past the one-hop
-    * budget that a plain propagation loop needed). Label frame
-    * checkpointed per round, edges reused. Label checkpoints stay
-    * unsized: sized, the co-partitioned round joins plan as broadcasts
-    * (ingest-gate round 1 measured 4 → 7 stages).
+    * Two regimes, chosen from the counted symmetric edge list by the
+    * planner's own rule: the list is small when `nEdges × 2 ×
+    * idType.defaultSize` fits `autoBroadcastJoinThreshold` (a threshold
+    * of -1 disables it).
+    *  - Small: the edges are collected and a min-root union-find runs on
+    *    the driver, comparing ids with Catalyst's ordering for their type
+    *    (the ordering `min` uses). The result is a local relation. At the
+    *    10 MB default this holds at most about 330k long-id pairs on the
+    *    driver. An ingest batch's in-batch pair graph is this size: two
+    *    jobs (the count and the collect) instead of a shuffle loop.
+    *  - Large: iterative min-label propagation. Per iteration one join +
+    *    one aggregate on the edge list, a hook of each label's own label
+    *    and a pointer-jump, giving O(log n) rounds — 20 covers chains of
+    *    ~10^6 (a shuffled-id chain of 200k nodes converges in 16). Label
+    *    frame checkpointed per round, edges reused. Label checkpoints
+    *    stay unsized: sized, the co-partitioned round joins plan as
+    *    broadcasts (ingest-gate round 1 measured 4 → 7 stages).
+    * Both regimes return the same rows (DedupSpec).
     */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
     val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    // persist BEFORE counting: the edge list's lineage is the whole
+    // upstream candidate pipeline (LSH signatures + verify), and an
+    // uncached count would run it once for the count and again for the
+    // collect or the first round
+    val symP = sym.persist()
+    val nEdges = symP.count()
+    val src = symP.schema("src")
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 && nEdges * 2 * src.dataType.defaultSize <= threshold) {
+      val clusters = unionFindClusters(symP.collect(), src.dataType)
+      symP.unpersist()
+      spark.createDataFrame(clusters.asJava, StructType(Seq(src.copy(name = "id"),
+        src.copy(name = "cluster_id"))))
+    } else propagateLabels(symP, nEdges, maxIter)
+  }
+
+  /** Min-root union-find over a symmetric edge list `(src, dst)`: one
+    * `(id, cluster_id)` row per distinct non-null `src`, labelled with
+    * its component's minimum under Catalyst's ordering, plus `(null,
+    * null)` when a `src` is null. Ids are keyed by that ordering, so
+    * equal ids meet whatever their JVM form (binary ids included).
+    */
+  private def unionFindClusters(edges: Array[Row], idType: DataType): Seq[Row] = {
+    val toKey = CatalystTypeConverters.createToCatalystConverter(idType)
+    val toId = CatalystTypeConverters.createToScalaConverter(idType)
+    val rank = new java.util.TreeMap[Any, Integer](PhysicalDataType.ordering(idType))
+    for (e <- edges if !e.isNullAt(0)) rank.put(toKey(e.get(0)), 0)
+    // rank = position in id order, so a component's least rank is its minimum
+    val keys = new Array[Any](rank.size)
+    var n = 0
+    rank.entrySet.forEach { en => keys(n) = en.getKey; en.setValue(n); n += 1 }
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    for (e <- edges if !e.isNullAt(0) && !e.isNullAt(1)) {
+      val a = find(rank.get(toKey(e.get(0))))
+      val b = find(rank.get(toKey(e.get(1))))
+      if (a < b) parent(b) = a else parent(a) = b
+    }
+    val nullRow = if (edges.exists(_.isNullAt(0))) Seq(Row(null, null)) else Nil
+    keys.indices.map(i => Row(toId(keys(i)), toId(keys(find(i))))) ++ nullRow
+  }
+
+  /** [[dupClusters]]' large regime over the persisted symmetric edge
+    * list `symP` of `nEdges` rows; unpersists it.
+    */
+  private def propagateLabels(symP: DataFrame, nEdges: Long, maxIter: Int): DataFrame = {
+    val spark = symP.sparkSession
     // size the iteration parallelism from the edge count: the CC loop
-    // runs 3-4 shuffle stages per round, and a fixed 32-partition layout
+    // runs 4-5 shuffle stages per round, and a fixed 32-partition layout
     // makes tiny graphs pay ~100 task launches per round for kilobytes of
     // data. One partition per ~500k edges (capped at the cluster's
     // parallelism) keeps rounds 1-task cheap at bench scale and fully
     // parallel at 100 TB scale, where the edge list is delta-sized but
     // still huge.
-    // persist BEFORE counting: the edge list's lineage is the whole
-    // upstream candidate pipeline (LSH signatures + verify), and an
-    // uncached count would run it once for the count and again for the
-    // first round
-    val symP = sym.persist()
-    val nEdges = symP.count()
     val p = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
       nEdges / 500000L + 1L)).toInt
     val edges = symP.repartition(p, col("src")).persist()
@@ -290,12 +352,18 @@ object Dedup {
     while (!converged && iter < maxIter) {
       val propagated = edges.join(labels, edges("src") === labels("id"))
         .groupBy(col("dst").as("id2")).agg(min("label").as("nbr_label"))
-      val relabeled = labels.join(propagated, labels("id") === col("id2"), "left_outer")
-        .select(col("id"), col("label").as("__old"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      // pointer jumping (path halving): adopt the label OF my label —
-      // turns O(diameter) convergence into O(log diameter), which long
-      // duplicate chains need
+      val stepped = labels.join(propagated, labels("id") === col("id2"), "left_outer")
+        .select(col("id"), col("label").as("__old"), col("nbr_label"))
+      // hooking: a node's neighbour minimum also lowers the label OF its
+      // label, so a whole tree moves at once. Without it a chain over
+      // shuffled ids needs O(diameter) rounds (200 nodes: 57, past
+      // maxIter; with it, 8)
+      val hooks = stepped.groupBy(col("__old").as("hid")).agg(min("nbr_label").as("hook"))
+      val relabeled = stepped.join(hooks, col("id") === col("hid"), "left_outer")
+        .select(col("id"), col("__old"),
+          least(col("__old"), col("nbr_label"), col("hook")).as("label"))
+      // pointer jumping (path halving): adopt the label OF my label, so
+      // the members of a hooked tree follow its root
       val lut = relabeled.select(col("id").as("lid"), col("label").as("llabel"))
       // LAZY localCheckpoint + count: the round's single action both
       // materializes the checkpoint blocks (count covers every
@@ -320,7 +388,7 @@ object Dedup {
     * (each a per-item `(id, label)` frame — e.g. text-LSH clusters and
     * perceptual-image-hash groups) into ONE connected-component
     * clustering by unioning each signal's STAR edge set (member ↔ its
-    * group label) and re-running [[dupClusters]] label propagation.
+    * group label) and re-running [[dupClusters]].
     *
     * Star edges preserve each signal's connectivity exactly while
     * keeping the union edge list LINEAR in corpus size — a k-member
@@ -445,8 +513,8 @@ object Dedup {
   /** Full near-dup clustering: MinHash+LSH candidates → Jaccard verify →
     * connected components, with every doc assigned a cluster (singletons
     * label themselves). This is the end-to-end dedup path a training-data
-    * pipeline runs at scale; [[dupClusters]] does the O(log diameter)
-    * label propagation over the verified edge list.
+    * pipeline runs at scale; [[dupClusters]] resolves the verified edge
+    * list.
     */
   def lshDedupClusters(docs: DataFrame, idCol: String, textCol: String,
                        threshold: Double, shingleN: Int = 3, k: Int = 8,

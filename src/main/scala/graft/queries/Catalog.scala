@@ -115,7 +115,7 @@ object Catalog {
     }
 
   /** Memoized cross-modal dedup resolution (id, cluster_id, kept_id) —
-    * the CC label propagation reruns per invocation otherwise (the two
+    * the CC resolution reruns per invocation otherwise (the two
     * input signals are already memoized; the composition is not free).
     */
   private val multimodalCache = new QueryCache("documents.parquet")
@@ -2178,7 +2178,7 @@ object Catalog {
       (s, d) => lshClusters(s, d).orderBy("id"),
       // oracle recomputes the same LSH pipeline independently, with
       // connected components via recursive-CTE BFS reachability (a
-      // different CC algorithm from the Spark side's label propagation)
+      // different CC algorithm from the Spark side's dupClusters)
       Some(s"""WITH RECURSIVE ${Oracles.lshClusterCtesBody}
               |SELECT id, cluster_id FROM clusters ORDER BY 1""".stripMargin)),
 

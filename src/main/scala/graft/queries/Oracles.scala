@@ -902,8 +902,9 @@ object Oracles {
     * cells by the sign pattern of the first 6 dims (an axis-aligned
     * hyperplane bucket — exact, no float-precision ambiguity), then
     * replays the in-cell exact-cosine join and BFS-reachability connected
-    * components. Spark runs min-label propagation + pointer jumping — a
-    * different CC algorithm — so agreement is evidence, not echo.
+    * components. Spark runs `Dedup.dupClusters` (union-find or min-label
+    * propagation) — a different CC algorithm — so agreement is evidence,
+    * not echo.
     */
   /** Shared CTE prefix reconstructing the md5-PLANTED embedding corpus
     * (Catalog.embSemPlanted): base vectors plus a shadow at +1000000

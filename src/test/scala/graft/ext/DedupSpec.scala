@@ -1,7 +1,12 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import graft.TestSpark
 
 class DedupSpec extends AnyFunSuite {
@@ -203,6 +208,84 @@ class DedupSpec extends AnyFunSuite {
     val got = Dedup.dupClusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+  }
+
+  private def withSQLConf[T](kvs: (String, String)*)(f: => T): T = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+  private val broadcastOff = SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key -> "-1"
+  private def sortedRows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+
+  /** `dupClusters(pairs)` in both regimes: the driver union-find at the
+    * default broadcast threshold, label propagation with broadcasting
+    * off. Asserts each took its regime and both return the same rows.
+    */
+  private def bothRegimes(pairs: DataFrame): Seq[org.apache.spark.sql.Row] = {
+    val driver = Dedup.dupClusters(pairs)
+    val propagated = withSQLConf(broadcastOff)(Dedup.dupClusters(pairs))
+    assert(driver.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(!propagated.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(driver.schema == propagated.schema)
+    val rows = sortedRows(driver)
+    assert(rows == sortedRows(propagated))
+    rows
+  }
+
+  test("dupClusters: driver union-find and label propagation return the same rows") {
+    val rnd = new scala.util.Random(12)
+    // disjoint components, one per shape: a 200-node chain over shuffled
+    // ids, a star whose centre is not its minimum, a seeded random graph
+    // (self-loops and repeated edges included), a lone self-loop, and an
+    // edge to a null id
+    val chain = rnd.shuffle((1000L until 1200L).toVector)
+    val star = (301L to 330L).filter(_ != 315L).map(315L -> _)
+    val random = Seq.fill(60)((2000L + rnd.nextInt(40), 2000L + rnd.nextInt(40)))
+    val pairs = ((chain.zip(chain.tail) ++ star ++ random :+ (5L -> 5L))
+        .map { case (a, b) => (Option(a), Option(b)) } :+ (Some(7L) -> None))
+      .toDF("id_a", "id_b")
+    val got = bothRegimes(pairs)
+      .map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> Option(r.get(1))).toMap
+    assert(chain.forall(id => got(Some(id)) == Some(1000L)))
+    assert((301L to 330L).forall(id => got(Some(id)) == Some(301L)))
+    assert(got(Some(5L)) == Some(5L) && got(Some(7L)) == Some(7L) && got(None) == None)
+    // U+FFFF sorts below U+1F600 in UTF-8 (Spark's string order) and
+    // above it in UTF-16 (java.lang.String's)
+    val strs = bothRegimes(Seq("\uD83D\uDE00" -> "\uFFFF").toDF("id_a", "id_b"))
+    assert(strs.map(_.getString(1)).distinct == Seq("\uFFFF"))
+  }
+
+  test("dupClusters: a small graph runs no per-round job and leaves no cache behind") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
+    // one entry per action: AQE submits a query's stages as jobs of its
+    // own, under the query's execution id
+    val actions = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = actions.synchronized {
+        val exec = Option(e.properties.getProperty("spark.sql.execution.id"))
+        actions.getOrElseUpdate(exec.fold(s"job ${e.jobId}")("execution " + _),
+          e.properties.getProperty("callSite.short"))
+      }
+    }
+    def persisted() = spark.sparkContext.getPersistentRDDs
+    val before = persisted()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Dedup.dupClusters(pairs).collect()
+      Bridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the count, the edge collect and the consumer's own job, at most
+    assert(actions.size <= 3, actions.mkString("\n"))
+    assert((persisted() -- before.keys).isEmpty)
+    // propagation leaves only its label checkpoints, which back its result
+    val before2 = persisted()
+    withSQLConf(broadcastOff)(Dedup.dupClusters(pairs).collect())
+    val left = persisted() -- before2.keys
+    assert(left.values.forall(_.isCheckpointed), left)
   }
 
   test("lshDedupClusters: planted near-dups recovered through the full LSH path") {
