@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 /** Hash-bucketed versioned snapshot layout — the delta-proportional
   * storage scheme for continuously-maintained state
@@ -33,11 +34,14 @@ object BucketedSnapshot {
     pmod(xxhash64(col(keyCol).cast("string")), lit(nBuckets.toLong)).cast("int")
 
   /** Read one table ("snapshot" | "state") of `version`, pruned to the
-    * given buckets (None = all). The `__b` partition column stays visible.
+    * given buckets (None = all). The `__b` partition column stays visible
+    * as an int. The schema comes from a bucket file's footer on the
+    * driver, so the read starts no Spark job ([[Tables.readCommitted]]).
     */
   def read(spark: SparkSession, baseDir: String, what: String, version: Long,
            buckets: Option[Seq[Int]] = None): DataFrame = {
-    val df = spark.read.parquet(s"$baseDir/$what/v=$version")
+    val df = Tables.readCommitted(spark, s"$baseDir/$what/v=$version",
+      Some(StructField(BucketCol, IntegerType)))
     buckets.fold(df)(bs => df.filter(col(BucketCol).isin(bs: _*)))
   }
 

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Output data layout for scan efficiency at scale.
   *
@@ -54,10 +55,13 @@ object Layout {
   /** Write `df` clustered along the z-order curve of `zCols` (numeric).
     * One min/max pass sizes the curve (at 100 TB, run it on a sample —
     * see [[zorderValue]] on clamping), then one range-partitioned write;
-    * the curve column itself is not persisted. A one-column curve is
-    * monotone in its column, so one column is the range-sorted writer
-    * ([[writeSorted]]) with no stats pass: its files get key-disjoint
-    * ranges at least as tight as the curve's 16-bit buckets.
+    * the curve column itself is not persisted. The min/max pass, the
+    * write's range sample and its shuffle each read `df`, so an input
+    * that is not cached yet is persisted for the call and unpersisted
+    * after. A one-column curve is monotone in its column, so one column
+    * is the range-sorted writer ([[writeSorted]]) with no stats pass: its
+    * files get key-disjoint ranges at least as tight as the curve's
+    * 16-bit buckets.
     */
   def writeZordered(df: DataFrame, dir: String, zCols: Seq[String],
                     numFiles: Int, maxRecordsPerFile: Long = 5000000L,
@@ -66,27 +70,31 @@ object Layout {
       writeSorted(df, dir, zCols, numFiles, maxRecordsPerFile)
       return
     }
-    // shrink per-column bits for wide z keys so the interleave always
-    // fits one long — locality degrades gracefully instead of throwing
-    val useBits = math.max(1, math.min(bits, 63 / math.max(zCols.size, 1)))
-    val aggs = zCols.flatMap(c => Seq(min(col(c)).cast("long"), max(col(c)).cast("long")))
-    val stats = df.agg(aggs.head, aggs.tail: _*).head()
-    if (zCols.indices.exists(i => stats.isNullAt(2 * i) || stats.isNullAt(2 * i + 1))) {
-      // empty input or an all-null z column: no curve to build on that
-      // dimension — degrade to the plain sorted writer rather than NPE
-      writeSorted(df, dir, zCols, numFiles, maxRecordsPerFile)
-      return
-    }
-    // null z-column values clamp to bucket 0 (curve origin) via
-    // greatest(0, null) — deliberate: they stay clustered together
-    val mins = zCols.indices.map(i => stats.getLong(2 * i))
-    val maxs = zCols.indices.map(i => stats.getLong(2 * i + 1))
-    df.withColumn("__z", zorderValue(zCols.map(col), mins, maxs, useBits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(dir)
+    val owned = df.storageLevel == StorageLevel.NONE
+    if (owned) df.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // shrink per-column bits for wide z keys so the interleave always
+      // fits one long — locality degrades gracefully instead of throwing
+      val useBits = math.max(1, math.min(bits, 63 / math.max(zCols.size, 1)))
+      val aggs = zCols.flatMap(c => Seq(min(col(c)).cast("long"), max(col(c)).cast("long")))
+      val stats = df.agg(aggs.head, aggs.tail: _*).head()
+      if (zCols.indices.exists(i => stats.isNullAt(2 * i) || stats.isNullAt(2 * i + 1))) {
+        // empty input or an all-null z column: no curve to build on that
+        // dimension — degrade to the plain sorted writer rather than NPE
+        writeSorted(df, dir, zCols, numFiles, maxRecordsPerFile)
+        return
+      }
+      // null z-column values clamp to bucket 0 (curve origin) via
+      // greatest(0, null) — deliberate: they stay clustered together
+      val mins = zCols.indices.map(i => stats.getLong(2 * i))
+      val maxs = zCols.indices.map(i => stats.getLong(2 * i + 1))
+      df.withColumn("__z", zorderValue(zCols.map(col), mins, maxs, useBits))
+        .repartitionByRange(numFiles, col("__z"))
+        .sortWithinPartitions(col("__z"))
+        .drop("__z")
+        .write.mode(SaveMode.Overwrite)
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+        .parquet(dir)
+    } finally if (owned) df.unpersist()
   }
 }

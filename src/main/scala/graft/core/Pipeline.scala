@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Warm CDC topology + ordered versioned commit — the composition the
@@ -26,6 +26,10 @@ object Pipeline {
     */
   val DefaultMaxDeletes = 100000L
 
+  /** What [[warm]] returns. `kinds` is the one persisted frame, filled
+    * when warm returns; `newSnapshot`, `changelog` and `newState` are lazy
+    * plans over it that the commit's three writes run.
+    */
   final case class WarmResult(
     kinds: DataFrame,        // (key*, kind, sig): sig set on changed/new rows only
     newSnapshot: DataFrame,  // post-apply table state
@@ -33,13 +37,11 @@ object Pipeline {
     newState: DataFrame,     // (key*, sig) cache for the next run
     counts: Map[String, Long] // rows per kind: changed/new/deleted/unchanged
   ) {
-    /** Release the frames warm() pinned; call after committing. Repeated
-      * warm runs (continuous apply) leak cache entries without this.
+    /** Release the classification warm() pinned; call after committing.
+      * Repeated warm runs (continuous apply) leak cache entries without
+      * this.
       */
-    def release(): Unit = {
-      kinds.unpersist()
-      newSnapshot.unpersist()
-    }
+    def release(): Unit = kinds.unpersist()
   }
 
   /** How a committed snapshot's files are laid out (reference:
@@ -74,12 +76,21 @@ object Pipeline {
     * reference download.py:437-441 injects score exprs into the keyed
     * fetch) to incoming rows, so a snapshot that carries score columns
     * round-trips through warm runs: pass
-    * `Scores.withOverall(Scores.withScores(_))` to match.
+    * `Scores.withOverall(Scores.withScores(_))` to match. It must keep
+    * the key columns and one row per fetched row.
     *
-    * `kinds` is persisted here: the classify join feeds four downstream
-    * consumers (per-kind counts, changelog, fetch, state) and is the
-    * dominant cost — without the persist it re-executes per action. Its
-    * per-kind counts ([[WarmResult.counts]]) are the one job warm runs.
+    * Stage shape. `kinds`, the classify join, is persisted: it feeds the
+    * counts, the changelog, the fetch and both next tables. Warm runs one
+    * job: a `noop` write of `kinds` that fills its cache and observes the
+    * per-kind counts ([[WarmResult.counts]]) on the way, so the counts
+    * cost no aggregate stage. Everything else is lazy and runs in the
+    * commit's writes. Each next table is its old rows minus ONE delta-key
+    * set `upd` (the changed, new and deleted keys; only the touched ones
+    * when the delete breaker trips) plus the touched keys' new rows, so
+    * each write builds one broadcast of `upd`, the snapshot one more of
+    * the touched keys for the fetch, and no build side scans the source.
+    * `newSnapshot` is not persisted: the commit's write is its only
+    * consumer.
     *
     * `state`: the committed (key, sig) signature cache from the previous
     * run; absent (legacy/cold), it is the snapshot's own signatures
@@ -87,14 +98,14 @@ object Pipeline {
     * reference's hash side-table protocol, download.py:89-111) — a
     * committed state means the snapshot's data columns are never
     * re-hashed. The next state is maintained incrementally: the state
-    * minus deleted keys, upserted with the classify's own signatures of
-    * the RAW source rows of touched keys (the reference's `{t}_hashes`
-    * update, download.py:577-583), so derived columns (normalized names)
-    * never churn the diff and the source is neither re-fetched nor
-    * re-hashed for it. This takes source keys to be unique (the
-    * reference's primary keys). Without a committed state the diff
-    * compares the snapshot's own columns, which is only valid when
-    * `deriveFetched` leaves `dataCols` untouched.
+    * minus `upd`, plus the classify's own signatures of the RAW source
+    * rows of touched keys (the reference's `{t}_hashes` update,
+    * download.py:577-583), so derived columns (normalized names) never
+    * churn the diff and the source is neither re-fetched nor re-hashed
+    * for it. This takes source keys to be unique (the reference's primary
+    * keys). Without a committed state the diff compares the snapshot's own
+    * columns, which is only valid when `deriveFetched` leaves `dataCols`
+    * untouched.
     */
   def warm(internal: DataFrame, external: DataFrame,
            key: Seq[String], dataCols: Seq[String],
@@ -104,34 +115,28 @@ object Pipeline {
     val st = state.getOrElse(Diff.sigTable(internal, key, dataCols))
     val kinds = Diff.classifyWithSig(st, external, key, dataCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val touched  = kinds.filter(col(Diff.KindCol).isin("changed", "new"))
-    val fetched  = deriveFetched(Diff.semiJoinChanged(external, touched, key))
-    val changedKeys = kinds.filter(col(Diff.KindCol) === "changed")
-    val changelog   = Changelog.captureOld(internal, changedKeys, key)
-
-    // Per-kind counts in one global aggregate: the stages and the one job
-    // a bare count() runs, where a groupBy(kind) adds one of each.
     val kindNames = Seq("changed", "new", "deleted", "unchanged")
     val perKind = kindNames.map(k => count(when(col(Diff.KindCol) === k, 1)).as(k))
-    val counts = kinds.agg(perKind.head, perKind.tail: _*).head().getValuesMap[Long](kindNames)
+    val observed = Observation()
+    kinds.observe(observed, perKind.head, perKind.tail: _*)
+      .write.format("noop").mode(SaveMode.Overwrite).save()
+    val counts = observed.get.map { case (k, n) => k -> n.asInstanceOf[Long] }
 
     // Deleted-rows circuit breaker (download.py:326-330): if the source
     // lost too many keys, treat it as a source fault and skip deletes.
-    val deletedKeys  = kinds.filter(col(Diff.KindCol) === "deleted")
-    val skipDeletes  = counts("deleted") >= maxDeletes
-    val afterDeletes =
-      if (skipDeletes) internal
-      else Diff.antiJoinDeleted(internal, deletedKeys, key)
-
-    val newSnapshot = Diff.upsertReplace(afterDeletes, fetched, key)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // incremental state maintenance ∝ delta: previous state minus deleted
-    // keys, upserted with the RAW-source sigs the classify computed for
-    // touched keys (the reference updates `{t}_hashes` from downloaded
-    // rows, download.py:577-583 — never from the post-derive replica)
-    val afterDelState = if (skipDeletes) st else Diff.antiJoinDeleted(st, deletedKeys, key)
-    val newState = Diff.upsertReplace(afterDelState,
-      touched.select(key.map(col) :+ col(Diff.SigCol): _*), key)
+    val touched = kinds.filter(col(Diff.KindCol).isin("changed", "new"))
+    val upd =
+      if (counts("deleted") >= maxDeletes) touched
+      else kinds.filter(col(Diff.KindCol) =!= "unchanged")
+    val changelog = Changelog.captureOld(internal,
+      kinds.filter(col(Diff.KindCol) === "changed"), key)
+    val newSnapshot = Diff.antiJoinDeleted(internal, upd, key)
+      .unionByName(deriveFetched(Diff.semiJoinChanged(external, touched, key)))
+    // the RAW-source sigs the classify computed for touched keys (the
+    // reference updates `{t}_hashes` from downloaded rows,
+    // download.py:577-583 — never from the post-derive replica)
+    val newState = Diff.antiJoinDeleted(st, upd, key)
+      .unionByName(touched.select(key.map(col) :+ col(Diff.SigCol): _*))
     WarmResult(kinds, newSnapshot, changelog, newState, counts)
   }
 
@@ -176,11 +181,13 @@ object Pipeline {
 
   /** Time travel: read any still-retained committed version — every
     * `commitVersioned` leaves its `v=N` directory in place, giving
-    * snapshot-level history on top of the row-level changelog.
+    * snapshot-level history on top of the row-level changelog. The schema
+    * comes from a part file's footer on the driver, so the read starts no
+    * Spark job ([[Tables.readCommitted]]).
     */
   def readVersion(spark: org.apache.spark.sql.SparkSession, baseDir: String,
                   what: String, version: Long): DataFrame =
-    spark.read.parquet(s"$baseDir/$what/v=$version")
+    Tables.readCommitted(spark, s"$baseDir/$what/v=$version")
 
   /** Retention: drop snapshot/state/changelog versions older than the
     * newest `keepVersions` (never the current one). Time travel keeps

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Parquet table loader for the driver testdata layout (TESTDATA.md).
   *
@@ -45,6 +46,51 @@ object Tables {
         throw new IllegalStateException(
           s"events ts has unsupported type $other; expected int64 nanos or timestamp")
     }
+  }
+
+  /** Read a parquet directory the engine committed without the one-task
+    * schema-inference job `spark.read.parquet` starts. Spark stores the
+    * Catalyst schema of every file it writes in the parquet footer under
+    * [[RowMetadataKey]]; inference reads one part file's footer and returns
+    * that schema, so reading it on the driver and passing it as the read
+    * schema yields the same frame. `partition` names a `name=value`
+    * directory level (the bucketed layout): the footer then comes from the
+    * first such subdirectory and the partition field is appended. A
+    * directory with no `part-` file where the footer is looked for, or a
+    * footer without the key, takes plain `spark.read.parquet`.
+    */
+  private[graft] def readCommitted(spark: SparkSession, dir: String,
+                                   partition: Option[StructField] = None): DataFrame = {
+    val root = scala.util.Try(Commit.local(dir)).toOption
+    val footerDir = partition.fold(root)(p => root.flatMap(firstChild(_, s"${p.name}=")))
+    footerDir.flatMap(firstChild(_, "part-"))
+      .flatMap(footerSchema(_, spark.sparkContext.hadoopConfiguration)) match {
+      case Some(s) => spark.read.schema(partition.fold(s)(s.add)).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+  }
+
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The first entry of `dir` (by name) whose name starts with `prefix`. */
+  private def firstChild(dir: java.nio.file.Path, prefix: String): Option[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    if (!java.nio.file.Files.isDirectory(dir)) return None
+    val listing = java.nio.file.Files.list(dir)
+    try listing.iterator.asScala.filter(_.getFileName.toString.startsWith(prefix))
+      .minByOption(_.getFileName.toString)
+    finally listing.close()
+  }
+
+  private def footerSchema(file: java.nio.file.Path,
+                           conf: org.apache.hadoop.conf.Configuration): Option[StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toUri), conf))
+    val json = try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))
+      finally reader.close()
+    json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption.collect { case s: StructType => s })
   }
 
   val AllTables: Seq[String] = Seq("region", "nation", "customer", "supplier",

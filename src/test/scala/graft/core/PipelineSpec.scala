@@ -49,12 +49,12 @@ class PipelineSpec extends AnyFunSuite {
     val e = Fixture.external(spark, TestSpark.Sf)
     val i = Fixture.internal(spark, TestSpark.Sf)
     e.count() // builds the memoized fixture, so neither job count below includes it
-    // the one action a warm run needs: the delete breaker's count over
-    // its persisted classification
-    val breakerJobs = jobsOf {
+    // the one action a warm run needs: filling the cache of its persisted
+    // classification, which the delete breaker's count reads
+    val fillJobs = jobsOf {
       val k = Diff.classifyWithSig(Diff.sigTable(i, Fixture.Key, Fixture.DataCols), e,
         Fixture.Key, Fixture.DataCols).persist()
-      try k.filter(col("kind") === "deleted").count() finally k.unpersist()
+      try k.write.format("noop").mode("overwrite").save() finally k.unpersist()
     }
     var r: Pipeline.WarmResult = null
     val warmJobs = jobsOf { r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols) }
@@ -62,7 +62,7 @@ class PipelineSpec extends AnyFunSuite {
       val want = Fixture.kinds(spark, TestSpark.Sf).groupBy("kind").count().collect()
         .map(r2 => r2.getString(0) -> r2.getLong(1)).toMap
       assert(r.counts == Map("changed" -> 0L, "new" -> 0L, "deleted" -> 0L, "unchanged" -> 0L) ++ want)
-      assert(warmJobs == breakerJobs, s"warm ran $warmJobs jobs, the breaker count alone $breakerJobs")
+      assert(warmJobs == fillJobs, s"warm ran $warmJobs jobs, filling the classification alone $fillJobs")
     } finally r.release()
   }
 
@@ -93,6 +93,66 @@ class PipelineSpec extends AnyFunSuite {
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
     } finally sc.removeSparkListener(listener)
     jobs.get
+  }
+
+  /** `read` equals `spark.read.parquet(dir)` in schema and rows. */
+  private def assertSameRead(read: DataFrame, dir: String): Unit = {
+    val plain = spark.read.parquet(dir)
+    assert(read.schema == plain.schema)
+    assert(read.exceptAll(plain).isEmpty && plain.exceptAll(read).isEmpty)
+  }
+
+  test("reading a committed version starts no job and equals spark.read.parquet") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_read").toString
+    val e = Fixture.external(spark, TestSpark.Sf)
+    val i = Fixture.internal(spark, TestSpark.Sf)
+    val r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols)
+    try Pipeline.commitVersioned(r, dir, Pipeline.SnapshotLayout.Zordered(Fixture.Key))
+    finally r.release()
+    for (what <- Seq("snapshot", "state")) {
+      var latest: DataFrame = null
+      var v1: DataFrame = null
+      assert(jobsOf { latest = Pipeline.readLatest(spark, dir, what) } == 0, what)
+      assert(jobsOf { v1 = Pipeline.readVersion(spark, dir, what, 1L) } == 0, what)
+      assertSameRead(latest, s"$dir/$what/v=1")
+      assertSameRead(v1, s"$dir/$what/v=1")
+    }
+  }
+
+  test("reading an empty committed version: every key deleted, and a cold load of an empty source") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_read_empty").toString
+    val e = Fixture.external(spark, TestSpark.Sf)
+    val gone = Pipeline.warm(e, e.limit(0), Fixture.Key, Fixture.DataCols)
+    try {
+      assert(gone.counts("deleted") == e.count())
+      Pipeline.commitVersioned(gone, s"$dir/gone")
+    } finally gone.release()
+    Runner.extractAll(spark, Seq(Runner.Source("empty", () => e.limit(0),
+      Fixture.Key, Fixture.DataCols)), dir)
+    for (table <- Seq("gone", "empty"); what <- Seq("snapshot", "state")) {
+      val read = Pipeline.readLatest(spark, s"$dir/$table", what)
+      assert(read.isEmpty, s"$table $what")
+      assertSameRead(read, s"$dir/$table/$what/v=1")
+    }
+  }
+
+  test("a version without Spark's footer schema or a top-level part file reads as spark.read.parquet") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_read_fallback").toString
+    // written outside Spark: the footer has no Spark row metadata
+    val foreign = Paths.get(TestSpark.Sf, "orders.parquet")
+    Files.createDirectories(Paths.get(s"$dir/snapshot/v=1"))
+    Files.copy(foreign, Paths.get(s"$dir/snapshot/v=1/part-00000.parquet"))
+    // no part file at the top level: the rows sit in a partition directory
+    Files.createDirectories(Paths.get(s"$dir/snapshot/v=2/p=7"))
+    Files.copy(foreign, Paths.get(s"$dir/snapshot/v=2/p=7/part-00000.parquet"))
+    for (v <- Seq(1L, 2L)) {
+      var read: DataFrame = null
+      // the fallback is spark.read.parquet, whose schema inference is a job
+      assert(jobsOf { read = Pipeline.readVersion(spark, dir, "snapshot", v) } > 0, s"v=$v")
+      assert(read.count() == Tables.load(spark, TestSpark.Sf, "orders").count())
+      assertSameRead(read, s"$dir/snapshot/v=$v")
+    }
   }
 
   test("delete circuit breaker: maxDeletes=0 keeps phantom rows") {

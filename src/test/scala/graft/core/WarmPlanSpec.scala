@@ -3,9 +3,10 @@ package graft.core
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import graft.TestSpark
 import graft.queries.Fixture
@@ -16,8 +17,10 @@ import graft.queries.Fixture
   * no Exchange in the plan carries a data column. And warm derives each
   * delta once: the next state comes from the classify, not from a second
   * source fetch, and no semi/anti join re-deduplicates its key side.
+  * Each commit write removes one delta-key set from its old rows, so no
+  * broadcast build side re-reads the source.
   */
-class WarmPlanSpec extends AnyFunSuite {
+class WarmPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
 
   /** Force the at-scale SMJ path and disable AQE so executedPlan is the
@@ -99,5 +102,33 @@ class WarmPlanSpec extends AnyFunSuite {
         }
       } finally r.release()
     }
+  }
+
+  test("commit writes broadcast delta keys only: none scans the source, the state builds one") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_warm_bcast").toString
+    val i = Fixture.internal(spark, TestSpark.Sf)
+    Fixture.external(spark, TestSpark.Sf).write.parquet(s"$dir/source")
+    val e = spark.read.parquet(s"$dir/source")
+    val cold = Pipeline.warm(i.limit(0), i, Fixture.Key, Fixture.DataCols)
+    try Pipeline.commitVersioned(cold, s"$dir/t", Pipeline.SnapshotLayout.Zordered(Fixture.Key))
+    finally cold.release()
+    val r = Pipeline.warm(Pipeline.readLatest(spark, s"$dir/t", "snapshot"), e,
+      Fixture.Key, Fixture.DataCols, state = Some(Pipeline.readLatest(spark, s"$dir/t", "state")))
+    try {
+      // the session's own posture (AQE on, default broadcast threshold):
+      // run each frame, then read the broadcasts off its final plan; a
+      // cached frame's scan counts as a scan of the cache, not its sources
+      def broadcasts(df: org.apache.spark.sql.DataFrame): Seq[BroadcastExchangeLike] = {
+        df.collect()
+        collect(df.queryExecution.executedPlan) { case b: BroadcastExchangeLike => b }
+      }
+      def scansSource(p: SparkPlan) = collect(p) { case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toString) }.flatten.exists(_.contains(s"$dir/source"))
+      val snap = broadcasts(r.newSnapshot)
+      assert(snap.nonEmpty, "the fixture's delta keys should broadcast")
+      assert(!snap.exists(scansSource), s"a snapshot broadcast scans the source:\n${snap.mkString("\n")}")
+      val state = broadcasts(r.newState)
+      assert(state.size == 1, s"state broadcasts:\n${state.mkString("\n")}")
+    } finally r.release()
   }
 }
