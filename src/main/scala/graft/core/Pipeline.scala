@@ -77,7 +77,10 @@ object Pipeline {
     * fetch) to incoming rows, so a snapshot that carries score columns
     * round-trips through warm runs: pass
     * `Scores.withOverall(Scores.withScores(_))` to match. It must keep
-    * the key columns and one row per fetched row.
+    * the key columns and must not filter or add rows: the snapshot drops
+    * every touched key and takes back only what it returns, so a row it
+    * filters out is lost while the state keeps the key's signature. This
+    * is not checked.
     *
     * Stage shape. `kinds`, the classify join, is persisted: it feeds the
     * counts, the changelog, the fetch and both next tables. Warm runs one
@@ -91,6 +94,13 @@ object Pipeline {
     * the touched keys for the fetch, and no build side scans the source.
     * `newSnapshot` is not persisted: the commit's write is its only
     * consumer.
+    *
+    * Live source. The commit's fetch re-reads `external` for the touched
+    * keys the classify found. A touched key that leaves the source in
+    * between is dropped from the snapshot, while the state keeps the
+    * signature the classify saw. The next run classifies the key deleted
+    * and the two agree again; if the key comes back with the values the
+    * classify saw, the snapshot lacks it until it next changes.
     *
     * `state`: the committed (key, sig) signature cache from the previous
     * run; absent (legacy/cold), it is the snapshot's own signatures

@@ -163,6 +163,41 @@ class PipelineSpec extends AnyFunSuite {
     assert(phantoms > 0, "phantom 'deleted' rows must survive when the breaker trips")
   }
 
+  test("a touched key that leaves the source before the commit's fetch leaves the snapshot; the next run settles it") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_vanish").toString
+    val internal = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+    // a live source: key 2 changes, key 3 is deleted, key 4 is new; key 2
+    // is dropped from it once `PipelineSpec.vanished` is set
+    val present = udf((k: Long) => !(PipelineSpec.vanished && k == 2L)).asNondeterministic()
+    val source = Seq((1L, "a"), (2L, "b2"), (4L, "d")).toDF("k", "v").filter(present(col("k")))
+    def same(a: DataFrame, b: DataFrame) = a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    PipelineSpec.vanished = false
+    try {
+      val r = Pipeline.warm(internal, source, Seq("k"), Seq("v"))
+      try {
+        assert(r.counts == Map("changed" -> 1L, "new" -> 1L, "deleted" -> 1L, "unchanged" -> 1L))
+        // between the classify and the commit's re-read of the source
+        PipelineSpec.vanished = true
+        Pipeline.commitVersioned(r, dir)
+      } finally r.release()
+      // the snapshot removes every key the classify touched and adds what
+      // the fetch returns, so key 2 is gone; the state keeps its new sig
+      assert(same(Pipeline.readLatest(spark, dir, "snapshot"), Seq((1L, "a"), (4L, "d")).toDF("k", "v")))
+      assert(Pipeline.readLatest(spark, dir, "state").select("k").as[Long].collect().sorted
+        .sameElements(Seq(1L, 2L, 4L)))
+      // the next run classifies key 2 as deleted: snapshot and state agree again
+      val r2 = Pipeline.warm(Pipeline.readLatest(spark, dir, "snapshot"), source, Seq("k"), Seq("v"),
+        state = Some(Pipeline.readLatest(spark, dir, "state")))
+      try {
+        assert(r2.counts("deleted") == 1L && r2.counts("unchanged") == 2L, r2.counts)
+        Pipeline.commitVersioned(r2, dir)
+      } finally r2.release()
+      assert(same(Pipeline.readLatest(spark, dir, "snapshot"), source))
+      assert(same(Pipeline.readLatest(spark, dir, "state"), Diff.sigTable(source, Seq("k"), Seq("v"))))
+    } finally PipelineSpec.vanished = false
+  }
+
   test("versioned commit: pointer advances, readers see the committed version") {
     val dir = java.nio.file.Files.createTempDirectory("graft_vcommit").toString
     val e = Fixture.external(spark, TestSpark.Sf)
@@ -235,4 +270,9 @@ class PipelineSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("table failed"))
   }
+}
+
+object PipelineSpec {
+  /** Read by the live source of the vanishing-key test, in the local executors. */
+  @volatile var vanished = false
 }

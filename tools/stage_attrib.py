@@ -1,20 +1,18 @@
 #!/usr/bin/env python3
 """Attribute the completed stages of a Spark event log to job groups and SQL executions.
 
-    python3 tools/stage_attrib.py EVENT_LOG [--group REGEX] [--summary]
+    python3 tools/stage_attrib.py EVENT_LOG_DIR [--group REGEX]
 
-EVENT_LOG is a Spark event log: a file, plain or zstd-compressed (`.zst`,
-`.zstd`; decompressed with the `zstd` command), or a rolling log
-directory (`eventlog_v2_*`, Spark 4's default), whose `events_<n>_*`
-files are read in order. Each completed stage counts
-once, under the job that first listed it, as the engine's perfbench
-recorder counts them; skipped and failed stages do not count.
+EVENT_LOG_DIR is a rolling event log directory (`eventlog_v2_*`), which
+Spark 4 writes by default; its zstd-compressed `events_<n>_*` files are
+read in order, each through the `zstd` command. Each completed stage
+counts once, under the job that first listed it, as the engine's
+perfbench recorder counts them; skipped and failed stages do not count.
 
-The default output lists, per job group in order of first appearance, one
-line per SQL execution (its id, completed stages, tasks and description)
-and the group's total. `--summary` prints one line per group only.
-`--group` keeps the groups whose id matches REGEX (Python `re.search`);
-jobs without a group are listed under `-`.
+The output lists, per job group in order of first appearance, one line
+per SQL execution (its id, completed stages, tasks and description) and
+the group's total. `--group` keeps the groups whose id matches REGEX
+(Python `re.search`); jobs without a group are listed under `-`.
 
 To get a log from the benchmark harness without editing it, pass Spark
 confs through the JVM, e.g.
@@ -33,30 +31,20 @@ import sys
 from collections import OrderedDict
 
 
-def log_files(path):
-    """The files of a log: the file itself, or a rolling directory's event files in order."""
-    if not os.path.isdir(path):
-        return [path]
+def events(log_dir):
+    """The events of a rolling log directory, its files decompressed in index order."""
     parts = []
-    for name in os.listdir(path):
+    for name in os.listdir(log_dir):
         m = re.match(r"events_(\d+)_", name)
         if m:
-            parts.append((int(m.group(1)), os.path.join(path, name)))
+            parts.append((int(m.group(1)), os.path.join(log_dir, name)))
     if not parts:
-        sys.exit(f"stage_attrib: {path}: no events_<n>_* files")
-    return [p for _, p in sorted(parts)]
-
-
-def lines(path):
-    """One file's lines, decompressing zstd through the `zstd` command."""
-    name = path[: -len(".inprogress")] if path.endswith(".inprogress") else path
-    if name.endswith((".zst", ".zstd")):
+        sys.exit(f"stage_attrib: {log_dir}: no events_<n>_* files")
+    for _, path in sorted(parts):
         out = subprocess.run(["zstd", "-dc", path], check=True, stdout=subprocess.PIPE).stdout
-        return out.decode("utf-8").splitlines()
-    if name.endswith((".lz4", ".lzf", ".snappy")):
-        sys.exit(f"stage_attrib: {path}: only plain and zstd event logs are read")
-    with open(path, encoding="utf-8") as f:
-        return f.read().splitlines()
+        for line in out.decode("utf-8").splitlines():
+            if line.strip():
+                yield json.loads(line)
 
 
 def attribute(events):
@@ -88,16 +76,10 @@ def attribute(events):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("event_log")
+    ap.add_argument("event_log_dir")
     ap.add_argument("--group", help="keep job groups whose id matches this regex")
-    ap.add_argument("--summary", action="store_true", help="one line per job group")
     a = ap.parse_args()
-    events = []
-    for path in log_files(a.event_log):
-        for line in lines(path):
-            if line.strip():
-                events.append(json.loads(line))
-    groups, sql_desc = attribute(events)
+    groups, sql_desc = attribute(events(a.event_log_dir))
     keep = re.compile(a.group) if a.group else None
     all_stages = all_tasks = 0
     for group, per_sql in groups.items():
@@ -109,9 +91,6 @@ def main():
             continue
         all_stages += stages
         all_tasks += tasks
-        if a.summary:
-            print(f"{stages:4d} stages {tasks:6d} tasks  {group}")
-            continue
         print(group)
         for sql, (s, t) in per_sql.items():
             if s == 0:
