@@ -208,21 +208,9 @@ object Pipeline {
     require(keepVersions >= 1)
     val current = currentVersion(baseDir).getOrElse(return)
     val cutoff = current - keepVersions + 1
-    for (what <- Seq("snapshot", "state", "changelog")) {
-      val root = java.nio.file.Paths.get(s"$baseDir/$what")
-      if (java.nio.file.Files.isDirectory(root)) {
-        val listing = java.nio.file.Files.list(root)
-        try {
-          val it = listing.iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            val name = p.getFileName.toString
-            if (name.startsWith("v=") && name.drop(2).toLongOption.exists(_ < cutoff))
-              deleteRecursively(p)
-          }
-        } finally listing.close()
-      }
-    }
+    for (what <- Seq("snapshot", "state", "changelog");
+         (v, p) <- listVersionDirs(java.nio.file.Paths.get(s"$baseDir/$what")) if v < cutoff)
+      deleteRecursively(p)
   }
 
   /** Committed changelog history: the `v=N` layout is read as a `v`
@@ -233,11 +221,16 @@ object Pipeline {
     * Compacted directories ([[compactChangelog]]) carry each row's TRUE
     * version in a `v_row` data column; it takes precedence over the
     * directory version, so version attribution survives compaction.
+    *
+    * The `v=N` directories' schemas merge from their footers on the
+    * driver, so the read starts no Spark job
+    * ([[Tables.readCommittedMerged]]).
     */
   def readChangelog(spark: org.apache.spark.sql.SparkSession, baseDir: String): DataFrame = {
     val current = currentVersion(baseDir).getOrElse(0L)
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(s"$baseDir/changelog").filter(col("v") <= current)
+    val root = s"$baseDir/changelog"
+    val versions = scala.util.Try(listVersionDirs(Commit.local(root))).getOrElse(Seq.empty)
+    val raw = Tables.readCommittedMerged(spark, root, "v", versions).filter(col("v") <= current)
     if (raw.columns.contains("v_row"))
       raw.withColumn("v", coalesce(col("v_row"), col("v").cast("long"))).drop("v_row")
     else raw

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 
 /** Parquet table loader for the driver testdata layout (TESTDATA.md).
   *
@@ -67,6 +67,29 @@ object Tables {
       .flatMap(footerSchema(_, spark.sparkContext.hadoopConfiguration)) match {
       case Some(s) => spark.read.schema(partition.fold(s)(s.add)).parquet(dir)
       case None => spark.read.parquet(dir)
+    }
+  }
+
+  /** Read `dir`, whose `partCol=N` subdirectories `versions` each hold
+    * one write, as `spark.read.option("mergeSchema", "true")` reads it,
+    * without the job that merge runs over every footer. The footer
+    * schema of one part file per subdirectory (a write lands one schema)
+    * merges on the driver in version order with Spark's own merge, and
+    * `partCol` takes the type partition inference gives it: int, or long
+    * once a version passes `Int.MaxValue`. No subdirectories, or one
+    * without such a footer, takes the mergeSchema read.
+    */
+  private[graft] def readCommittedMerged(spark: SparkSession, dir: String, partCol: String,
+                                         versions: Seq[(Long, java.nio.file.Path)]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footers = versions.sortBy(_._1)
+      .map { case (_, d) => firstChild(d, "part-").flatMap(footerSchema(_, conf)) }
+    if (footers.isEmpty || footers.exists(_.isEmpty))
+      spark.read.option("mergeSchema", "true").parquet(dir)
+    else {
+      val vType = if (versions.forall(_._1 <= Int.MaxValue)) IntegerType else LongType
+      spark.read.schema(footers.flatten.reduce(org.apache.spark.sql.graft.Bridge.mergeSchema)
+        .add(partCol, vType)).parquet(dir)
     }
   }
 

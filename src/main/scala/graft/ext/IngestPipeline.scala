@@ -74,13 +74,11 @@ object IngestPipeline {
     val wave = pmod(col(idCol), lit(nWaves))
     def sigOf(c: org.apache.spark.sql.Column) =
       if (md5Mode) md5(c.cast("binary")) else xxhash64(c)
-    def gramsOf(d: DataFrame) =
-      if (md5Mode) SubstringDedup.md5WinnowGrams(d, "id", "__t", L, w)
-      else SubstringDedup.xxWinnowGrams(d, "id", "__t", L, w)
+    def gramsOf(d: DataFrame) = SubstringDedup.winnowGrams(d, "id", "__t", L, w, md5Mode)
     val seed = docs.filter(wave === 0)
       .select(col(idCol).as("id"), col(textCol).as("__t"))
     val lm = TextLm.train(seed, "id", "__t")
-    val ceiling = maxAvgNllFrac * math.log(lm.v.toDouble)
+    val ceiling = lm.ceiling(maxAvgNllFrac)
 
     // admitted-state frames: ids are checkpointed per wave; sigs/grams
     // derive from raw scans + those ids (cheap lineage), checkpointed so
@@ -116,39 +114,16 @@ object IngestPipeline {
         .join(exactFailIds, Seq("id"), "left_anti")
       val batchGrams = gramsOf(exactPass)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // probe-time hub cap, the StreamSubstringGate discipline: a gram
-      // whose admitted+batch df exceeds maxDf is template noise — drop it
-      // BEFORE the pair-count groupBy, so one boilerplate gram absorbed
-      // into admitted state cannot fan out O(admitted df) per wave. The
-      // hub set is bounded by the batch's distinct gram count, never
-      // corpus-sized; at oracle scale (total docs < maxDf) the cap never
-      // binds, so the uncapped DuckDB replay is unaffected.
-      // admMatches — the admitted rows whose h occurs in the batch — is
-      // persisted and feeds BOTH the hub census and the pair join: every
-      // batch gram's admitted join partners are by definition in it, so
-      // re-joining the FULL accumulated admGrams (the first cut of this
-      // cap) paid a second admitted-volume shuffle per wave. (Wall-
-      // neutral at the 500k-doc bench, where admitted-state reads are
-      // local checkpoint blocks — but at 100 TB the admitted gram table
-      // is the corpus-sized side, and scanning it once per wave instead
-      // of twice is the difference that matters.)
-      val admMatches = admGrams.join(batchGrams.select(col("h")).distinct(), Seq("h"))
+      // the shared substring probe; each decided step is checkpointed
+      val admMatches = SubstringDedup.corpusMatches(admGrams, batchGrams)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // checkpointed: both consumers below read one decided set instead
-      // of each re-running the census
-      val hubs = sizedLocalCheckpoint(admMatches.groupBy("h").agg(count(lit(1)).as("n_c"))
-        .join(batchGrams.groupBy("h").agg(count(lit(1)).as("n_d")), Seq("h"))
-        .filter(col("n_c") + col("n_d") > maxDf)
-        .select(col("h")))
-      val crossSubIds = sizedLocalCheckpoint(batchGrams.join(hubs, Seq("h"), "left_anti")
-        .join(admMatches, Seq("h"))
-        .groupBy("id", "aid").agg(count(lit(1)).as("ns"))
-        .filter(col("ns") >= minShared)
-        .select(col("id")).distinct())
-      val candGrams = batchGrams.join(crossSubIds, Seq("id"), "left_anti")
-        .join(hubs, Seq("h"), "left_anti")
-      val innerSubIds = sizedLocalCheckpoint(Dedup.dupClusters(
-          SubstringDedup.postingPairs(candGrams, minShared, maxDf))
+      val hubs = sizedLocalCheckpoint(SubstringDedup.hubGrams(admMatches, batchGrams, maxDf))
+      val crossSubIds = sizedLocalCheckpoint(
+        SubstringDedup.crossPairs(batchGrams, admMatches, hubs, minShared)
+          .select(col("id")).distinct())
+      // in-batch pairs only among the docs the cross probe kept
+      val innerSubIds = sizedLocalCheckpoint(Dedup.dupClusters(SubstringDedup.innerPairs(
+          batchGrams.join(crossSubIds, Seq("id"), "left_anti"), hubs, minShared, maxDf))
         .filter(col("id") =!= col("cluster_id")).select(col("id")))
       val subFailIds = crossSubIds.unionByName(innerSubIds)
       // ---- fates + admitted-state absorption (all from checkpointed ids)

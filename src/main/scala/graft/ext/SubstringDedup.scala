@@ -49,30 +49,6 @@ import org.apache.spark.sql.functions._
   * scaladoc.)
   */
 object SubstringDedup {
-  /** (id, fingerprint) — the DISTINCT gram fingerprints of each doc,
-    * computed per doc inside ONE codegen'd kernel
-    * ([[org.apache.spark.sql.graft.WinnowedFingerprints]] with w = 1:
-    * a 1-window's minimum is the position itself, so every position's
-    * hash survives). Three generations of this index at bench scale:
-    * hex-md5 rows OOM'd the 8g driver (5× the bytes); `unhex` binary
-    * rows fixed memory but still evaluated an explode→substring→md5
-    * SQL chain per position and shuffled positions pre-dedup; the
-    * kernel form hashes bytes in place and dedups BEFORE the exchange.
-    * Fingerprints are xxhash64 (the MOSS/Karp-Rabin discipline —
-    * 64-bit false-collision odds at 10⁹ grams ≈ n²/2⁶⁵, deterministic
-    * and far below the minShared threshold's noise floor); the DuckDB
-    * oracle keeps its own md5 grams — only id pairs and counts cross
-    * engines, so the fingerprint encoding is free to differ.
-    */
-  private def positionGrams(docs: DataFrame, idCol: String, textCol: String,
-                            L: Int): DataFrame =
-    // the kernel windows BYTES, so the length gate is in bytes too — a
-    // doc under L octets has zero windows (char length() would disagree
-    // on multibyte text)
-    docs.filter(octet_length(col(textCol)) >= L)
-      .select(col(idCol).as("id"),
-        explode(graft.functions.text.winnowed_fingerprints(col(textCol), L, 1)).as("h"))
-
   /** Posting-list pair counting shared by both variants: grams →
     * per-fingerprint distinct doc set (one shuffle, map-side partial
     * sets) → all i<j pairs within each sorted posting → per-pair
@@ -140,12 +116,22 @@ object SubstringDedup {
   }
 
   /** Doc pairs sharing ≥ `minShared` distinct L-char gram fingerprints,
-    * with the shared count. Exact: every position indexed.
+    * with the shared count. Exact: every position indexed — the xxhash
+    * winnow kernel with w = 1, whose 1-window minimum is the position
+    * itself. Three generations of this index at bench scale: hex-md5
+    * rows OOM'd the 8g driver (5× the bytes); `unhex` binary rows fixed
+    * memory but still evaluated an explode→substring→md5 SQL chain per
+    * position and shuffled positions pre-dedup; the kernel form hashes
+    * bytes in place and dedups BEFORE the exchange. Fingerprints are
+    * xxhash64 (the MOSS/Karp-Rabin discipline — 64-bit false-collision
+    * odds at 10⁹ grams ≈ n²/2⁶⁵, far below the minShared threshold's
+    * noise floor); the DuckDB oracle keeps its own md5 grams — only id
+    * pairs and counts cross engines, so the encoding is free to differ.
     */
   def sharedGramPairs(docs: DataFrame, idCol: String, textCol: String,
                       L: Int = 40, minShared: Int = 5,
                       maxDf: Int = 1000): DataFrame =
-    postingPairs(positionGrams(docs, idCol, textCol, L), minShared, maxDf)
+    postingPairs(winnowGrams(docs, idCol, textCol, L, 1, md5Mode = false), minShared, maxDf)
 
   /** Per-document duplication profile (the corpus metric of Lee et al.
     * 2022): for every position, is its L-gram present in ≥ 2 distinct
@@ -244,6 +230,11 @@ object SubstringDedup {
     * minima + dedup) is one codegen'd expression; the shuffle sees only
     * the ~2/(w+1) survivors.
     */
+  def winnowedGramPairs(docs: DataFrame, idCol: String, textCol: String,
+                        L: Int = 40, w: Int = 8, minShared: Int = 2,
+                        maxDf: Int = 1000): DataFrame =
+    postingPairs(winnowGrams(docs, idCol, textCol, L, w, md5Mode = false), minShared, maxDf)
+
   /** The ORACLE GATE for the winnowed path: same winnow semantics —
     * every w-gram window contributes its minimum hash — but over md5
     * CHAR-gram hashes both engines compute identically (the
@@ -255,46 +246,92 @@ object SubstringDedup {
     * a window SQL replay (DuckDB `min() OVER (ROWS BETWEEN CURRENT ROW
     * AND w-1 FOLLOWING)`) reproduces it exactly. Docs with fewer than w
     * grams contribute the min of all their grams (one partial window).
-    *
-    * The winnow itself is MAP-SIDE (gram array → sliding slice-min
-    * HOFs, one row per doc): the naive replay — explode positions,
-    * `min OVER (PARTITION BY doc)` — would shuffle the full position
-    * volume with 32-byte hashes just to sort what is already adjacent
-    * inside each row. Production stays [[winnowedGramPairs]]'s codegen
-    * kernel (xxhash, zero per-position allocation); this variant's job
-    * is DuckDB replayability.
     */
   def winnowedGramPairsMd5(docs: DataFrame, idCol: String, textCol: String,
                            L: Int = 40, w: Int = 8, minShared: Int = 2,
                            maxDf: Int = 1000): DataFrame =
-    postingPairs(md5WinnowGrams(docs, idCol, textCol, L, w), minShared, maxDf)
+    postingPairs(winnowGrams(docs, idCol, textCol, L, w, md5Mode = true), minShared, maxDf)
 
-  /** The md5 variant's winnowed (id, h) fingerprint rows — shared by
-    * [[winnowedGramPairsMd5]] and the streaming substring gate's
-    * DuckDB-replayable mode. One codegen'd kernel call per doc
-    * ([[org.apache.spark.sql.graft.Md5WinnowedFingerprints]]); the HOF
-    * formulation it replaced (gram array → per-position slice-min)
-    * allocated a w-slice per position and measured ~3× the xxhash
-    * kernel's wall at the 500k-doc bench corpus.
+  // ---- The incremental substring probe: a batch's grams against an
+  // accumulated index of admitted grams, the per-batch probe of
+  // *Distributed Streaming Set Similarity Join* (ICDE 2020). One
+  // implementation serves the batch ingest chain
+  // ([[IngestPipeline.waveFates]]) and the streaming gate
+  // ([[graft.stream.StreamSubstringGate]]); each caller materializes the
+  // steps its own way (decided-set checkpoints vs per-batch persists).
+
+  /** The winnowed (id, h) fingerprint rows of `docs`, one codegen'd
+    * kernel call per doc. `md5Mode` picks the encoding: md5 char grams
+    * ([[org.apache.spark.sql.graft.Md5WinnowedFingerprints]]), which a
+    * DuckDB replay reproduces, or the production xxhash64 kernel
+    * (8-byte fingerprints, zero per-position allocation). The md5 kernel
+    * replaced a HOF formulation (gram array → per-position slice-min)
+    * that allocated a w-slice per position and measured ~3× the xxhash
+    * kernel's wall at the 500k-doc bench corpus. Selection logic and
+    * every downstream step are identical in both modes. The kernels
+    * window BYTES, so the length gate is in bytes too: a doc under L
+    * octets has no windows (char length() would disagree on multibyte
+    * text).
     */
-  private[graft] def md5WinnowGrams(docs: DataFrame, idCol: String,
-                                    textCol: String, L: Int, w: Int): DataFrame =
+  private[graft] def winnowGrams(docs: DataFrame, idCol: String, textCol: String,
+                                 L: Int, w: Int, md5Mode: Boolean): DataFrame = {
+    val fp =
+      if (md5Mode) graft.functions.text.md5_winnowed_fingerprints(col(textCol), L, w)
+      else graft.functions.text.winnowed_fingerprints(col(textCol), L, w)
     docs.filter(octet_length(col(textCol)) >= L)
-      .select(col(idCol).as("id"),
-        explode(graft.functions.text.md5_winnowed_fingerprints(col(textCol), L, w)).as("h"))
+      .select(col(idCol).as("id"), explode(fp).as("h"))
+  }
 
-  /** The production winnowed (id, h) fingerprint rows (xxhash codegen
-    * kernel) — shared by [[winnowedGramPairs]] and the streaming gate's
-    * default mode.
+  /** The admitted rows `corpus(aid, h)` whose fingerprint occurs in
+    * `batch(id, h)`: (h, aid). Every batch gram's admitted join partners
+    * are by definition in it, so the hub census and the cross pairs both
+    * read this one frame — a caller should materialize it rather than
+    * let each consumer re-run the probe join. At 100 TB the admitted
+    * index is the corpus-sized side; scanning and joining it once per
+    * batch instead of twice is the difference that matters (unshared,
+    * the r14 StageProf read 469 + 445 task-s on near-identical join
+    * subtrees). No broadcast hint: a trigger-sized batch's fingerprint
+    * set broadcasts by AQE's size rule anyway, while a wave-sized
+    * backfill (~17M fingerprints) must shuffle — a forced broadcast
+    * there ran the executor out of BytesToBytesMap memory.
     */
-  private[graft] def xxWinnowGrams(docs: DataFrame, idCol: String,
-                                   textCol: String, L: Int, w: Int): DataFrame =
-    docs.filter(octet_length(col(textCol)) >= L)
-      .select(col(idCol).as("id"),
-        explode(graft.functions.text.winnowed_fingerprints(col(textCol), L, w)).as("h"))
+  private[graft] def corpusMatches(corpus: DataFrame, batch: DataFrame): DataFrame =
+    corpus.join(batch.select(col("h")).distinct(), Seq("h"))
 
-  def winnowedGramPairs(docs: DataFrame, idCol: String, textCol: String,
-                        L: Int = 40, w: Int = 8, minShared: Int = 2,
-                        maxDf: Int = 1000): DataFrame =
-    postingPairs(xxWinnowGrams(docs, idCol, textCol, L, w), minShared, maxDf)
+  /** The probe-time hub cap: fingerprints whose admitted + batch df
+    * exceeds `maxDf` are template noise (license headers, boilerplate),
+    * not a pair signal. Removing them BEFORE the pair joins bounds
+    * per-gram fanout to maxDf, so one boilerplate gram absorbed into
+    * admitted state cannot fan out O(admitted df) per batch. The set is
+    * bounded by the batch's distinct fingerprints, never corpus-sized;
+    * both pair steps read it, so a caller materializes it once. At
+    * oracle scale (total docs < maxDf) the cap never binds, so the
+    * uncapped DuckDB replays are unaffected.
+    */
+  private[graft] def hubGrams(matches: DataFrame, batch: DataFrame, maxDf: Int): DataFrame =
+    matches.groupBy("h").agg(count(lit(1)).as("n_c"))
+      .join(batch.groupBy("h").agg(count(lit(1)).as("n_d")), Seq("h"))
+      .filter(col("n_c") + col("n_d") > maxDf)
+      .select(col("h"))
+
+  /** (id, aid, n_shared): batch docs sharing ≥ `minShared` non-hub
+    * fingerprints with one admitted doc.
+    */
+  private[graft] def crossPairs(batch: DataFrame, matches: DataFrame, hubs: DataFrame,
+                                minShared: Int): DataFrame =
+    batch.join(hubs, Seq("h"), "left_anti")
+      .join(matches, Seq("h"))
+      .groupBy("id", "aid").agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
+
+  /** (id_a, id_b, n_shared) within `grams`, through the capped posting
+    * path, with the probe-time hub set removed: a gram the admitted
+    * index already proves to be template noise must not pair docs
+    * within the batch either (a batch-only count would miss hubs whose
+    * df is split across corpus and batch); grams hot within the batch
+    * alone are nulled by the capped aggregate.
+    */
+  private[graft] def innerPairs(grams: DataFrame, hubs: DataFrame, minShared: Int,
+                                maxDf: Int): DataFrame =
+    postingPairs(grams.join(hubs, Seq("h"), "left_anti"), minShared, maxDf)
 }

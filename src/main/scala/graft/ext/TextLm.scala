@@ -39,7 +39,15 @@ object TextLm {
     * parquet — what the streaming gate does); `v` is the one driver
     * scalar of the pipeline.
     */
-  final case class Lm(c12: DataFrame, c1: DataFrame, v: Long)
+  final case class Lm(c12: DataFrame, c1: DataFrame, v: Long) {
+    /** The admission ceiling on `avg_nll`: `frac · ln(V)`, where ln(V) is
+      * the surprisal of an unseen bigram. Scale-free — ln(V) tracks the
+      * vocabulary, so one fraction means the same thing on a 31-word
+      * fixture and a 10M-word web corpus; a `frac` strictly below 1
+      * rejects an all-unseen document.
+      */
+    def ceiling(frac: Double): Double = frac * math.log(v.toDouble)
+  }
 
   /** Bigrams of every doc: (id, w1, w2), one row per adjacent pair. */
   def bigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame =

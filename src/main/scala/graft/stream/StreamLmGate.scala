@@ -33,15 +33,9 @@ import graft.ext.TextLm
   */
 object StreamLmGate {
   final case class Params(idCol: String = "doc_id", textCol: String = "text",
-                          // admission ceiling as a FRACTION of ln(V) (the
-                          // unseen-bigram surprisal): docs whose mean
-                          // -ln P(w2|w1) exceeds frac·ln(V) are rejected.
-                          // Scale-free — ln(V) tracks the vocabulary, so
-                          // the same fraction means the same thing on a
-                          // 31-word fixture and a 10M-word web corpus.
-                          // STRICTLY below 1: an all-unseen document
-                          // scores exactly ln(V), and the gate must
-                          // reject pure noise.
+                          // docs whose mean -ln P(w2|w1) exceeds
+                          // TextLm.Lm.ceiling(maxAvgNllFrac) are rejected;
+                          // strictly below 1, so pure noise is rejected
                           maxAvgNllFrac: Double = 0.98)
 
   /** Train the gate LM on the curated seed corpus and persist it. */
@@ -70,7 +64,7 @@ object StreamLmGate {
     val lm = loadLm(spark, stateDir)
     IngestState.writeVersion(TextLm.scoreWith(lm, batch, p.idCol, p.textCol)
       .withColumn("admitted",
-        (col("avg_nll") <= lit(p.maxAvgNllFrac * math.log(lm.v.toDouble))).cast("int")),
+        (col("avg_nll") <= lit(lm.ceiling(p.maxAvgNllFrac))).cast("int")),
       s"$stateDir/scores", version)
   }
 

@@ -23,17 +23,10 @@ import graft.ext.SubstringDedup
   * Per batch: the delta is fingerprinted ONCE (map-side kernel) into its
   * flat index partition; the rows are read back, their distinct
   * bucket-prefix set prunes the corpus-index read (directory-level for
-  * the partitioned seed), and the probe join's strategy is left to AQE:
-  * a trigger-sized delta broadcasts by the size rule (corpus scanned
-  * once, never shuffled), a wave-sized backfill shuffles — the same
-  * code serves both regimes. Hub fingerprints are
-  * dropped at probe time: a gram whose corpus+delta df exceeds `maxDf`
-  * is template noise (license headers), and filtering it BEFORE the
-  * pair join bounds per-gram fanout to maxDf — the hub set itself is
-  * bounded by the delta's fingerprint count, never corpus-sized.
-  * In-batch pairs go through the same capped posting-pair path as the
-  * batch variant. Exactly-once replay is the shared [[IngestState]]
-  * protocol's.
+  * the partitioned seed), and the probe — match, hub cap, cross pairs,
+  * in-batch pairs — is the one [[graft.ext.SubstringDedup]] probe that
+  * [[graft.ext.IngestPipeline.waveFates]] also runs. Exactly-once
+  * replay is the shared [[IngestState]] protocol's.
   *
   * Two fingerprint modes, fixed at seed time in the state manifest
   * (mismatched geometry would silently probe a disjoint hash space):
@@ -61,54 +54,24 @@ object StreamSubstringGate {
     protected val pbCols = Seq(col("h"))
     protected def payload(p: Params) = None
     protected def sketch(docs: DataFrame, p: Params): DataFrame =
-      if (p.md5Mode) SubstringDedup.md5WinnowGrams(docs, p.idCol, p.textCol, p.L, p.w)
-      else SubstringDedup.xxWinnowGrams(docs, p.idCol, p.textCol, p.L, p.w)
+      SubstringDedup.winnowGrams(docs, p.idCol, p.textCol, p.L, p.w, p.md5Mode)
 
+    /** The shared substring probe ([[SubstringDedup.corpusMatches]] and
+      * the steps after it), with the matches and hubs persisted for the
+      * batch. Cross pairs are grouped by (delta id, corpus id) and then
+      * ordered as (least, greatest): corpus and delta ids are disjoint
+      * (the [[IngestState.compactIndex]] contract every gate relies on),
+      * so each group is exactly one unordered pair.
+      */
     protected def verify(probe: IngestState.Probe, p: Params): DataFrame = {
-      val deltaIdx = probe.deltaIdx
-      // corpus rows matching a delta fingerprint. NO broadcast hint: a
-      // trigger-sized delta's fingerprint set is broadcast by AQE's size
-      // rule anyway, while a wave-sized backfill (the bench seeds 167k
-      // docs ≈ 17M fingerprints per wave) must shuffle — a forced
-      // broadcast there ran the executor out of BytesToBytesMap memory.
-      // Letting the planner pick per batch IS the 100 TB posture: the
-      // same code serves both regimes.
-      // PERSISTED for the batch (the IngestPipeline admMatches discipline,
-      // r14): cand feeds BOTH the hub census and the cross-pair join, and
-      // an unpersisted plan re-ran the corpus-index probe join once per
-      // consumer — at wave scale that is the two heaviest stages of the
-      // whole batch executing twice (StageProf r14: 469 + 445 task-s on
-      // near-identical join subtrees). At 100 TB the corpus index is the
-      // big side; scanning and joining it once per batch instead of twice
-      // is the difference that matters.
-      val cand = probe.persist(
-        probe.corpusIdx.join(deltaIdx.select(col("h")).distinct(), Seq("h"))
-          .select(col("id").as("c_id"), col("h")))
-      // hub cap at probe time: total df of h across corpus matches + the
-      // delta itself; everything here is bounded by the delta's gram count.
-      // hubs feeds the cross-pair anti join AND the in-batch posting path;
-      // it is delta-bounded small, so persist it too rather than re-running
-      // its two aggregations over cand per consumer.
-      val hubs = probe.persist(cand.groupBy("h").agg(count(lit(1)).as("n_c"))
-        .join(deltaIdx.groupBy("h").agg(count(lit(1)).as("n_d")), Seq("h"))
-        .filter(col("n_c") + col("n_d") > p.maxDf)
-        .select(col("h")))
-      val crossPairs = cand.join(hubs, Seq("h"), "left_anti")
-        .join(deltaIdx.select(col("id").as("d_id"), col("h")), Seq("h"))
-        .select(least(col("c_id"), col("d_id")).as("id_a"),
-          greatest(col("c_id"), col("d_id")).as("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= p.minShared)
-      // in-batch pairs reuse the materialized delta fingerprints through
-      // the capped posting-pair path, with the probe-time hub set removed
-      // here too: a gram the CORPUS already proves to be template noise
-      // must not pair docs within the batch either (a delta-only count
-      // would miss hubs whose df is split across corpus and batch); grams
-      // hot within the batch alone are nulled by the capped aggregate
-      val innerPairs = SubstringDedup.postingPairs(
-        deltaIdx.join(hubs, Seq("h"), "left_anti"),
-        p.minShared, p.maxDf)
-      crossPairs.unionByName(innerPairs)
+      val delta = probe.deltaIdx
+      val matches = probe.persist(SubstringDedup.corpusMatches(
+        probe.corpusIdx.select(col("id").as("aid"), col("h")), delta))
+      val hubs = probe.persist(SubstringDedup.hubGrams(matches, delta, p.maxDf))
+      SubstringDedup.crossPairs(delta, matches, hubs, p.minShared)
+        .select(least(col("id"), col("aid")).as("id_a"),
+          greatest(col("id"), col("aid")).as("id_b"), col("n_shared"))
+        .unionByName(SubstringDedup.innerPairs(delta, hubs, p.minShared, p.maxDf))
     }
   }
 

@@ -76,7 +76,7 @@ object StreamingCdc {
     spark.read.parquet(outputDir)
   }
 
-  /** Intra-batch dedup per key for the apply paths: deterministic
+  /** Intra-batch dedup per key for the apply path: deterministic
     * last-write-wins when the source carries an ordering column
     * (sequence/ts); without one, a file stream has no per-row arrival
     * order — arbitrary-but-deterministic-per-retry via dropDuplicates.
@@ -98,40 +98,12 @@ object StreamingCdc {
     * form. Each micro-batch upserts into the committed snapshot and
     * commits a new version (changelog captured first, ordering per
     * SURVEY §7.4.4). Exactly-once: the version pointer only advances
-    * after a batch's writes complete, and re-processing a batch
-    * overwrites its own v=N output rather than duplicating.
-    */
-  def continuousApply(spark: org.apache.spark.sql.SparkSession, inputDir: String,
-                      checkpointDir: String, snapshotDir: String, keyCol: String,
-                      dataCols: Seq[String], orderCol: Option[String] = None): Unit = {
-    import graft.core.{Diff, Pipeline}
-    val schema = spark.read.parquet(inputDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val updates = lastWritePerKey(batch, keyCol, orderCol)
-        val current = Pipeline.currentVersion(snapshotDir) match {
-          case Some(_) => Pipeline.readLatest(spark, snapshotDir, "snapshot")
-          case None    => updates.limit(0)
-        }
-        val r = Pipeline.warm(current, // incremental apply against committed state
-          Diff.upsertReplace(current, updates, Seq(keyCol)),
-          Seq(keyCol), dataCols)
-        // version = batchId + 1: a replayed batch after a crash between
-        // pointer move and checkpoint commit is a no-op, not a phantom
-        // extra version
-        try Pipeline.commitVersionedAt(r, snapshotDir, batchId + 1)
-        finally r.release()
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
-  /** Scale path of [[continuousApply]]: per-batch work ∝ delta, not
-    * snapshot. The committed snapshot/state live hash-bucketed by key
+    * after a batch's writes complete, and a replayed batch (version =
+    * batchId + 1) is a no-op rather than a phantom extra version. The
+    * update stream is upsert-only.
+    *
+    * Per-batch work is ∝ delta, not snapshot. The committed
+    * snapshot/state live hash-bucketed by key
     * ([[graft.core.BucketedSnapshot]]); each micro-batch
     *
     *  1. computes the buckets its keys hash into (tiny),
@@ -146,8 +118,6 @@ object StreamingCdc {
     * A 1000-row batch against a 100 TB snapshot reads ~B/nBuckets of the
     * data instead of rescanning all of it — with nBuckets sized so one
     * bucket ≈ one task (O(10^5) at 100 TB), that is O(B) tasks' worth.
-    * Same exactly-once versioning as continuousApply (version=batchId+1,
-    * replays no-op). Update stream is upsert-only, like continuousApply.
     */
   def continuousApplyBucketed(spark: org.apache.spark.sql.SparkSession, inputDir: String,
                               checkpointDir: String, snapshotDir: String, keyCol: String,

@@ -32,6 +32,13 @@ object Bridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** `a` merged with `b` as parquet schema merging does (fields of `b`
+    * missing from `a` appended; case sensitivity from the session conf).
+    */
+  def mergeSchema(a: org.apache.spark.sql.types.StructType,
+                  b: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    a.merge(b, org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis)
+
   /** Block until the listener bus has delivered every queued event —
     * `SparkContext.listenerBus` is `private[spark]`, and the per-query
     * metric collectors (StageProf) need the drain barrier so late

@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 /** Keeps each engine-wide decision behind one module: outside its owning
   * file (and a reasoned allow-list), no main source spells the calls that
   * make it — how staged bytes become durable state ([[Commit]]), how
-  * an engine session is configured ([[graft.Session]]), and how an
-  * ingest gate versions its state ([[graft.stream.IngestState]]).
+  * an engine session is configured ([[graft.Session]]), how an ingest
+  * gate versions its state ([[graft.stream.IngestState]]), and how a
+  * batch probes admitted substring fingerprints
+  * ([[graft.ext.SubstringDedup]]).
   */
 class CommitDisciplineSpec extends AnyFunSuite {
   /** what the patterns do, the patterns, the owning file, and
@@ -22,6 +24,8 @@ class CommitDisciplineSpec extends AnyFunSuite {
         "through the Hadoop filesystem, documented as non-atomic"))),
     Rule("session builders", Seq("SparkSession.builder"), "Session.scala", Map.empty),
     Rule("gate state layout", Seq("_params.json", "batch=$", "batch=0"), "IngestState.scala",
+      Map.empty),
+    Rule("substring probe steps", Seq("postingPairs(", "\"n_c\""), "SubstringDedup.scala",
       Map.empty))
 
   rules.foreach { case Rule(what, patterns, owner, allowed) =>

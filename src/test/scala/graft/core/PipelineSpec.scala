@@ -257,6 +257,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.readChangelog(spark, dir).select("v").distinct().count() == 2)
   }
 
+  test("reading a compacted changelog with fresh versions starts no job and equals the mergeSchema read") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_read_clog").toString
+    def commitRun(prev: DataFrame, next: DataFrame): Unit = {
+      val r = Pipeline.warm(prev, next, Seq("id"), Seq("elo"))
+      try Pipeline.commitVersioned(r, dir) finally r.release()
+    }
+    val runs = Seq(10, 11, 12, 13, 14, 15)
+      .map(e => Seq((1L, e), (2L, 20 + e % 2), (3L, 30)).toDF("id", "elo"))
+    commitRun(runs.head.limit(0), runs.head)
+    runs.sliding(2).take(2).foreach { case Seq(a, b) => commitRun(a, b) }
+    // one compacted directory with `v_row`, then fresh versions without it
+    Pipeline.compactChangelog(spark, dir, Seq("id"))
+    runs.drop(2).sliding(2).foreach { case Seq(a, b) => commitRun(a, b) }
+    val current = Pipeline.currentVersion(dir).get
+    var read: DataFrame = null
+    assert(jobsOf { read = Pipeline.readChangelog(spark, dir) } == 0)
+    val merged = spark.read.option("mergeSchema", "true").parquet(s"$dir/changelog")
+      .filter(col("v") <= current)
+    assert(merged.columns.contains("v_row"), "fixture sanity: a compacted directory")
+    val want = merged.withColumn("v", coalesce(col("v_row"), col("v").cast("long")))
+      .drop("v_row")
+    assert(read.schema == want.schema)
+    assert(read.exceptAll(want).isEmpty && want.exceptAll(read).isEmpty)
+    assert(read.select("v").distinct().count() > 1)
+  }
+
   test("runParallel: all jobs run; first failure propagates") {
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     Pipeline.runParallel(spark, Seq(

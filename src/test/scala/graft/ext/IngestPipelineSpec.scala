@@ -114,6 +114,62 @@ class IngestPipelineSpec extends AnyFunSuite {
       s"overlap with a REJECTED doc must not block admission: ${f(2L)}")
   }
 
+  test("hub fingerprints are capped: boilerplate shared by more than maxDf docs pairs nothing") {
+    val boiler = randText(50, 300)
+    val run = randText(51, 400)
+    // every doc opens with the boilerplate: 4 seed docs and 4 wave-1 docs
+    // carry it, so with maxDf = 5 its fingerprints are template noise;
+    // only the planted run (seed 3, wave-1 doc 7) may reject a doc. A
+    // window that straddles the boilerplate's end can select one of its
+    // last w - 1 grams in some docs only, so such a gram may stay under
+    // the cap; minShared = w keeps those few from pairing two docs, while
+    // the boilerplate and the run each share far more fingerprints. Each
+    // doc's first letter after the boilerplate is its own, so no gram
+    // spanning that boundary is shared; the LM ceiling admits every doc.
+    def doc(id: Long, first: Char, tail: String = "") =
+      id -> (s"$boiler $first${randText(100 + id.toInt, 80)}" + tail)
+    val docs = Seq(doc(0, 'a'), doc(3, 'a', s" $run"), doc(6, 'a'), doc(9, 'a'),
+      doc(1, 'b'), doc(4, 'c'), doc(7, 'd', s" $run"), doc(10, 'e'),
+      doc(2, 'f'), doc(5, 'g')).toDF("doc_id", "text")
+    def fatesAt(maxDf: Int) =
+      IngestPipeline.waveFates(docs, "doc_id", "text", nWaves = 3, maxAvgNllFrac = 100.0,
+          L = 40, w = 8, minShared = 8, maxDf = maxDf)
+        .select("doc_id", "reason").as[(Long, String)].collect().toMap
+    val capped = fatesAt(5)
+    assert(capped(7L) == "substring", s"the planted run must still pair: $capped")
+    assert(Seq(1L, 4L, 10L, 2L, 5L).forall(capped(_) == "ok"), capped)
+    // fixture sanity: uncapped, the boilerplate rejects every wave doc
+    val uncapped = fatesAt(1000)
+    assert(Seq(1L, 4L, 7L, 10L, 2L, 5L).forall(uncapped(_) == "substring"), uncapped)
+  }
+
+  test("substring rejects equal the streaming gate's pairs for one seed wave and one batch") {
+    // even ids seed, odd ids form the one batch; every overlap crosses
+    // the wave boundary, so both callers of the one probe must agree
+    val runA = randText(61, 60)
+    val runB = randText(62, 60)
+    val seed = Seq(0L -> seedText, 2L -> s"$seedText $runA", 4L -> s"$seedText $runB")
+    val batch = Seq(1L -> fluent("uaa", "ubb", runA), 3L -> fluent("ucc", "udd"),
+      5L -> fluent("uee", "uff", runB), 7L -> fluent("ugg", "uhh"))
+    for (md5 <- Seq(true, false)) {
+      val rejected = IngestPipeline.waveFates((seed ++ batch).toDF("doc_id", "text"),
+          "doc_id", "text", nWaves = 2, maxAvgNllFrac = 0.98, L = 40, w = 8,
+          minShared = 1, md5Mode = md5)
+        .filter($"reason" === "substring").select("doc_id").as[Long].collect().toSet
+      val st = java.nio.file.Files.createTempDirectory("graft_ingest_parity").toString
+      val p = graft.stream.StreamSubstringGate.Params(L = 40, w = 8, minShared = 1,
+        md5Mode = md5)
+      graft.stream.StreamSubstringGate.seedCorpus(seed.toDF("doc_id", "text"), st, p)
+      graft.stream.StreamSubstringGate.processBatch(batch.toDF("doc_id", "text"), st, 1L, p)
+      val batchIds = batch.map(_._1).toSet
+      val paired = graft.stream.StreamSubstringGate.pairs(spark, st)
+        .select("id_a", "id_b").as[(Long, Long)].collect()
+        .flatMap { case (a, b) => Seq(a, b) }.filter(batchIds).toSet
+      assert(rejected == Set(1L, 5L), s"md5Mode=$md5: fixture sanity: $rejected")
+      assert(paired == rejected, s"md5Mode=$md5: gate $paired, waveFates $rejected")
+    }
+  }
+
   /** Every node of an initial physical plan, with each cached frame's
     * scan expanded into the initial plan that fills the cache.
     */
