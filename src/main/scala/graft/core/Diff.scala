@@ -1,7 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Bridge, InKeySet}
+import org.apache.spark.sql.types.DataType
 
 /** The CDC diff algebra — the reference's raison d'être (README.md:14-18).
   *
@@ -23,7 +27,12 @@ import org.apache.spark.sql.functions._
   * full-row fetch is a `left_semi` join against the (small) changed-key
   * set, which AQE broadcasts when it fits — exactly the reference's
   * semi-join-reduction intent (download.py:435 "waaaay faster").
-  * WarmPlanSpec pins the (key, sig)-only shuffle on the warm path.
+  * WarmPlanSpec pins the (key, sig)-only shuffle on the warm path. A
+  * warm run whose delta fits the broadcast threshold goes one step
+  * further, as the reference drives its fetch and deletes from one id
+  * list held in the process (download.py:435-476, 585-595): the delta
+  * keys go to the driver once and the fetch, changelog and deletes
+  * filter on them ([[inKeySet]]), the same rows as the joins below.
   * Every operator matches keys by one rule, null-safe `<=>` ([[nsCond]]).
   * Semi and anti joins do not deduplicate their key side: a duplicate
   * build key changes no output row of a left-semi or left-anti join, and
@@ -47,6 +56,29 @@ object Diff {
 
   private[core] def rightKeys(df: DataFrame, key: Seq[String]): DataFrame =
     df.select(key.map(k => col(k).as(s"__dk_$k")): _*)
+
+  /** A key set held by the driver and broadcast to every task: the
+    * `<=>` rule of [[nsCond]] as a membership test ([[inKeySet]]), so a
+    * filter does what a left-semi or left-anti join against a frame of
+    * these keys does, with no join and no job to build it, for key types
+    * `InKeySet.supports` (all but strings of a non-binary collation).
+    * `types` are the key columns' types; a probed frame's keys are cast
+    * to them.
+    */
+  private[graft] final case class KeySet(types: Seq[DataType],
+                                         keys: Broadcast[java.util.Set[UnsafeRow]]) {
+    /** Destroy the broadcast and wait for its blocks to go; idempotent. */
+    def release(): Unit = InKeySet.destroy(keys)
+  }
+
+  /** Broadcast the keys of `rows`: their first columns, of `types`. */
+  private[graft] def keySet(spark: SparkSession, types: Seq[DataType], rows: Iterator[Row]): KeySet =
+    KeySet(types, spark.sparkContext.broadcast(InKeySet.keySet(types, rows)))
+
+  /** A row's `key` is `<=>`-equal to a key of `keys`; never null. */
+  private[graft] def inKeySet(key: Seq[String], keys: KeySet): Column =
+    Bridge.column(InKeySet(key.zip(keys.types).map { case (k, t) =>
+      Bridge.expression(col(k).cast(t)) }, keys.keys))
 
   /** (key, sig) projection — the persisted signature cache the reference
     * keeps in its `{t}_hashes_0/1` side tables (table.py:107-117).

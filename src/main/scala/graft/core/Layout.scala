@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** Output data layout for scan efficiency at scale.
@@ -14,16 +15,46 @@ import org.apache.spark.storage.StorageLevel
   * reference, README.md:14, done the columnar way).
   */
 object Layout {
-  /** Write `df` range-partitioned and sorted by `sortCols`, with at most
-    * `maxRecordsPerFile` rows per file.
+  /** Write `df` range-partitioned and sorted by `sortCols` into at most
+    * `numFiles` key-disjoint ranges, with at most `maxRecordsPerFile` rows
+    * per file.
+    *
+    * Without `splits` the range bounds come from `repartitionByRange`,
+    * which samples the whole input in a job of its own before the
+    * shuffle. With `splits` (ascending split points of the one sort
+    * column, fewer than `numFiles`, e.g. `percentile_approx` observed on
+    * an earlier pass) each row goes straight to its range through
+    * `repartitionById`, and no sample job runs: range i holds the keys in
+    * (split i-1, split i], nulls in the first. Repeated split points
+    * (fewer distinct keys than ranges) collapse into one range.
     */
   def writeSorted(df: DataFrame, dir: String, sortCols: Seq[String],
-                  numFiles: Int, maxRecordsPerFile: Long = 5000000L): Unit =
-    df.repartitionByRange(numFiles, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
+                  numFiles: Int, maxRecordsPerFile: Long = 5000000L,
+                  splits: Seq[Any] = Nil): Unit = {
+    require(splits.isEmpty || (sortCols.size == 1 && splits.size < numFiles),
+      "split points need one sort column and fewer splits than files")
+    val ranged =
+      if (splits.isEmpty) df.repartitionByRange(numFiles, sortCols.map(col): _*)
+      else {
+        val bounds = splits.distinct
+        val c = col(sortCols.head)
+        df.repartitionById(bounds.size + 1,
+          bounds.map(b => when(c > lit(b), 1).otherwise(0)).reduce(_ + _))
+      }
+    ranged.sortWithinPartitions(sortCols.map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .parquet(dir)
+  }
+
+  /** Whether `percentile_approx` takes values of `t`, so a one-column
+    * key of that type can have its range split points observed.
+    */
+  def rangeSplittable(t: DataType): Boolean = t match {
+    case _: NumericType | DateType | TimestampType | TimestampNTZType |
+         _: YearMonthIntervalType | _: DayTimeIntervalType => true
+    case _ => false
+  }
 
   /** Z-order curve value for `cols`: each column linearly scaled to a
     * `bits`-bit bucket within [min, max], buckets bit-interleaved. Rows

@@ -2,6 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InKeySet
+import org.apache.spark.sql.types.StructType
 
 /** Warm CDC topology + ordered versioned commit — the composition the
   * reference's `extract` (src/download.py:22-87) and `post_download`
@@ -28,20 +30,30 @@ object Pipeline {
 
   /** What [[warm]] returns. `kinds` is the one persisted frame, filled
     * when warm returns; `newSnapshot`, `changelog` and `newState` are lazy
-    * plans over it that the commit's three writes run.
+    * plans over it that the commit's three writes run. `bounds` maps a
+    * one-column key to the range split points warm observed for the next
+    * snapshot's layout (empty when none were observed); `keySets` are the
+    * broadcast delta key sets the three plans filter on (empty when they
+    * join instead).
     */
   final case class WarmResult(
     kinds: DataFrame,        // (key*, kind, sig): sig set on changed/new rows only
     newSnapshot: DataFrame,  // post-apply table state
     changelog: DataFrame,    // old versions of changed rows
     newState: DataFrame,     // (key*, sig) cache for the next run
-    counts: Map[String, Long] // rows per kind: changed/new/deleted/unchanged
+    counts: Map[String, Long], // rows per kind: changed/new/deleted/unchanged
+    bounds: Map[String, Seq[Any]] = Map.empty,
+    keySets: Seq[Diff.KeySet] = Nil
   ) {
-    /** Release the classification warm() pinned; call after committing.
-      * Repeated warm runs (continuous apply) leak cache entries without
-      * this.
+    /** Release the classification warm() pinned and destroy its key-set
+      * broadcasts; call after committing (the three plans cannot run
+      * after it). Repeated warm runs (continuous apply) leak cache entries
+      * and broadcast blocks without this. Idempotent.
       */
-    def release(): Unit = kinds.unpersist()
+    def release(): Unit = {
+      kinds.unpersist(blocking = true)
+      keySets.foreach(_.release())
+    }
   }
 
   /** How a committed snapshot's files are laid out (reference:
@@ -60,13 +72,22 @@ object Pipeline {
     final case class Zordered(cols: Seq[String]) extends SnapshotLayout
   }
 
-  private def writeSnapshot(df: DataFrame, dir: String, layout: SnapshotLayout): Unit =
+  /** `bounds`: observed range split points per column ([[WarmResult]]);
+    * a one-column z-order over such a column is the range-sorted write on
+    * them, with no sample job.
+    */
+  private def writeSnapshot(df: DataFrame, dir: String, layout: SnapshotLayout,
+                            bounds: Map[String, Seq[Any]]): Unit = {
+    val n = df.sparkSession.sparkContext.defaultParallelism
     layout match {
       case SnapshotLayout.Plain =>
         df.write.mode(SaveMode.Overwrite).parquet(dir)
+      case SnapshotLayout.Zordered(Seq(c)) if bounds.contains(c) =>
+        Layout.writeSorted(df, dir, Seq(c), n, splits = bounds(c))
       case SnapshotLayout.Zordered(cols) =>
-        Layout.writeZordered(df, dir, cols, df.sparkSession.sparkContext.defaultParallelism)
+        Layout.writeZordered(df, dir, cols, n)
     }
+  }
 
   /** Warm incremental run (reference download.py:44-63 + post_download
     * 532-604). `internal` is the current snapshot, `external` the live
@@ -83,15 +104,28 @@ object Pipeline {
     * is not checked.
     *
     * Stage shape. `kinds`, the classify join, is persisted: it feeds the
-    * counts, the changelog, the fetch and both next tables. Warm runs one
-    * job: a `noop` write of `kinds` that fills its cache and observes the
-    * per-kind counts ([[WarmResult.counts]]) on the way, so the counts
-    * cost no aggregate stage. Everything else is lazy and runs in the
-    * commit's writes. Each next table is its old rows minus ONE delta-key
-    * set `upd` (the changed, new and deleted keys; only the touched ones
-    * when the delete breaker trips) plus the touched keys' new rows, so
-    * each write builds one broadcast of `upd`, the snapshot one more of
-    * the touched keys for the fetch, and no build side scans the source.
+    * counts, the changelog, the fetch and both next tables. Warm's first
+    * job is a `noop` write of `kinds` that fills its cache and observes,
+    * on the way, the per-kind counts ([[WarmResult.counts]]) and, for a
+    * one-column key `percentile_approx` takes, the range split points of
+    * the keys the next snapshot keeps ([[WarmResult.bounds]]): the counts
+    * cost no aggregate stage, and a one-column z-ordered commit writes on
+    * these bounds with no sample job ([[Layout.writeSorted]]). Each next
+    * table is its old rows minus ONE delta-key set `upd` (the changed, new
+    * and deleted keys; only the touched ones when the delete breaker
+    * trips) plus the touched keys' new rows. When the delta fits the
+    * planner's own `autoBroadcastJoinThreshold` (delta rows × the
+    * `(key, kind)` row's default size, as `Dedup.dupClusters` decides),
+    * warm's second and last job collects the delta keys from the cache,
+    * and each key set (changed, touched, `upd`; equal sets share one)
+    * becomes one broadcast variable, which starts no job
+    * ([[WarmResult.keySets]]). The
+    * changelog, the fetch and both removals of `upd` are then filters on
+    * null-safe key membership ([[Diff.inKeySet]]), so each commit write
+    * runs only its own map and write stages. Otherwise, or for a key type
+    * with non-binary equality, they are the `<=>` semi and anti joins
+    * against the cached delta, and no build side scans the source.
+    * Everything but the two jobs is lazy and runs in the commit's writes;
     * `newSnapshot` is not persisted: the commit's write is its only
     * consumer.
     *
@@ -125,29 +159,72 @@ object Pipeline {
     val st = state.getOrElse(Diff.sigTable(internal, key, dataCols))
     val kinds = Diff.classifyWithSig(st, external, key, dataCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val spark = kinds.sparkSession
     val kindNames = Seq("changed", "new", "deleted", "unchanged")
     val perKind = kindNames.map(k => count(when(col(Diff.KindCol) === k, 1)).as(k))
+    // range split points of the keys the next snapshot keeps, one split
+    // per default-parallelism file, for a one-column key percentile_approx
+    // takes; observed on the same job
+    val n = spark.sparkContext.defaultParallelism
+    val rangeKey = key match {
+      case Seq(k) if n > 1 && Layout.rangeSplittable(kinds.schema(k).dataType) => Some(k)
+      case _ => None
+    }
+    val splits = rangeKey.map(k => percentile_approx(
+      when(col(Diff.KindCol) =!= "deleted", col(k)),
+      lit((1 until n).map(_.toDouble / n).toArray), lit(10000)).as("__splits"))
     val observed = Observation()
-    kinds.observe(observed, perKind.head, perKind.tail: _*)
+    kinds.observe(observed, perKind.head, perKind.tail ++ splits: _*)
       .write.format("noop").mode(SaveMode.Overwrite).save()
-    val counts = observed.get.map { case (k, n) => k -> n.asInstanceOf[Long] }
+    val seen = observed.get
+    val counts = kindNames.map(k => k -> seen(k).asInstanceOf[Long]).toMap
+    val bounds = rangeKey.flatMap(k => Option(seen("__splits")).map(s => k -> s.asInstanceOf[Seq[Any]]))
+      .toMap
 
     // Deleted-rows circuit breaker (download.py:326-330): if the source
     // lost too many keys, treat it as a source fault and skip deletes.
-    val touched = kinds.filter(col(Diff.KindCol).isin("changed", "new"))
-    val upd =
-      if (counts("deleted") >= maxDeletes) touched
-      else kinds.filter(col(Diff.KindCol) =!= "unchanged")
-    val changelog = Changelog.captureOld(internal,
-      kinds.filter(col(Diff.KindCol) === "changed"), key)
-    val newSnapshot = Diff.antiJoinDeleted(internal, upd, key)
-      .unionByName(deriveFetched(Diff.semiJoinChanged(external, touched, key)))
+    val touchedKinds = Seq("changed", "new")
+    val updKinds =
+      if (counts("deleted") >= maxDeletes) touchedKinds else touchedKinds :+ "deleted"
+    def deltaOf(ks: Seq[String]) = kinds.filter(col(Diff.KindCol).isin(ks: _*))
+    // The delta keys go to the driver once when they fit the planner's
+    // own broadcast threshold; each key set is then a broadcast variable
+    // the writes filter on, and none of them joins
+    val keyTypes = key.map(k => kinds.schema(k).dataType)
+    val delta = counts("changed") + counts("new") + counts("deleted")
+    val rowSize = StructType(key.map(kinds.schema(_)) :+ kinds.schema(Diff.KindCol)).defaultSize
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val keySets: Map[Seq[String], Diff.KeySet] =
+      if (threshold < 0 || delta * rowSize > threshold || !InKeySet.supports(keyTypes)) Map.empty
+      else {
+        val rows = kinds.filter(col(Diff.KindCol) =!= "unchanged")
+          .select(key.map(col) :+ col(Diff.KindCol): _*).collect()
+        // a kind no row has adds no key, so sets over the same present
+        // kinds are one broadcast (a cold load's touched and `upd`, an
+        // upsert-only batch's)
+        val kindSets = Seq(Seq("changed"), touchedKinds, updKinds)
+        def present(ks: Seq[String]) = ks.filter(counts(_) > 0)
+        val built = kindSets.map(present).distinct.map { ks =>
+          ks -> Diff.keySet(spark, keyTypes,
+            rows.iterator.filter(r => ks.contains(r.getString(key.size))))
+        }.toMap
+        kindSets.map(ks => ks -> built(present(ks))).toMap
+      }
+    def semi(df: DataFrame, ks: Seq[String]) = keySets.get(ks)
+      .fold(Diff.semiJoinChanged(df, deltaOf(ks), key))(s => df.filter(Diff.inKeySet(key, s)))
+    def anti(df: DataFrame, ks: Seq[String]) = keySets.get(ks)
+      .fold(Diff.antiJoinDeleted(df, deltaOf(ks), key))(s => df.filter(!Diff.inKeySet(key, s)))
+
+    // the changelog is Changelog.captureOld's semi-join on the changed keys
+    val changelog = semi(internal, Seq("changed"))
+    val newSnapshot = anti(internal, updKinds)
+      .unionByName(deriveFetched(semi(external, touchedKinds)))
     // the RAW-source sigs the classify computed for touched keys (the
     // reference updates `{t}_hashes` from downloaded rows,
     // download.py:577-583 — never from the post-derive replica)
-    val newState = Diff.antiJoinDeleted(st, upd, key)
-      .unionByName(touched.select(key.map(col) :+ col(Diff.SigCol): _*))
-    WarmResult(kinds, newSnapshot, changelog, newState, counts)
+    val newState = anti(st, updKinds)
+      .unionByName(deltaOf(touchedKinds).select(key.map(col) :+ col(Diff.SigCol): _*))
+    WarmResult(kinds, newSnapshot, changelog, newState, counts, bounds, keySets.values.toSeq.distinct)
   }
 
   /** Crash-consistent commit: changelog/snapshot/state land in fresh
@@ -173,7 +250,7 @@ object Pipeline {
       // leaves the orphan invisible to readChangelog (which filters v <=
       // pointer), and a retry overwrites rather than duplicating history
       r.changelog.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/changelog/v=$version")
-      writeSnapshot(r.newSnapshot, s"$baseDir/snapshot/v=$version", layout)
+      writeSnapshot(r.newSnapshot, s"$baseDir/snapshot/v=$version", layout, r.bounds)
       r.newState.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/state/v=$version")
     }
 

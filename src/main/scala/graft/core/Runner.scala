@@ -25,17 +25,20 @@ object Runner {
     * — prunes files instead of scanning the whole snapshot
     * (RunnerSpec pins the post-commit pruning). A one-column key and
     * non-numeric keys take the range-sorted writer inside
-    * [[Layout.writeZordered]] (no min/max stats job); the layout pass
-    * then costs one range-bounds sample and one shuffle of the snapshot
-    * per commit.
+    * [[Layout.writeZordered]] (no min/max stats job). A one-column key
+    * `percentile_approx` takes writes on the range split points warm
+    * observed, so the layout pass costs one shuffle of the snapshot per
+    * commit; other keys add one range-bounds sample.
     *
-    * Stage shape per table of a warm run: opening the committed snapshot
-    * and state starts no job ([[Tables.readCommitted]]); [[Pipeline.warm]]
-    * runs one job, which fills the classification cache and observes the
-    * per-kind counts; the commit runs three writes — changelog, snapshot
-    * (range sample, then the shuffle) and state — whose only broadcasts
-    * are delta-key sets read from that cache. In perfbench `cdc_warm`
-    * (seed 1) that is 4 warm and 9 commit stages per table.
+    * Stage shape per table of a warm run whose delta fits the broadcast
+    * threshold: opening the committed snapshot and state starts no job
+    * ([[Tables.readCommitted]]); [[Pipeline.warm]] runs two jobs, one
+    * that fills the classification cache and observes the per-kind counts
+    * and the split points, and a one-stage collect of the delta keys from
+    * that cache; the commit runs three writes — changelog, snapshot (its
+    * shuffle, then the write) and state — that filter on the broadcast
+    * key sets and build no broadcast. In perfbench `cdc_warm` (seed 1,
+    * 4 cores) that is 5 warm and 4 commit stages per table.
     */
   def extractAll(spark: SparkSession, sources: Seq[Source], baseDir: String): Map[String, Long] = {
     val versions = new java.util.concurrent.ConcurrentHashMap[String, Long]()

@@ -90,4 +90,21 @@ class DiffSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getString(1))).toSet
     assert(out == Set((1, "a"), (2, "B"), (3, "c")))
   }
+
+  test("key-set filter: NaN, -0.0, null and string keys match as the <=> joins do") {
+    val data = Seq((Some(Double.NaN), 0), (Some(0.0), 1), (Some(-0.0), 2), (None, 3), (Some(1.5), 4))
+      .toDF("d", "p")
+    val keys = Seq(Tuple1(Some(Double.NaN)), Tuple1(Some(-0.0)), Tuple1(None)).toDF("d")
+    val strData = Seq((Some("a"), 0), (Some("A"), 1), (None, 2), (Some(""), 3)).toDF("s", "p")
+    val strKeys = Seq(Tuple1(Some("a")), Tuple1(Some(""))).toDF("s")
+    for ((d, k, c, semi) <- Seq((data, keys, "d", Seq(0, 1, 2, 3)), (strData, strKeys, "s", Seq(0, 3)))) {
+      val ks = Diff.keySet(spark, Seq(k.schema(c).dataType), k.collect().iterator)
+      def ps(df: org.apache.spark.sql.DataFrame) = df.select("p").as[Int].collect().sorted.toSeq
+      try {
+        assert(ps(d.filter(Diff.inKeySet(Seq(c), ks))) == semi)
+        assert(ps(Diff.semiJoinChanged(d, k, Seq(c))) == semi)
+        assert(ps(d.filter(!Diff.inKeySet(Seq(c), ks))) == ps(Diff.antiJoinDeleted(d, k, Seq(c))))
+      } finally ks.release()
+    }
+  }
 }

@@ -36,6 +36,19 @@ class LayoutSpec extends AnyFunSuite {
     assertKeyRangeFiles(dir, e.count())
   }
 
+  test("range-sorted layout on given split points: disjoint key ranges, no sample job") {
+    val base = java.nio.file.Files.createTempDirectory("graft_layout_splits").toString
+    val e = Fixture.external(spark, TestSpark.Sf)
+    e.count() // builds the memoized fixture outside the job counts
+    val splits = e.agg(percentile_approx(col("l_orderkey"), lit(Array(0.25, 0.5, 0.75)), lit(10000)))
+      .head().getSeq[Long](0)
+    val sampled = TestSpark.jobsOf(Layout.writeSorted(e, s"$base/sampled", Seq("l_orderkey"), numFiles = 4))
+    val given = TestSpark.jobsOf(
+      Layout.writeSorted(e, s"$base/given", Seq("l_orderkey"), numFiles = 4, splits = splits))
+    assertKeyRangeFiles(s"$base/given", e.count())
+    assert(given == sampled - 1, s"split points: $given jobs, a sampled write $sampled")
+  }
+
   test("one-column z-order is the range-sorted layout: disjoint key ranges, min/max pruning") {
     val dir = java.nio.file.Files.createTempDirectory("graft_layout_z1").toString
     val e = Fixture.external(spark, TestSpark.Sf)

@@ -8,6 +8,7 @@ import graft.queries.Fixture
 
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  import TestSpark.{jobsOf, withBroadcastThreshold}
 
   test("warm pipeline: snapshot converges to external, changelog holds old rows") {
     val e = Fixture.external(spark, TestSpark.Sf)
@@ -56,43 +57,111 @@ class PipelineSpec extends AnyFunSuite {
         Fixture.Key, Fixture.DataCols).persist()
       try k.write.format("noop").mode("overwrite").save() finally k.unpersist()
     }
-    var r: Pipeline.WarmResult = null
-    val warmJobs = jobsOf { r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols) }
-    try {
-      val want = Fixture.kinds(spark, TestSpark.Sf).groupBy("kind").count().collect()
-        .map(r2 => r2.getString(0) -> r2.getLong(1)).toMap
-      assert(r.counts == Map("changed" -> 0L, "new" -> 0L, "deleted" -> 0L, "unchanged" -> 0L) ++ want)
-      assert(warmJobs == fillJobs, s"warm ran $warmJobs jobs, filling the classification alone $fillJobs")
-    } finally r.release()
+    val want = Fixture.kinds(spark, TestSpark.Sf).groupBy("kind").count().collect()
+      .map(r2 => r2.getString(0) -> r2.getLong(1)).toMap
+    // the delta fits the broadcast threshold: one more job collects its
+    // keys to the driver; with broadcasts off, the fill job is the only one
+    for ((threshold, extra) <- Seq((10L << 20) -> 1, -1L -> 0)) {
+      var r: Pipeline.WarmResult = null
+      val warmJobs = withBroadcastThreshold(threshold) {
+        jobsOf { r = Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols) }
+      }
+      try {
+        assert(r.counts == Map("changed" -> 0L, "new" -> 0L, "deleted" -> 0L, "unchanged" -> 0L) ++ want)
+        assert(warmJobs == fillJobs + extra,
+          s"threshold $threshold: warm ran $warmJobs jobs, filling the classification alone $fillJobs")
+        assert(r.keySets.nonEmpty == (extra == 1), s"threshold $threshold")
+      } finally r.release()
+    }
   }
 
-  /** Spark jobs started by `f`, counted by job group. A sentinel job in a
-    * group of its own flushes the listener bus, which delivers in order.
-    */
-  private def jobsOf(f: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"graft-jobs-${System.nanoTime()}"
-    val sentinel = s"$group-end"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`sentinel`) => flushed.countDown()
-          case _ =>
-        }
+  test("the delete breaker skips deletes on the driver-side key sets exactly as on the join path") {
+    val e = Fixture.external(spark, TestSpark.Sf)
+    val i = Fixture.internal(spark, TestSpark.Sf)
+    val st = Diff.sigTable(i, Fixture.Key, Fixture.DataCols)
+    def same(a: DataFrame, b: DataFrame) = a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    def run(threshold: Long) = withBroadcastThreshold(threshold) {
+      Pipeline.warm(i, e, Fixture.Key, Fixture.DataCols, maxDeletes = 0L, state = Some(st))
     }
-    sc.addSparkListener(listener)
+    val (driver, joined) = (run(10L << 20), run(-1L))
     try {
-      sc.setJobGroup(group, "counted", interruptOnCancel = false)
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "sentinel", interruptOnCancel = false)
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
-    } finally sc.removeSparkListener(listener)
-    jobs.get
+      assert(driver.keySets.nonEmpty && joined.keySets.isEmpty)
+      assert(driver.counts == joined.counts && driver.counts("deleted") > 0, driver.counts)
+      // the deleted keys keep their snapshot rows and their state rows
+      val deleted = driver.kinds.filter(col("kind") === "deleted").select(Fixture.Key.map(col): _*)
+      for (r <- Seq(driver, joined)) {
+        assert(same(r.newSnapshot.join(deleted, Fixture.Key, "left_semi"),
+          i.join(deleted, Fixture.Key, "left_semi")))
+        assert(same(r.newState.join(deleted, Fixture.Key, "left_semi"),
+          st.join(deleted, Fixture.Key, "left_semi")))
+      }
+      assert(same(driver.newSnapshot, joined.newSnapshot))
+      assert(same(driver.newState, joined.newState))
+      assert(same(driver.changelog, joined.changelog))
+    } finally { driver.release(); joined.release() }
+  }
+
+  test("a one-column key commits on the split points warm observed: sorted, key-disjoint files, no sample job") {
+    import spark.implicits._
+    def table(rows: Seq[(Option[Long], String)]) = rows.toDF("k", "v")
+    val many = (1L to 400L).map(k => Some(k) -> s"v$k")
+    val cases = Seq(
+      // changed, deleted and new keys across the whole range
+      "many keys" -> (many, many.filter(_._1.get % 7 != 0).map { case (k, v) =>
+        k -> (if (k.get % 5 == 0) v + "'" else v) } ++ (401L to 420L).map(k => Some(k) -> s"v$k")),
+      "fewer keys than files" -> (Seq(Some(1L) -> "a", Some(2L) -> "b"),
+        Seq(Some(1L) -> "a2", Some(2L) -> "b")),
+      "an empty delta" -> (many, many),
+      "a null key" -> (Seq(None -> "n", Some(1L) -> "a", Some(2L) -> "b"),
+        Seq(None -> "n2", Some(1L) -> "a", Some(3L) -> "c")))
+    for ((name, (prev, next)) <- cases) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_splits").toString
+      val r = Pipeline.warm(table(prev), table(next), Seq("k"), Seq("v"))
+      try {
+        assert(r.bounds.get("k").exists(_.nonEmpty), s"$name: no split points observed")
+        val jobs = jobsOf(Pipeline.commitVersioned(r, dir, Pipeline.SnapshotLayout.Zordered(Seq("k"))))
+        // changelog, snapshot shuffle map, snapshot write, state: a range
+        // sample would be a fifth job
+        assert(jobs == 4, s"$name: the commit ran $jobs jobs")
+      } finally r.release()
+      val snap = Pipeline.readLatest(spark, dir, "snapshot")
+      assert(snap.exceptAll(table(next)).isEmpty && table(next).exceptAll(snap).isEmpty, name)
+      // each file holds one sorted key range, nulls first: the files, in
+      // the order of their first keys, concatenate to the sorted keys
+      val files = new java.io.File(s"$dir/snapshot/v=1").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+      val perFile = files.map(f => spark.read.parquet(f).select("k").collect()
+        .map(row => Option(row.get(0)).map(_.asInstanceOf[Long])).toSeq).filter(_.nonEmpty)
+      val keys = perFile.sortBy(_.head).flatten
+      assert(keys == next.map(_._1).sorted, s"$name: file key ranges ${perFile.map(f => (f.head, f.last))}")
+      assert(perFile.size <= math.min(next.size, spark.sparkContext.defaultParallelism), name)
+    }
+  }
+
+  test("repeated warm runs leave no key-set broadcast and no cached block behind after release") {
+    import spark.implicits._
+    import org.apache.spark.sql.graft.BlockProbe
+    val dir = java.nio.file.Files.createTempDirectory("graft_release").toString
+    val cached = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    // warm against the committed state, commit, release: the loop
+    // StreamingCdc.continuousApplyBucketed runs once per micro-batch
+    for (c <- 1 to 3) {
+      val next = (1 to 50).map(k => (k.toLong, k * c)).toDF("k", "v")
+      val (internal, state) = Pipeline.currentVersion(dir) match {
+        case Some(_) => (Pipeline.readLatest(spark, dir, "snapshot"),
+          Some(Pipeline.readLatest(spark, dir, "state")))
+        case None => (next.limit(0), None)
+      }
+      val r = Pipeline.warm(internal, next, Seq("k"), Seq("v"), state = state)
+      val ids = r.keySets.map(_.keys.id)
+      assert(ids.nonEmpty, s"cycle $c: the delta should go to the driver")
+      try Pipeline.commitVersioned(r, dir) finally r.release()
+      r.release() // idempotent
+      for (id <- ids) assert(BlockProbe.broadcastBlocks(id).isEmpty, s"cycle $c: broadcast $id")
+      assert(spark.sparkContext.getRDDStorageInfo.map(_.id).toSet == cached, s"cycle $c")
+    }
+    assert(Pipeline.readLatest(spark, dir, "snapshot").as[(Long, Int)].collect().toSet ==
+      (1 to 50).map(k => (k.toLong, k * 3)).toSet)
   }
 
   /** `read` equals `spark.read.parquet(dir)` in schema and rows. */

@@ -17,8 +17,9 @@ import graft.queries.Fixture
   * no Exchange in the plan carries a data column. And warm derives each
   * delta once: the next state comes from the classify, not from a second
   * source fetch, and no semi/anti join re-deduplicates its key side.
-  * Each commit write removes one delta-key set from its old rows, so no
-  * broadcast build side re-reads the source.
+  * When the delta keys fit the broadcast threshold, the commit writes
+  * filter on key sets warm collected to the driver: no broadcast exchange,
+  * no join on the keys, and no read of the source but the fetch.
   */
 class WarmPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
@@ -104,31 +105,48 @@ class WarmPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("commit writes broadcast delta keys only: none scans the source, the state builds one") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warm_bcast").toString
+  test("commit writes filter on driver-side delta keys: no broadcast, no key join, no source scan but the fetch") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_warm_keys").toString
     val i = Fixture.internal(spark, TestSpark.Sf)
     Fixture.external(spark, TestSpark.Sf).write.parquet(s"$dir/source")
     val e = spark.read.parquet(s"$dir/source")
     val cold = Pipeline.warm(i.limit(0), i, Fixture.Key, Fixture.DataCols)
     try Pipeline.commitVersioned(cold, s"$dir/t", Pipeline.SnapshotLayout.Zordered(Fixture.Key))
     finally cold.release()
-    val r = Pipeline.warm(Pipeline.readLatest(spark, s"$dir/t", "snapshot"), e,
+    def warmed() = Pipeline.warm(Pipeline.readLatest(spark, s"$dir/t", "snapshot"), e,
       Fixture.Key, Fixture.DataCols, state = Some(Pipeline.readLatest(spark, s"$dir/t", "state")))
+    // the session's own posture (AQE on, default broadcast threshold): run
+    // each frame, then read its final plan; a cached frame's scan counts
+    // as a scan of the cache, not of its sources
+    def finalPlan(df: org.apache.spark.sql.DataFrame): SparkPlan = {
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    def sourceScans(p: SparkPlan) = collect(p) { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.map(_.toString) }.flatten.count(_.contains(s"$dir/source"))
+    def joins(p: SparkPlan) = collect(p) { case j: BaseJoinExec => j }
+    def outputs(r: Pipeline.WarmResult) = Seq(r.changelog, r.newSnapshot, r.newState)
+      .map(_.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|")))
+    val r = warmed()
     try {
-      // the session's own posture (AQE on, default broadcast threshold):
-      // run each frame, then read the broadcasts off its final plan; a
-      // cached frame's scan counts as a scan of the cache, not its sources
-      def broadcasts(df: org.apache.spark.sql.DataFrame): Seq[BroadcastExchangeLike] = {
-        df.collect()
-        collect(df.queryExecution.executedPlan) { case b: BroadcastExchangeLike => b }
+      assert(r.keySets.nonEmpty, "the fixture's delta should fit the broadcast threshold")
+      for ((name, df) <- Seq("changelog" -> r.changelog, "newSnapshot" -> r.newSnapshot,
+                             "newState" -> r.newState)) {
+        val plan = finalPlan(df)
+        assert(collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty, s"$name broadcasts:\n$plan")
+        assert(joins(plan).isEmpty, s"$name joins:\n$plan")
+        // the snapshot's fetch is the one read of the source
+        assert(sourceScans(plan) == (if (name == "newSnapshot") 1 else 0), s"$name:\n$plan")
       }
-      def scansSource(p: SparkPlan) = collect(p) { case s: FileSourceScanExec =>
-        s.relation.location.rootPaths.map(_.toString) }.flatten.exists(_.contains(s"$dir/source"))
-      val snap = broadcasts(r.newSnapshot)
-      assert(snap.nonEmpty, "the fixture's delta keys should broadcast")
-      assert(!snap.exists(scansSource), s"a snapshot broadcast scans the source:\n${snap.mkString("\n")}")
-      val state = broadcasts(r.newState)
-      assert(state.size == 1, s"state broadcasts:\n${state.mkString("\n")}")
+      // over the threshold (set low here) the join plan returns and
+      // commits the same rows
+      val joined = TestSpark.withBroadcastThreshold(1L)(warmed())
+      try {
+        assert(joined.keySets.isEmpty)
+        for (df <- Seq(joined.changelog, joined.newSnapshot, joined.newState))
+          assert(joins(finalPlan(df)).exists(j => j.joinType == LeftSemi || j.joinType == LeftAnti))
+        assert(outputs(joined) == outputs(r))
+      } finally joined.release()
     } finally r.release()
   }
 }
