@@ -22,7 +22,7 @@ object Changelog {
     // null-safe (<=>) like the rest of the diff algebra: a null-key row
     // classified 'changed' must have its old version captured too, or the
     // upsert rewrites it with no history trail
-    oldSnapshot.join(Diff.rightKeys(changed, key), Diff.nsCond(key), "left_semi")
+    Diff.semiJoinChanged(oldSnapshot, changed, key)
 
   /** changelog_latest: reconstruct latest-version-per-key from an
     * append-only changelog. The reference keeps history implicitly ordered

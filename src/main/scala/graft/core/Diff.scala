@@ -33,32 +33,87 @@ import org.apache.spark.sql.types.DataType
   * list held in the process (download.py:435-476, 585-595): the delta
   * keys go to the driver once and the fetch, changelog and deletes
   * filter on them ([[inKeySet]]), the same rows as the joins below.
-  * Every operator matches keys by one rule, null-safe `<=>` ([[nsCond]]).
-  * Semi and anti joins do not deduplicate their key side: a duplicate
-  * build key changes no output row of a left-semi or left-anti join, and
-  * a `distinct()` there would only add an aggregate exchange.
+  * Every operator matches keys by one rule, null-safe `<=>` ([[Keys]]).
   */
 object Diff {
   val KindCol = "kind"
   val SigCol  = "sig"
 
-  /** Key equi condition between `left`'s key columns and the
-    * `__dk_`-renamed key columns of a right side built by [[rightKeys]].
+  /** The one rule for what the driver holds: `df` fits when its bytes
+    * are within `autoBroadcastJoinThreshold`, the planner's own broadcast
+    * rule, where -1 means never. The bytes are `rows` × the row schema's
+    * default size when the caller knows the row count, else the plan's
+    * size estimate. A fitting `df` is collected; a local relation's
+    * collect starts no job.
+    */
+  private[graft] def collectIfSmall(df: DataFrame, rows: Option[Long]): Option[Array[Row]] = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bytes = rows.fold(df.queryExecution.optimizedPlan.stats.sizeInBytes)(BigInt(_) * df.schema.defaultSize)
+    if (threshold >= 0 && bytes <= threshold) Some(df.collect()) else None
+  }
+
+  /** [[collectIfSmall]] for rows whose first columns are `key`, when
+    * `InKeySet.supports` their types: rows a [[KeySet]] can be built from.
+    */
+  private[graft] def collectKeysIfSmall(df: DataFrame, key: Seq[String],
+                                        rows: Option[Long]): Option[Array[Row]] =
+    if (InKeySet.supports(key.map(df.schema(_).dataType))) collectIfSmall(df, rows) else None
+
+  /** `df` as a local relation when it fits ([[collectIfSmall]]), else
+    * `df`: a relation several plans read reaches the driver once.
+    */
+  private[graft] def localIfSmall(df: DataFrame): DataFrame =
+    collectIfSmall(df, None).fold(df)(rows =>
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
+
+  /** The `key` columns of `df` as [[Keys]]: a broadcast [[KeySet]] when
+    * they fit the driver ([[collectKeysIfSmall]]), else joined.
+    */
+  private[graft] def keys(df: DataFrame, key: Seq[String]): Keys = {
+    val k = df.select(key.map(col): _*)
+    Keys(k, key, collectKeysIfSmall(k, key, None).map(rows =>
+      keySet(df.sparkSession, key.map(k.schema(_).dataType), rows.iterator)))
+  }
+
+  /** The `key` columns of `df`, probed by the algebra's one key rule,
+    * null-safe `<=>`: through `set` when the driver holds them, else by a
+    * join against `df`. Semi and anti joins do not deduplicate `df`: a
+    * duplicate build key changes no output row of a left-semi or
+    * left-anti join, and a `distinct()` there would only add an aggregate
+    * exchange.
     *
-    * Null-safe (`<=>`) is the one key rule of the algebra: it keeps every
+    * Null-safe is the one key rule of the algebra: it keeps every
     * operator consistent for nullable keys — a null-key row matches its
     * null-key counterpart (instead of an internal null-key row classifying
     * 'deleted' while the external null-key row appends as 'new', which
-    * broke the documented apply(diff(i,e),i)==e round-trip).
+    * broke the documented apply(diff(i,e),i)==e round-trip). A caller
+    * whose keys match by `===` filters out its null probes first.
     */
-  private[core] def nsCond(key: Seq[String]): Column =
-    key.map(k => col(k) <=> col(s"__dk_$k")).reduce(_ && _)
+  private[graft] final case class Keys(df: DataFrame, key: Seq[String], set: Option[KeySet]) {
+    private def right = df.select(key.map(k => col(k).as(s"__dk_$k")): _*)
+    private def cond(probe: Seq[String]) =
+      probe.zip(key).map { case (p, k) => col(p) <=> col(s"__dk_$k") }.reduce(_ && _)
 
-  private[core] def rightKeys(df: DataFrame, key: Seq[String]): DataFrame =
-    df.select(key.map(k => col(k).as(s"__dk_$k")): _*)
+    /** The rows of `probed` whose `probe` columns match a key. */
+    def semi(probed: DataFrame, probe: Seq[String]): DataFrame = set.fold(
+      probed.join(right, cond(probe), "left_semi"))(s => probed.filter(inKeySet(probe, s)))
+
+    /** The rows of `probed` whose `probe` columns match no key. */
+    def anti(probed: DataFrame, probe: Seq[String]): DataFrame = set.fold(
+      probed.join(right, cond(probe), "left_anti"))(s => probed.filter(!inKeySet(probe, s)))
+
+    /** `probed` with a boolean column `name`: whether its `probe` columns
+      * match a key; never null. Joined, the keys are deduplicated, so no
+      * row of `probed` is repeated.
+      */
+    def flag(probed: DataFrame, probe: Seq[String], name: String): DataFrame = set.fold(
+      probed.join(right.distinct().withColumn(name, lit(true)), cond(probe), "left_outer")
+        .na.fill(false, Seq(name)).drop(key.map(k => s"__dk_$k"): _*)
+    )(s => probed.withColumn(name, inKeySet(probe, s)))
+  }
 
   /** A key set held by the driver and broadcast to every task: the
-    * `<=>` rule of [[nsCond]] as a membership test ([[inKeySet]]), so a
+    * `<=>` rule of [[Keys]] as a membership test ([[inKeySet]]), so a
     * filter does what a left-semi or left-anti join against a frame of
     * these keys does, with no join and no job to build it, for key types
     * `InKeySet.supports` (all but strings of a non-binary collation).
@@ -139,22 +194,21 @@ object Diff {
     * `keys` is typically small (the delta) → AQE broadcast.
     */
   def semiJoinChanged(source: DataFrame, keys: DataFrame, key: Seq[String]): DataFrame =
-    source.join(rightKeys(keys, key), nsCond(key), "left_semi")
+    Keys(keys, key, None).semi(source, key)
 
   /** anti_join_deleted: rows present in `snapshot` but absent from
     * `source` (reference collects internal-only residue then issues
     * batched DELETEs, download.py:326-366).
     */
   def antiJoinDeleted(snapshot: DataFrame, source: DataFrame, key: Seq[String]): DataFrame =
-    snapshot.join(rightKeys(source, key), nsCond(key), "left_anti")
+    Keys(source, key, None).anti(snapshot, key)
 
   /** upsert_replace: REPLACE INTO semantics — new rows supersede old by
     * key, unmatched old rows survive (reference: download.py:572-577,
     * 597-604). anti-join + union keeps this a pure column-pruned plan.
     */
   def upsertReplace(old: DataFrame, replacements: DataFrame, key: Seq[String]): DataFrame =
-    old.join(rightKeys(replacements, key), nsCond(key), "left_anti")
-      .unionByName(replacements)
+    antiJoinDeleted(old, replacements, key).unionByName(replacements)
 
   /** diff_apply: the end-to-end CDC contract —
     * `apply(diff(internal, external), internal) == external`
@@ -180,7 +234,6 @@ object Diff {
     val touched = kinds.filter(col(KindCol).isin("changed", "new"))
     val fetched = semiJoinChanged(external, touched, key)
     val deleted = kinds.filter(col(KindCol) === "deleted")
-    val kept    = internal.join(rightKeys(deleted, key), nsCond(key), "left_anti")
-    upsertReplace(kept, fetched, key)
+    upsertReplace(antiJoinDeleted(internal, deleted, key), fetched, key)
   }
 }

@@ -2,8 +2,6 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.InKeySet
-import org.apache.spark.sql.types.StructType
 
 /** Warm CDC topology + ordered versioned commit — the composition the
   * reference's `extract` (src/download.py:22-87) and `post_download`
@@ -113,18 +111,15 @@ object Pipeline {
     * these bounds with no sample job ([[Layout.writeSorted]]). Each next
     * table is its old rows minus ONE delta-key set `upd` (the changed, new
     * and deleted keys; only the touched ones when the delete breaker
-    * trips) plus the touched keys' new rows. When the delta fits the
-    * planner's own `autoBroadcastJoinThreshold` (delta rows × the
-    * `(key, kind)` row's default size, as `Dedup.dupClusters` decides),
-    * warm's second and last job collects the delta keys from the cache,
-    * and each key set (changed, touched, `upd`; equal sets share one)
-    * becomes one broadcast variable, which starts no job
-    * ([[WarmResult.keySets]]). The
-    * changelog, the fetch and both removals of `upd` are then filters on
-    * null-safe key membership ([[Diff.inKeySet]]), so each commit write
-    * runs only its own map and write stages. Otherwise, or for a key type
-    * with non-binary equality, they are the `<=>` semi and anti joins
-    * against the cached delta, and no build side scans the source.
+    * trips) plus the touched keys' new rows. When the delta keys go to
+    * the driver ([[Diff.collectKeysIfSmall]] on the observed counts),
+    * warm's second and last job collects them from the cache, and each
+    * key set (changed, touched, `upd`; equal sets share one) becomes one
+    * broadcast variable, which starts no job ([[WarmResult.keySets]]).
+    * The changelog, the fetch and both removals of `upd` are then
+    * [[Diff.Keys]] filters, so each commit write runs only its own map
+    * and write stages; otherwise they are its `<=>` joins against the
+    * cached delta, and no build side scans the source.
     * Everything but the two jobs is lazy and runs in the commit's writes;
     * `newSnapshot` is not persisted: the commit's write is its only
     * consumer.
@@ -187,42 +182,31 @@ object Pipeline {
     val updKinds =
       if (counts("deleted") >= maxDeletes) touchedKinds else touchedKinds :+ "deleted"
     def deltaOf(ks: Seq[String]) = kinds.filter(col(Diff.KindCol).isin(ks: _*))
-    // The delta keys go to the driver once when they fit the planner's
-    // own broadcast threshold; each key set is then a broadcast variable
-    // the writes filter on, and none of them joins
-    val keyTypes = key.map(k => kinds.schema(k).dataType)
-    val delta = counts("changed") + counts("new") + counts("deleted")
-    val rowSize = StructType(key.map(kinds.schema(_)) :+ kinds.schema(Diff.KindCol)).defaultSize
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val keySets: Map[Seq[String], Diff.KeySet] =
-      if (threshold < 0 || delta * rowSize > threshold || !InKeySet.supports(keyTypes)) Map.empty
-      else {
-        val rows = kinds.filter(col(Diff.KindCol) =!= "unchanged")
-          .select(key.map(col) :+ col(Diff.KindCol): _*).collect()
+    // the delta keys go to the driver once when they fit (Diff.collectIfSmall);
+    // each key set is then a broadcast variable the writes filter on, and
+    // none of them joins
+    val delta = Seq("changed", "new", "deleted")
+    val keySets: Map[Seq[String], Diff.KeySet] = Diff.collectKeysIfSmall(
+      deltaOf(delta).select(key.map(col) :+ col(Diff.KindCol): _*), key,
+      Some(delta.map(counts).sum)).fold(Map.empty[Seq[String], Diff.KeySet]) { rows =>
         // a kind no row has adds no key, so sets over the same present
         // kinds are one broadcast (a cold load's touched and `upd`, an
         // upsert-only batch's)
-        val kindSets = Seq(Seq("changed"), touchedKinds, updKinds)
-        def present(ks: Seq[String]) = ks.filter(counts(_) > 0)
-        val built = kindSets.map(present).distinct.map { ks =>
-          ks -> Diff.keySet(spark, keyTypes,
-            rows.iterator.filter(r => ks.contains(r.getString(key.size))))
-        }.toMap
-        kindSets.map(ks => ks -> built(present(ks))).toMap
+        val built = collection.mutable.Map.empty[Seq[String], Diff.KeySet]
+        Seq(Seq("changed"), touchedKinds, updKinds).map(ks => ks -> built.getOrElseUpdate(
+          ks.filter(counts(_) > 0), Diff.keySet(spark, key.map(kinds.schema(_).dataType),
+            rows.iterator.filter(r => ks.contains(r.getString(key.size)))))).toMap
       }
-    def semi(df: DataFrame, ks: Seq[String]) = keySets.get(ks)
-      .fold(Diff.semiJoinChanged(df, deltaOf(ks), key))(s => df.filter(Diff.inKeySet(key, s)))
-    def anti(df: DataFrame, ks: Seq[String]) = keySets.get(ks)
-      .fold(Diff.antiJoinDeleted(df, deltaOf(ks), key))(s => df.filter(!Diff.inKeySet(key, s)))
+    def keysOf(ks: Seq[String]) = Diff.Keys(deltaOf(ks), key, keySets.get(ks))
 
     // the changelog is Changelog.captureOld's semi-join on the changed keys
-    val changelog = semi(internal, Seq("changed"))
-    val newSnapshot = anti(internal, updKinds)
-      .unionByName(deriveFetched(semi(external, touchedKinds)))
+    val changelog = keysOf(Seq("changed")).semi(internal, key)
+    val newSnapshot = keysOf(updKinds).anti(internal, key)
+      .unionByName(deriveFetched(keysOf(touchedKinds).semi(external, key)))
     // the RAW-source sigs the classify computed for touched keys (the
     // reference updates `{t}_hashes` from downloaded rows,
     // download.py:577-583 — never from the post-derive replica)
-    val newState = anti(st, updKinds)
+    val newState = keysOf(updKinds).anti(st, key)
       .unionByName(deltaOf(touchedKinds).select(key.map(col) :+ col(Diff.SigCol): _*))
     WarmResult(kinds, newSnapshot, changelog, newState, counts, bounds, keySets.values.toSeq.distinct)
   }

@@ -30,15 +30,13 @@ object Runner {
     * observed, so the layout pass costs one shuffle of the snapshot per
     * commit; other keys add one range-bounds sample.
     *
-    * Stage shape per table of a warm run whose delta fits the broadcast
-    * threshold: opening the committed snapshot and state starts no job
-    * ([[Tables.readCommitted]]); [[Pipeline.warm]] runs two jobs, one
-    * that fills the classification cache and observes the per-kind counts
-    * and the split points, and a one-stage collect of the delta keys from
-    * that cache; the commit runs three writes — changelog, snapshot (its
-    * shuffle, then the write) and state — that filter on the broadcast
-    * key sets and build no broadcast. In perfbench `cdc_warm` (seed 1,
-    * 4 cores) that is 5 warm and 4 commit stages per table.
+    * Stage shape per table of a warm run whose delta keys go to the
+    * driver ([[Diff.collectIfSmall]]): opening the committed snapshot and
+    * state starts no job ([[Tables.readCommitted]]); [[Pipeline.warm]]
+    * runs two jobs, the cache fill and the delta-key collect; the commit
+    * runs three writes — changelog, snapshot (its shuffle, then the
+    * write) and state — that build no broadcast. In perfbench `cdc_warm`
+    * (seed 1, 4 cores) that is 5 warm and 4 commit stages per table.
     */
   def extractAll(spark: SparkSession, sources: Seq[Source], baseDir: String): Map[String, Long] = {
     val versions = new java.util.concurrent.ConcurrentHashMap[String, Long]()
@@ -105,7 +103,8 @@ object Runner {
     * staged directory replaces its live one ([[Commit.replaceDir]]), the
     * marker is cleared. The live directories are never written in place,
     * so a crash at any step leaves either the previous pair intact or the
-    * marker set.
+    * marker set. The tribe keys reach the driver at most once for both
+    * writes, under the one small-relation rule ([[Diff.localIfSmall]]).
     */
   def postUpdateIncremental(spark: SparkSession, baseDir: String,
                             tribe: DataFrame, oldMembers: DataFrame,
@@ -122,9 +121,10 @@ object Runner {
     // that a crash between the swaps may have left one table a run ahead of
     // the other, until the next call's rebuild replaces both and clears it
     val marker = Paths.get(s"$baseDir/_agg_swap_incomplete")
-    TribeAgg.tribeActive(tribe, members, activeKeys, tribeKey, memberTribeFk, memberKey)
+    val tribeKeys = Diff.localIfSmall(tribe.select(tribeKey))
+    TribeAgg.tribeActive(tribeKeys, members, activeKeys, tribeKey, memberTribeFk, memberKey)
       .write.mode(SaveMode.Overwrite).parquet(aTmp)
-    TribeAgg.tribeStats(tribe, members, facts, activeKeys, tribeKey,
+    TribeAgg.tribeStats(tribeKeys, members, facts, activeKeys, tribeKey,
         memberTribeFk, memberKey, factKey, statCols,
         precomputed = Some(Tables.readCommitted(spark, aTmp)))
       .write.mode(SaveMode.Overwrite).parquet(sTmp)

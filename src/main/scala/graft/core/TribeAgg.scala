@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   * §3: `nation` plays `tribe` (dim), `customer` plays `player` (fact),
   * `orders` plays `member`/`player_new` (bridge / per-run delta).
   *
-  * Scale notes: the dim side (`tribe`/`nation`) is tiny → broadcast; the
-  * delta key set is small → broadcast; the only shuffle is the final
-  * hash aggregate on the group key, with map-side partial aggregation.
+  * Tribe and active membership are key probes ([[Diff.keys]]), not
+  * joins: the one small-relation rule ([[Diff.collectIfSmall]]) decides
+  * whether their keys reach the driver. Membership matches by `===`, as
+  * the reference's joins do: a null tribe key, member FK or member key
+  * matches nothing, so no null probe reaches the probes' `<=>`.
   *
   * There is no incremental form. Like the reference, every post_update
   * ([[Runner.postUpdateIncremental]]) recomputes both tables over all
@@ -23,21 +25,25 @@ object TribeAgg {
     * snapshot — post_update.py:36-37, preserved exactly per SURVEY §7.4.5),
     * and POWER(COUNT(members), 0.5) as the `members_sqrt` normalizer.
     *
-    * `activeKeys` must be a 1-column DataFrame of distinct changed member
-    * keys (the `player_new` analog).
+    * The first column of `activeKeys` holds the changed member keys (the
+    * `player_new` analog); a key listed twice counts once.
     */
   def tribeActive(tribe: DataFrame, members: DataFrame, activeKeys: DataFrame,
-                  tribeKey: String, memberTribeFk: String, memberKey: String): DataFrame = {
-    val joined = broadcast(tribe.select(col(tribeKey)))
-      .join(members, col(tribeKey) === col(memberTribeFk), "inner")
-      .join(broadcast(activeKeys.withColumnRenamed(activeKeys.columns.head, "__active_key")),
-        col(memberKey) === col("__active_key"), "left_outer")
-    joined.groupBy(col(tribeKey))
+                  tribeKey: String, memberTribeFk: String, memberKey: String): DataFrame =
+    Diff.keys(activeKeys, activeKeys.columns.take(1))
+      .flag(tribeMembers(tribe, members, tribeKey, memberTribeFk), Seq(memberKey), "__active")
+      .groupBy(col(tribeKey))
       .agg(
         count(col(memberKey)).as("members"),          // COUNT(m.id_member)
-        count(col("__active_key")).as("active"),      // COUNT(p.id): null-skipping
+        count(when(col(memberKey).isNotNull && col("__active"), 1)).as("active"), // COUNT(p.id)
         pow(count(col(memberKey)), 0.5).as("members_sqrt"))
-  }
+
+  /** `members` whose FK names a tribe of `tribe`, that key as `tribeKey`. */
+  private def tribeMembers(tribe: DataFrame, members: DataFrame,
+                           tribeKey: String, memberTribeFk: String): DataFrame =
+    Diff.keys(tribe, Seq(tribeKey))
+      .semi(members.filter(col(memberTribeFk).isNotNull), Seq(memberTribeFk))
+      .withColumn(tribeKey, col(memberTribeFk).cast(tribe.schema(tribeKey).dataType))
 
   /** group_tribe_stats (reference: src/post_update.py:42-91): per tribe,
     * for every discovered stat column, SUM(stat) / members_sqrt. The stat
@@ -50,17 +56,17 @@ object TribeAgg {
   /** `factSkewSalts > 0` routes the member⋈fact join through
     * [[Skew.autoSaltJoin]]: the fact side is the one large⋈large join of
     * this stage and the one place key skew is structural in production (a
-    * hot member with millions of fact rows pins a task; the dim and delta
-    * joins broadcast, so they cannot skew). Uniform key histograms take
-    * the plain join unchanged — identical results either way.
+    * hot member with millions of fact rows pins a task; the tribe and
+    * active probes are not joins, so they cannot skew). Uniform key
+    * histograms take the plain join unchanged — identical results either
+    * way.
     */
   def tribeStats(tribe: DataFrame, members: DataFrame, facts: DataFrame,
                  activeKeys: DataFrame, tribeKey: String, memberTribeFk: String,
                  memberKey: String, factKey: String, statCols: Seq[String],
                  precomputed: Option[DataFrame],
                  factSkewSalts: Int = 0): DataFrame = {
-    val bridge = broadcast(tribe.select(col(tribeKey)))
-      .join(members, col(tribeKey) === col(memberTribeFk), "inner")
+    val bridge = tribeMembers(tribe, members, tribeKey, memberTribeFk)
     val base =
       if (factSkewSalts > 0)
         Skew.autoSaltJoin(facts.withColumnRenamed(factKey, memberKey),
@@ -78,7 +84,7 @@ object TribeAgg {
     val aggs = statCols.map(c => sum(col(c)).as(s"__sum_$c"))
     val sums = base.groupBy(col(tribeKey)).agg(aggs.head, aggs.tail: _*)
     val statOut = statCols.map(n => (col(s"__sum_$n") / col("members_sqrt")).as(n))
-    sums.join(broadcast(active), Seq(tribeKey), "inner")
+    sums.join(active, Seq(tribeKey), "inner")
       .select(col(tribeKey) +: col("members") +: col("active") +: statOut: _*)
   }
 }

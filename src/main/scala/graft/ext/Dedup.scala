@@ -1,6 +1,7 @@
 package graft.ext
 
 import scala.jdk.CollectionConverters._
+import graft.core.Diff
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
@@ -257,10 +258,8 @@ object Dedup {
     * distinct id of `pairs`; a null id keeps a null label and joins
     * nothing.
     *
-    * Two regimes, chosen from the counted symmetric edge list by the
-    * planner's own rule: the list is small when `nEdges × 2 ×
-    * idType.defaultSize` fits `autoBroadcastJoinThreshold` (a threshold
-    * of -1 disables it).
+    * Two regimes, chosen on the counted symmetric edge list by the one
+    * small-relation rule ([[Diff.collectIfSmall]]).
     *  - Small: the edges are collected and a min-root union-find runs on
     *    the driver, comparing ids with Catalyst's ordering for their type
     *    (the ordering `min` uses). The result is a local relation. At the
@@ -287,13 +286,13 @@ object Dedup {
     val symP = sym.persist()
     val nEdges = symP.count()
     val src = symP.schema("src")
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold >= 0 && nEdges * 2 * src.dataType.defaultSize <= threshold) {
-      val clusters = unionFindClusters(symP.collect(), src.dataType)
-      symP.unpersist()
-      spark.createDataFrame(clusters.asJava, StructType(Seq(src.copy(name = "id"),
-        src.copy(name = "cluster_id"))))
-    } else propagateLabels(symP, nEdges, maxIter)
+    Diff.collectIfSmall(symP, Some(nEdges)) match {
+      case Some(edges) =>
+        symP.unpersist()
+        spark.createDataFrame(unionFindClusters(edges, src.dataType).asJava,
+          StructType(Seq(src.copy(name = "id"), src.copy(name = "cluster_id"))))
+      case None => propagateLabels(symP, nEdges, maxIter)
+    }
   }
 
   /** Min-root union-find over a symmetric edge list `(src, dst)`: one

@@ -8,9 +8,10 @@ import scala.jdk.CollectionConverters._
   * file (and a reasoned allow-list), no main source spells the calls that
   * make it — how staged bytes become durable state ([[Commit]]), how
   * an engine session is configured ([[graft.Session]]), how an ingest
-  * gate versions its state ([[graft.stream.IngestState]]), and how a
+  * gate versions its state ([[graft.stream.IngestState]]), how a
   * batch probes admitted substring fingerprints
-  * ([[graft.ext.SubstringDedup]]).
+  * ([[graft.ext.SubstringDedup]]), and which relations the driver holds
+  * ([[Diff.collectIfSmall]]).
   */
 class CommitDisciplineSpec extends AnyFunSuite {
   /** what the patterns do, the patterns, the owning file, and
@@ -26,6 +27,8 @@ class CommitDisciplineSpec extends AnyFunSuite {
     Rule("gate state layout", Seq("_params.json", "batch=$", "batch=0"), "IngestState.scala",
       Map.empty),
     Rule("substring probe steps", Seq("postingPairs(", "\"n_c\""), "SubstringDedup.scala",
+      Map.empty),
+    Rule("broadcast-threshold reads", Seq("conf.autoBroadcastJoinThreshold"), "Diff.scala",
       Map.empty))
 
   rules.foreach { case Rule(what, patterns, owner, allowed) =>
