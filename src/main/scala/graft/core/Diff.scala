@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{Bridge, InKeySet}
@@ -59,13 +60,6 @@ object Diff {
                                         rows: Option[Long]): Option[Array[Row]] =
     if (InKeySet.supports(key.map(df.schema(_).dataType))) collectIfSmall(df, rows) else None
 
-  /** `df` as a local relation when it fits ([[collectIfSmall]]), else
-    * `df`: a relation several plans read reaches the driver once.
-    */
-  private[graft] def localIfSmall(df: DataFrame): DataFrame =
-    collectIfSmall(df, None).fold(df)(rows =>
-      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
-
   /** The `key` columns of `df` as [[Keys]]: a broadcast [[KeySet]] when
     * they fit the driver ([[collectKeysIfSmall]]), else joined.
     */
@@ -88,28 +82,45 @@ object Diff {
     * 'deleted' while the external null-key row appends as 'new', which
     * broke the documented apply(diff(i,e),i)==e round-trip). A caller
     * whose keys match by `===` filters out its null probes first.
+    *
+    * The set answers a probe only when the join would compare in the
+    * keys' own types: each probe column has its key's type, or a
+    * narrower one that widens to it (an int probe of long keys). Any
+    * other probe joins, and the join widens both sides to their common
+    * type, while the set casts the probe to the key type (a long beyond
+    * int range wraps or overflows, a double truncates) and would match
+    * rows the join does not.
     */
   private[graft] final case class Keys(df: DataFrame, key: Seq[String], set: Option[KeySet]) {
     private def right = df.select(key.map(k => col(k).as(s"__dk_$k")): _*)
     private def cond(probe: Seq[String]) =
       probe.zip(key).map { case (p, k) => col(p) <=> col(s"__dk_$k") }.reduce(_ && _)
+    private def setFor(probed: DataFrame, probe: Seq[String]) =
+      set.filter(_.types.zip(probe.map(probed.schema(_).dataType)).forall { case (k, p) =>
+        TypeCoercion.findTightestCommonType(p, k).contains(k) })
 
     /** The rows of `probed` whose `probe` columns match a key. */
-    def semi(probed: DataFrame, probe: Seq[String]): DataFrame = set.fold(
+    def semi(probed: DataFrame, probe: Seq[String]): DataFrame = setFor(probed, probe).fold(
       probed.join(right, cond(probe), "left_semi"))(s => probed.filter(inKeySet(probe, s)))
 
     /** The rows of `probed` whose `probe` columns match no key. */
-    def anti(probed: DataFrame, probe: Seq[String]): DataFrame = set.fold(
+    def anti(probed: DataFrame, probe: Seq[String]): DataFrame = setFor(probed, probe).fold(
       probed.join(right, cond(probe), "left_anti"))(s => probed.filter(!inKeySet(probe, s)))
 
     /** `probed` with a boolean column `name`: whether its `probe` columns
       * match a key; never null. Joined, the keys are deduplicated, so no
       * row of `probed` is repeated.
       */
-    def flag(probed: DataFrame, probe: Seq[String], name: String): DataFrame = set.fold(
-      probed.join(right.distinct().withColumn(name, lit(true)), cond(probe), "left_outer")
-        .na.fill(false, Seq(name)).drop(key.map(k => s"__dk_$k"): _*)
-    )(s => probed.withColumn(name, inKeySet(probe, s)))
+    def flag(probed: DataFrame, probe: Seq[String], name: String): DataFrame =
+      setFor(probed, probe).fold(
+        probed.join(right.distinct().withColumn(name, lit(true)), cond(probe), "left_outer")
+          .na.fill(false, Seq(name)).drop(key.map(k => s"__dk_$k"): _*)
+      )(s => probed.withColumn(name, inKeySet(probe, s)))
+
+    /** Destroy the key set's broadcast, if any, once every plan that
+      * probes it has run; idempotent.
+      */
+    def release(): Unit = set.foreach(_.release())
   }
 
   /** A key set held by the driver and broadcast to every task: the

@@ -192,10 +192,13 @@ object Pipeline {
         // a kind no row has adds no key, so sets over the same present
         // kinds are one broadcast (a cold load's touched and `upd`, an
         // upsert-only batch's)
-        val built = collection.mutable.Map.empty[Seq[String], Diff.KeySet]
-        Seq(Seq("changed"), touchedKinds, updKinds).map(ks => ks -> built.getOrElseUpdate(
-          ks.filter(counts(_) > 0), Diff.keySet(spark, key.map(kinds.schema(_).dataType),
-            rows.iterator.filter(r => ks.contains(r.getString(key.size)))))).toMap
+        val kindSets = Seq(Seq("changed"), touchedKinds, updKinds)
+        def present(ks: Seq[String]) = ks.filter(counts(_) > 0)
+        val built = kindSets.map(present).distinct.map { ks =>
+          ks -> Diff.keySet(spark, key.map(kinds.schema(_).dataType),
+            rows.iterator.filter(r => ks.contains(r.getString(key.size))))
+        }.toMap
+        kindSets.map(ks => ks -> built(present(ks))).toMap
       }
     def keysOf(ks: Seq[String]) = Diff.Keys(deltaOf(ks), key, keySets.get(ks))
 

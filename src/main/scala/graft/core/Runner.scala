@@ -103,8 +103,9 @@ object Runner {
     * staged directory replaces its live one ([[Commit.replaceDir]]), the
     * marker is cleared. The live directories are never written in place,
     * so a crash at any step leaves either the previous pair intact or the
-    * marker set. The tribe keys reach the driver at most once for both
-    * writes, under the one small-relation rule ([[Diff.localIfSmall]]).
+    * marker set. The tribe and active keys reach the driver at most once
+    * for both writes, under the one small-relation rule
+    * ([[Diff.collectIfSmall]]), and their key sets are released after them.
     */
   def postUpdateIncremental(spark: SparkSession, baseDir: String,
                             tribe: DataFrame, oldMembers: DataFrame,
@@ -121,13 +122,14 @@ object Runner {
     // that a crash between the swaps may have left one table a run ahead of
     // the other, until the next call's rebuild replaces both and clears it
     val marker = Paths.get(s"$baseDir/_agg_swap_incomplete")
-    val tribeKeys = Diff.localIfSmall(tribe.select(tribeKey))
-    TribeAgg.tribeActive(tribeKeys, members, activeKeys, tribeKey, memberTribeFk, memberKey)
-      .write.mode(SaveMode.Overwrite).parquet(aTmp)
-    TribeAgg.tribeStats(tribeKeys, members, facts, activeKeys, tribeKey,
-        memberTribeFk, memberKey, factKey, statCols,
-        precomputed = Some(Tables.readCommitted(spark, aTmp)))
-      .write.mode(SaveMode.Overwrite).parquet(sTmp)
+    val (tribes, active) = (Diff.keys(tribe, Seq(tribeKey)), TribeAgg.activeProbe(activeKeys))
+    try {
+      TribeAgg.active(tribes, members, active, memberTribeFk, memberKey)
+        .write.mode(SaveMode.Overwrite).parquet(aTmp)
+      TribeAgg.stats(tribes, members, facts, memberTribeFk, memberKey, factKey, statCols,
+          Tables.readCommitted(spark, aTmp), factSkewSalts = 0)
+        .write.mode(SaveMode.Overwrite).parquet(sTmp)
+    } finally Seq(tribes, active).foreach(_.release())
     Files.writeString(marker, "swap")
     Commit.replaceDir(aTmp, activeDir)
     Commit.replaceDir(sTmp, statsDir)

@@ -31,8 +31,7 @@ object Skew {
   }
 
   /** Hot-key-targeted salted join: only rows whose key appears in `hot`
-    * (a 1+-column frame of the skewed key values, probed as [[Diff.keys]];
-    * a key with a null column is never hot, as under `===`) fan out
+    * (a 1+-column frame of the skewed key values, broadcast) fan out
     * across `salts` sub-partitions; every other key keeps salt 0 with no
     * replication. Replication cost is ∝ (#hot keys × salts) instead of
     * |small| × salts — the shape production skew joins use (the same
@@ -43,14 +42,18 @@ object Skew {
                     hot: DataFrame, salts: Int,
                     joinType: String = "inner"): DataFrame = {
     require(salts > 0)
-    val hotKeys = Diff.keys(hot.na.drop(key), key)
-    val largeSalted = hotKeys.flag(large, key, "__is_hot")
-      .withColumn("__salt", when(col("__is_hot"),
-        pmod(xxhash64(large.columns.map(col): _*), lit(salts)).cast("int")).otherwise(lit(0)))
+    val hotFlag = broadcast(hot.select(key.map(col): _*).distinct()
+      .withColumn("__is_hot", lit(true)))
+    val largeSalted = large.join(hotFlag, key, "left_outer")
+      .withColumn("__salt",
+        when(col("__is_hot"),
+          pmod(xxhash64(large.columns.map(col): _*), lit(salts)).cast("int"))
+          .otherwise(lit(0)))
       .drop("__is_hot")
-    val smallSalted = hotKeys.flag(small, key, "__is_hot")
-      .withColumn("__salt", explode(when(col("__is_hot"), sequence(lit(0), lit(salts - 1)))
-        .otherwise(array(lit(0)))))
+    val smallSalted = small.join(hotFlag, key, "left_outer")
+      .withColumn("__salt", explode(
+        when(col("__is_hot"), sequence(lit(0), lit(salts - 1)))
+          .otherwise(array(lit(0)))))
       .drop("__is_hot")
     largeSalted.join(smallSalted, key :+ "__salt", joinType).drop("__salt")
   }

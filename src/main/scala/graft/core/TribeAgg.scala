@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   * joins: the one small-relation rule ([[Diff.collectIfSmall]]) decides
   * whether their keys reach the driver. Membership matches by `===`, as
   * the reference's joins do: a null tribe key, member FK or member key
-  * matches nothing, so no null probe reaches the probes' `<=>`.
+  * matches nothing, so no null probe reaches the probes' `<=>`. Each
+  * public call builds its probes once; their key sets are left to
+  * Spark's ContextCleaner. [[Runner.postUpdateIncremental]] builds them
+  * once for both of its writes and releases them.
   *
   * There is no incremental form. Like the reference, every post_update
   * ([[Runner.postUpdateIncremental]]) recomputes both tables over all
@@ -30,20 +33,30 @@ object TribeAgg {
     */
   def tribeActive(tribe: DataFrame, members: DataFrame, activeKeys: DataFrame,
                   tribeKey: String, memberTribeFk: String, memberKey: String): DataFrame =
+    active(Diff.keys(tribe, Seq(tribeKey)), members, activeProbe(activeKeys), memberTribeFk, memberKey)
+
+  /** The first column of `activeKeys` as key probes. */
+  private[core] def activeProbe(activeKeys: DataFrame): Diff.Keys =
     Diff.keys(activeKeys, activeKeys.columns.take(1))
-      .flag(tribeMembers(tribe, members, tribeKey, memberTribeFk), Seq(memberKey), "__active")
-      .groupBy(col(tribeKey))
+
+  /** [[tribeActive]] over probes built once: `tribes` probes the tribe
+    * keys, `activeKeys` the changed member keys.
+    */
+  private[core] def active(tribes: Diff.Keys, members: DataFrame, activeKeys: Diff.Keys,
+                           memberTribeFk: String, memberKey: String): DataFrame =
+    activeKeys.flag(tribeMembers(tribes, members, memberTribeFk), Seq(memberKey), "__active")
+      .groupBy(col(tribes.key.head))
       .agg(
         count(col(memberKey)).as("members"),          // COUNT(m.id_member)
         count(when(col(memberKey).isNotNull && col("__active"), 1)).as("active"), // COUNT(p.id)
         pow(count(col(memberKey)), 0.5).as("members_sqrt"))
 
-  /** `members` whose FK names a tribe of `tribe`, that key as `tribeKey`. */
-  private def tribeMembers(tribe: DataFrame, members: DataFrame,
-                           tribeKey: String, memberTribeFk: String): DataFrame =
-    Diff.keys(tribe, Seq(tribeKey))
-      .semi(members.filter(col(memberTribeFk).isNotNull), Seq(memberTribeFk))
-      .withColumn(tribeKey, col(memberTribeFk).cast(tribe.schema(tribeKey).dataType))
+  /** `members` whose FK names a tribe of `tribes`, that key as the tribe
+    * key column.
+    */
+  private def tribeMembers(tribes: Diff.Keys, members: DataFrame, memberTribeFk: String): DataFrame =
+    tribes.semi(members.filter(col(memberTribeFk).isNotNull), Seq(memberTribeFk))
+      .withColumn(tribes.key.head, col(memberTribeFk).cast(tribes.df.schema.head.dataType))
 
   /** group_tribe_stats (reference: src/post_update.py:42-91): per tribe,
     * for every discovered stat column, SUM(stat) / members_sqrt. The stat
@@ -66,21 +79,33 @@ object TribeAgg {
                  memberKey: String, factKey: String, statCols: Seq[String],
                  precomputed: Option[DataFrame],
                  factSkewSalts: Int = 0): DataFrame = {
-    val bridge = tribeMembers(tribe, members, tribeKey, memberTribeFk)
+    val tribes = Diff.keys(tribe, Seq(tribeKey))
+    // warm reuses the precomputed tribe_active (post_update.py:50-55);
+    // cold recomputes it inline (post_update.py:44-49)
+    stats(tribes, members, facts, memberTribeFk, memberKey, factKey, statCols,
+      precomputed.getOrElse(active(tribes, members, activeProbe(activeKeys), memberTribeFk, memberKey)),
+      factSkewSalts)
+  }
+
+  /** [[tribeStats]] over the tribe probe built once and `active`, the
+    * `tribe_active` rows.
+    */
+  private[core] def stats(tribes: Diff.Keys, members: DataFrame, facts: DataFrame,
+                          memberTribeFk: String, memberKey: String, factKey: String,
+                          statCols: Seq[String], active: DataFrame,
+                          factSkewSalts: Int): DataFrame = {
+    val tribeKey = tribes.key.head
+    val bridge = tribeMembers(tribes, members, memberTribeFk)
     val base =
       if (factSkewSalts > 0)
         Skew.autoSaltJoin(facts.withColumnRenamed(factKey, memberKey),
           bridge, Seq(memberKey), factSkewSalts)
       else bridge.join(facts, col(memberKey) === col(factKey), "inner")
 
-    // warm reuses the precomputed tribe_active (post_update.py:50-55);
-    // cold recomputes it inline (post_update.py:44-49). Either way the
-    // member/active counts aggregate the tribe⋈member bridge BEFORE the
-    // facts join: with 1:N facts (a member with several fact rows)
+    // the member/active counts aggregate the tribe⋈member bridge BEFORE
+    // the facts join: with 1:N facts (a member with several fact rows)
     // counting after the join would inflate members and the sqrt divisor.
     // (In the reference member→player is 1:1 so the orders coincide.)
-    val active = precomputed.getOrElse(
-      tribeActive(tribe, members, activeKeys, tribeKey, memberTribeFk, memberKey))
     val aggs = statCols.map(c => sum(col(c)).as(s"__sum_$c"))
     val sums = base.groupBy(col(tribeKey)).agg(aggs.head, aggs.tail: _*)
     val statOut = statCols.map(n => (col(s"__sum_$n") / col("members_sqrt")).as(n))

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Diff
 
 /** Declarative data-quality constraint suite (extension beyond reference
   * parity, SURVEY.md §7.5) — the Deequ/"unit tests for data" shape: a
@@ -21,10 +20,10 @@ import graft.core.Diff
   *  - [[Check.Unique]] adds a `count(distinct struct)` to the same agg —
   *    Spark plans it as one Expand + two-stage aggregate, still a single
   *    scan of the table.
-  *  - [[Check.RefIn]] (referential containment) probes the reference
-  *    keys ([[graft.core.Diff.keys]]): a filter on a driver-side key set
-  *    when they fit, else a left join against the DISTINCT keys, folded
-  *    into the same scan's lineage before the aggregate.
+  *  - [[Check.RefIn]] (referential containment) is the one join-shaped
+  *    constraint: a left join against the DISTINCT reference keys,
+  *    folded into the same scan's lineage before the aggregate. The
+  *    reference side shrinks to its key cardinality before shuffling.
   *  - the long-format result is exploded from the single agg row on the
   *    driver side of the plan — constraint count is O(10), never data.
   *
@@ -131,17 +130,20 @@ object Checks {
   }
 
   /** The shared single-pass aggregate: one row with `__n` (row count)
-    * and `__m_i` (constraint i's numerator). RefIn probes fold into the
-    * scanned frame first — each adds one found-flag column, a
-    * [[Diff.Keys]] flag on the ref keys.
+    * and `__m_i` (constraint i's numerator). RefIn joins fold into the
+    * scanned frame first — each adds one found-flag column via a left
+    * join against the DISTINCT ref keys.
     */
   private def aggRow(df: DataFrame, checks: Seq[Check]): DataFrame = {
     require(checks.nonEmpty, "empty constraint suite")
-    val joined = checks.zipWithIndex.foldLeft(df) {
-      // a null key is found in no ref, as under `===`
-      case (acc, (RefIn(c, ref, rc, _), i)) =>
-        Diff.keys(ref.filter(col(rc).isNotNull), Seq(rc)).flag(acc, Seq(c), s"__ref_$i")
-      case (acc, _) => acc
+    val (joined, refFlags) = checks.zipWithIndex.foldLeft((df, Map.empty[String, String])) {
+      case ((acc, flags), (RefIn(c, ref, rc, _), i)) =>
+        val flag = s"__ref_$i"
+        val keys = ref.select(col(rc).as(s"__refkey_$i")).distinct()
+        (acc.join(keys, acc(c) === col(s"__refkey_$i"), "left_outer")
+          .withColumn(flag, col(s"__refkey_$i").isNotNull.cast("long"))
+          .drop(s"__refkey_$i"), flags + (s"ref_$i" -> flag))
+      case ((acc, flags), _) => (acc, flags)
     }
     // ONE aggregate computes every constraint's numerator (plus the row
     // count); indicators sum as longs, ratios divide once at the end
@@ -153,7 +155,7 @@ object Checks {
       case (InSet(c, vs, _), i)      => ind(col(c).isin(vs: _*)).as(s"__m_$i")
       case (Unique(cols, _), i)      =>
         countDistinct(struct(cols.map(col): _*)).as(s"__m_$i")
-      case (RefIn(_, _, _, _), i)    => ind(col(s"__ref_$i")).as(s"__m_$i")
+      case (RefIn(_, _, _, _), i)    => sum(col(refFlags(s"ref_$i"))).as(s"__m_$i")
     }
     joined.agg(aggs.head, aggs.tail: _*)
   }

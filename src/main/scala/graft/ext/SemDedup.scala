@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Diff
 import graft.functions.vectors
 
 /** SemDeDup-style semantic deduplication (Abbas et al. 2023 shape):
@@ -59,18 +58,27 @@ object SemDedup {
     // broadcastable by construction.
     val census = v.groupBy("cl").agg(count(lit(1)).as("n"))
       .filter(col("n") > maxClusterSize).select(col("cl"), col("n"))
-    val hubs = census.collect()
-    val maxCell = if (hubs.isEmpty) 0L else hubs.map(_.getLong(1)).max
+      .collect()
+    val maxCell = if (census.isEmpty) 0L else census.map(_.getLong(1)).max
     val subPlanes = if (maxCell == 0) 1
       else math.max(1, math.ceil(math.log(maxCell.toDouble / maxClusterSize)
         / math.log(2)).toInt + 1)
-    // the collected census, probed by `cl` in the caller's own dtype (int
-    // k-means ids, long hyperplane masks, …; a .getInt here crashed on
-    // the first corpus big enough to make the census non-empty)
-    val keyed = Diff.keys(embs.sparkSession.createDataFrame(java.util.Arrays.asList(hubs: _*),
-        census.schema), Seq("cl")).flag(v, Seq("cl"), "__big")
-      .withColumn("sub", when(col("__big"), vectors.hyperplane_bucket(col("v"), subPlanes))
-        .otherwise(lit(0)))
+    val spark = embs.sparkSession
+    // `cl` dtype follows the caller's assignment frame (int k-means ids,
+    // long hyperplane masks, …) — rebuild the hub-set frame with that
+    // exact dtype instead of assuming one (a .getInt here crashed on the
+    // first corpus big enough to make the census non-empty)
+    val clType = v.schema("cl").dataType
+    val big = spark.createDataFrame(
+        java.util.Arrays.asList(census.map(r =>
+          org.apache.spark.sql.Row(r.get(0))): _*),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("cl", clType))))
+      .withColumn("__big", lit(1))
+    val keyed = v.join(broadcast(big), Seq("cl"), "left_outer")
+      .withColumn("sub",
+        when(col("__big").isNotNull, vectors.hyperplane_bucket(col("v"), subPlanes))
+          .otherwise(lit(0)))
       .select(col("cl"), col("sub"), col("id"), col("v"), col("nm"))
     val a = keyed.as("a")
     val b = keyed.as("b")

@@ -107,4 +107,36 @@ class DiffSpec extends AnyFunSuite {
       } finally ks.release()
     }
   }
+
+  test("key probes of another column type match the join's rows on the driver and joined") {
+    // a long beyond int range against int keys, a fractional double against
+    // long keys: the join widens both sides, so neither matches, and the
+    // probes join; an int probe of long keys widens to the key type, so
+    // the key set answers it
+    val intKeys = Seq(Some(1), Some(2), None).toDF("k")
+    val longProbe = Seq((Some(1L), 0), (Some(4294967297L), 1), (None, 2), (Some(3L), 3)).toDF("p", "i")
+    val longKeys = Seq(1L, 2L).toDF("k")
+    val doubleProbe = Seq((Some(1.0), 0), (Some(1.5), 1), (Some(2.0), 2), (None, 3)).toDF("p", "i")
+    val intProbe = Seq((Some(1), 0), (Some(3), 1), (Some(2), 2), (None, 3)).toDF("p", "i")
+    def ps(df: org.apache.spark.sql.DataFrame) = df.select("i").as[Int].collect().sorted.toSeq
+    def probe(keys: org.apache.spark.sql.DataFrame, probed: org.apache.spark.sql.DataFrame) = {
+      val ks = Diff.keys(keys, Seq("k"))
+      try {
+        val semi = ks.semi(probed, Seq("p"))
+        val filtered = semi.queryExecution.optimizedPlan.collectFirst {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty
+        (filtered, ps(semi), ps(ks.anti(probed, Seq("p"))),
+          ps(ks.flag(probed, Seq("p"), "f").filter(col("f"))))
+      } finally ks.release()
+    }
+    for ((keys, probed, onDriver) <- Seq((intKeys, longProbe, false), (longKeys, doubleProbe, false),
+                                         (longKeys, intProbe, true))) {
+      val (filtered, semi, anti, flagged) = probe(keys, probed)
+      val (joinFiltered, joinSemi, joinAnti, joinFlagged) =
+        TestSpark.withBroadcastThreshold(-1L)(probe(keys, probed))
+      assert(filtered == onDriver && !joinFiltered)
+      assert(semi == Seq(0, 2) && flagged == semi)
+      assert((semi, anti, flagged) == (joinSemi, joinAnti, joinFlagged))
+    }
+  }
 }

@@ -84,19 +84,18 @@ class TribeAggEquivalenceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a local active-key relation reaches the driver without a job; no join, no broadcast") {
-    val localTribe = Diff.localIfSmall(tribe)
     val local = Seq(10L, 10L, 13L).toDF("a_id")
     assert(TestSpark.jobsOf(Diff.keys(local, Seq("a_id"))) == 0)
     assert(Diff.keys(local, Seq("a_id")).set.nonEmpty)
     var df: DataFrame = null
-    assert(TestSpark.jobsOf { df = tribeActive(localTribe, local) } == 0)
+    assert(TestSpark.jobsOf { df = tribeActive(tribe, local) } == 0)
     df.collect()
     val plan = df.queryExecution.executedPlan
     assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
     assert(collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty, plan)
     // above the threshold the same call joins
     val joined = TestSpark.withBroadcastThreshold(-1L) {
-      val j = tribeActive(localTribe, local)
+      val j = tribeActive(tribe, local)
       j.collect()
       j.queryExecution.executedPlan
     }
