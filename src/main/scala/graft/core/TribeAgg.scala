@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * §3: `nation` plays `tribe` (dim), `customer` plays `player` (fact),
   * `orders` plays `member`/`player_new` (bridge / per-run delta).
   *
-  * Tribe and active membership are key probes ([[Diff.keys]]), not
-  * joins: the one small-relation rule ([[Diff.collectIfSmall]]) decides
-  * whether their keys reach the driver. Membership matches by `===`, as
+  * Tribe and active membership are key probes ([[Diff.keys]]): filters
+  * on a driver-side key set when the one small-relation rule
+  * ([[Diff.collectIfSmall]]) lets their keys reach the driver, joins
+  * otherwise. Membership matches by `===`, as
   * the reference's joins do: a null tribe key, member FK or member key
   * matches nothing, so no null probe reaches the probes' `<=>`. Each
   * public call builds its probes once; their key sets are left to
@@ -69,10 +70,10 @@ object TribeAgg {
   /** `factSkewSalts > 0` routes the member⋈fact join through
     * [[Skew.autoSaltJoin]]: the fact side is the one large⋈large join of
     * this stage and the one place key skew is structural in production (a
-    * hot member with millions of fact rows pins a task; the tribe and
-    * active probes are not joins, so they cannot skew). Uniform key
-    * histograms take the plain join unchanged — identical results either
-    * way.
+    * hot member with millions of fact rows pins a task; small tribe and
+    * active key sets are filters, not joins, so they cannot skew).
+    * Uniform key histograms take the plain join unchanged — identical
+    * results either way.
     */
   def tribeStats(tribe: DataFrame, members: DataFrame, facts: DataFrame,
                  activeKeys: DataFrame, tribeKey: String, memberTribeFk: String,
