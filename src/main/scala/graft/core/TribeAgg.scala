@@ -66,8 +66,8 @@ object TribeAgg {
     * JOIN on the delta (post_update.py:44-49,86-89), warm reuses a
     * precomputed `tribe_active` (post_update.py:50-55,84). One
     * implementation with `precomputed: Option[DataFrame]` (SURVEY §7.4.6).
-    */
-  /** `factSkewSalts > 0` routes the member⋈fact join through
+    *
+    * `factSkewSalts > 0` routes the member⋈fact join through
     * [[Skew.autoSaltJoin]]: the fact side is the one large⋈large join of
     * this stage and the one place key skew is structural in production (a
     * hot member with millions of fact rows pins a task; small tribe and

@@ -315,38 +315,44 @@ object IvfIndex {
   }
 
   /** Retrain the coarse quantizer from the STORED vectors and replace the
-    * layout in place — the planned rebuild [[applyDelta]]'s header
-    * promises. Runs build against the loaded corpus, stages the new
-    * layout under `$path/.rebuild`, then swaps components. The swap is
-    * not atomic as a set: a crash mid-swap requires re-running rebuild
-    * (the staging copy is complete before the first destructive step, so
-    * the source vectors are never the only copy).
+    * layout — the planned rebuild [[applyDelta]]'s header promises. The
+    * whole fresh index is staged beside `path` and lands as one
+    * [[graft.core.Commit.swap]], so a crash at any step leaves the old
+    * index or the new one whole once [[graft.core.Commit.recover]] runs on
+    * the parent directory (this call runs it first). `path` must be local,
+    * and one rebuild runs per parent directory at a time: the parent holds
+    * the one staging directory, as a changelog root does for its
+    * compaction.
     */
   def rebuild(spark: SparkSession, path: String, nlist: Int = 0,
               seed: Long = 42L): Unit = {
+    val (parent, name) = stageRebuild(spark, path, nlist, seed)
+    graft.core.Commit.swap(parent, Seq(name), name)
+  }
+
+  /** [[rebuild]] up to its swap: the fresh index written to the parent's
+    * staging directory. Returns the parent and the index's name in it.
+    */
+  private[ext] def stageRebuild(spark: SparkSession, path: String, nlist: Int,
+                                seed: Long): (String, String) = {
+    val p = graft.core.Commit.local(path).toAbsolutePath
+    val parent = p.getParent.toString
+    graft.core.Commit.recover(parent)
     val idx = load(spark, path)
-    val fresh = build(spark, idx.assigned.select(col("vid"), col("v")),
-      "vid", "v", nlist, seed)
-    val tmp = s"$path/.rebuild"
-    write(fresh, tmp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (part <- Seq("assigned", "centroids", "schema", "manifest.json")) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$part"), true)
-      fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/$part"),
-        new org.apache.hadoop.fs.Path(s"$path/$part"))
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    write(build(spark, idx.assigned.select(col("vid"), col("v")), "vid", "v", nlist, seed),
+      graft.core.Commit.staging(parent))
+    (parent, p.getFileName.toString)
   }
 
   /** Health-gated maintenance — the cadence hook (run it where
-    * [[graft.core.Runner.maintain]] runs table upkeep): measure drift,
-    * rebuild only when the policy says so. Returns the PRE-rebuild
-    * health so callers can log what triggered.
+    * [[graft.core.Runner.maintain]] runs table upkeep): finish or undo a
+    * rebuild cut short, measure drift, rebuild only when the policy says
+    * so. Returns the PRE-rebuild health so callers can log what triggered.
     */
   def maintain(spark: SparkSession, path: String,
                imbalanceThreshold: Double = 4.0, growthThreshold: Double = 2.0,
                nlist: Int = 0, seed: Long = 42L): Health = {
+    graft.core.Commit.recover(graft.core.Commit.local(path).toAbsolutePath.getParent.toString)
     val h = health(spark, path, imbalanceThreshold, growthThreshold)
     if (h.needsRebuild) rebuild(spark, path, nlist, seed)
     h

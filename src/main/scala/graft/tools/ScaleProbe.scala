@@ -582,16 +582,14 @@ object ScaleProbe {
     */
   private def runFamilies(probeSeq: Seq[String], dirs: Seq[String], outPath: String): Unit = {
     val probes = probeSeq
-    // physical-work meter: task CPU + GC, summed across every task that
-    // ends while a leg's clock runs. Wall on a shared box measures
+    // physical-work meter: task CPU + GC, summed over every task of the
+    // leg's StageMetrics window. Wall on a shared box measures
     // weather as much as work — r9 measured the winnowed family's 4×
     // WALL leg at 181 s and 223 s on back-to-back fresh-JVM runs
     // (±20%) while its task-CPU ratio held within a few percent. The
     // gate therefore takes min(wall_ratio, work_ratio): weather can't
     // fake a breach, and a genuinely super-linear plan (the r5
     // quadratics the probe exists to catch) inflates BOTH.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
     // Every probe child measures with the SORT-BASED shuffle writer on
     // BOTH legs. Mechanism (root-caused r13, closing three rounds of
     // span-stats ratio flapping): Spark flips from the bypass-merge
@@ -614,13 +612,6 @@ object ScaleProbe {
     val spark = graft.Session.builder(graft.Session.cores)
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .getOrCreate()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          cpuNs.addAndGet(m.executorCpuTime)
-          gcMs.addAndGet(m.jvmGCTime)
-        }
-    })
     // one-time corpus prep, before any clock: replicate the 4× dir,
     // report sizes
     val scaledOf = dirs.map { dir =>
@@ -669,27 +660,21 @@ object ScaleProbe {
           System.err.println(s"[scale] prepare($name) failed: ${e.getMessage}")
         }
         def timedLeg(): (Double, Double) = {
-          // settle the listener bus before the baseline snapshot too: a
-          // heavy prepare (the changelog synthesis writes tens of millions
-          // of rows) drains task-end events for ~a second after its last
-          // job, and events landing after cpu0 would be billed to the
-          // timed body (this is how the r10 probe read work 28 s against
-          // wall 2.1 s)
-          Thread.sleep(1000)
-          val (cpu0, gc0) = (cpuNs.get(), gcMs.get())
-          val t0 = System.nanoTime()
-          // materialize through the noop sink exactly like Bench: count()
-          // lets Catalyst PRUNE projected expressions, so a pure-projection
-          // probe (e.g. text_quality) would time only the parquet scan
-          ExtraProbes.getOrElse(name, graft.SparkEntry.queries(name))(spark, scaled)
-            .write.format("noop").mode("overwrite").save()
-          val t = (System.nanoTime() - t0) / 1e9
-          // listener events drain asynchronously; settle before
-          // snapshotting (1 s: the bus can drop or lag events under load,
-          // and an under-counted 4× leg deflates the work ratio)
-          Thread.sleep(1000)
-          val work = (cpuNs.get() - cpu0) / 1e9 + (gcMs.get() - gc0) / 1e3
-          (t, work)
+          // the window opens and closes on a drained listener bus: a heavy
+          // prepare's late task-end events (the changelog synthesis writes
+          // tens of millions of rows) are not billed to the timed body (the
+          // r10 probe read work 28 s against wall 2.1 s when they were),
+          // and no task of the body is missed
+          val (t, m) = graft.observe.StageMetrics.measure(spark) {
+            val t0 = System.nanoTime()
+            // materialize through the noop sink exactly like Bench: count()
+            // lets Catalyst PRUNE projected expressions, so a pure-projection
+            // probe (e.g. text_quality) would time only the parquet scan
+            ExtraProbes.getOrElse(name, graft.SparkEntry.queries(name))(spark, scaled)
+              .write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9
+          }
+          (t, m.totals.cpuNs / 1e9 + m.totals.gcMs / 1e3)
         }
         // noisy families run several legs and gate on the MEDIAN pair
         // (sorted by wall; the work of the median-wall leg stays paired

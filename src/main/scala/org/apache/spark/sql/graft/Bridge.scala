@@ -40,9 +40,11 @@ object Bridge {
     a.merge(b, org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis)
 
   /** Block until the listener bus has delivered every queued event —
-    * `SparkContext.listenerBus` is `private[spark]`, and the per-query
-    * metric collectors (StageProf) need the drain barrier so late
-    * TaskEnd events can't leak across query boundaries (ADVICE r14).
+    * `SparkContext.listenerBus` is `private[spark]`. The barrier that
+    * opens and closes a [[graft.observe.StageMetrics.measure]] window, so
+    * late TaskEnd events can't leak across its boundaries (ADVICE r14),
+    * and that [[withCachedSize]] waits on before reading the storage
+    * report.
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()

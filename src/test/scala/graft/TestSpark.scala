@@ -11,33 +11,17 @@ object TestSpark {
     .getOrCreate()
   val Sf = "/root/testdata/sf0.001"
 
-  /** Spark jobs started by `f`, counted by job group. A sentinel job in a
-    * group of its own flushes the listener bus, which delivers in order.
+  /** Spark jobs started by `f`, counted by job group in a
+    * [[graft.observe.StageMetrics]] window.
     */
   def jobsOf(f: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"graft-jobs-${System.nanoTime()}"
-    val sentinel = s"$group-end"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`sentinel`) => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
+    val (_, m) = graft.observe.StageMetrics.measure(spark) {
       sc.setJobGroup(group, "counted", interruptOnCancel = false)
       try f finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "sentinel", interruptOnCancel = false)
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
-    } finally sc.removeSparkListener(listener)
-    jobs.get
+    }
+    m.jobs.count(_.group.contains(group))
   }
 
   /** Run `f` with the session's broadcast threshold set to `bytes`. */

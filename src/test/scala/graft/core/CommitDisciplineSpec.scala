@@ -10,8 +10,9 @@ import scala.jdk.CollectionConverters._
   * an engine session is configured ([[graft.Session]]), how an ingest
   * gate versions its state ([[graft.stream.IngestState]]), how a
   * batch probes admitted substring fingerprints
-  * ([[graft.ext.SubstringDedup]]), and which relations the driver holds
-  * ([[Diff.collectIfSmall]]).
+  * ([[graft.ext.SubstringDedup]]), which relations the driver holds
+  * ([[Diff.collectIfSmall]]), and how task metrics are read
+  * ([[graft.observe.StageMetrics]]).
   */
 class CommitDisciplineSpec extends AnyFunSuite {
   /** what the patterns do, the patterns, the owning file, and
@@ -20,16 +21,16 @@ class CommitDisciplineSpec extends AnyFunSuite {
                           allowed: Map[String, String])
 
   private val rules = Seq(
-    Rule("durable renames", Seq("ATOMIC_MOVE", ".rename("), "Commit.scala", Map(
-      "IvfIndex.scala" -> ("rebuild swaps a multi-component index in place " +
-        "through the Hadoop filesystem, documented as non-atomic"))),
+    Rule("durable renames", Seq("ATOMIC_MOVE", ".rename("), "Commit.scala", Map.empty),
     Rule("session builders", Seq("SparkSession.builder"), "Session.scala", Map.empty),
     Rule("gate state layout", Seq("_params.json", "batch=$", "batch=0"), "IngestState.scala",
       Map.empty),
     Rule("substring probe steps", Seq("postingPairs(", "\"n_c\""), "SubstringDedup.scala",
       Map.empty),
     Rule("broadcast-threshold reads", Seq("conf.autoBroadcastJoinThreshold"), "Diff.scala",
-      Map.empty))
+      Map.empty),
+    Rule("Spark listeners", Seq("extends SparkListener", "addSparkListener("),
+      "StageMetrics.scala", Map.empty))
 
   rules.foreach { case Rule(what, patterns, owner, allowed) =>
     test(s"${patterns.mkString(" and ")} appear only in $owner (and the allow-list)") {

@@ -1,11 +1,10 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
+import graft.observe.StageMetrics
 import org.apache.spark.sql.internal.SQLConf
 import graft.TestSpark
 
@@ -261,23 +260,12 @@ class DedupSpec extends AnyFunSuite {
 
   test("dupClusters: a small graph runs no per-round job and leaves no cache behind") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
-    // one entry per action: AQE submits a query's stages as jobs of its
-    // own, under the query's execution id
-    val actions = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = actions.synchronized {
-        val exec = Option(e.properties.getProperty("spark.sql.execution.id"))
-        actions.getOrElseUpdate(exec.fold(s"job ${e.jobId}")("execution " + _),
-          e.properties.getProperty("callSite.short"))
-      }
-    }
     def persisted() = spark.sparkContext.getPersistentRDDs
     val before = persisted()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Dedup.dupClusters(pairs).collect()
-      Bridge.drainListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, m) = StageMetrics.measure(spark)(Dedup.dupClusters(pairs).collect())
+    // one entry per action: AQE submits a query's stages as jobs of its
+    // own, under the query's execution id
+    val actions = m.jobs.map(j => j.executionId.fold(s"job ${j.id}")("execution " + _)).distinct
     // the count, the edge collect and the consumer's own job, at most
     assert(actions.size <= 3, actions.mkString("\n"))
     assert((persisted() -- before.keys).isEmpty)

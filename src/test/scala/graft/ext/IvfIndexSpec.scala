@@ -3,7 +3,7 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import graft.core.Tables
+import graft.core.{Commit, Tables}
 
 class IvfIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -258,6 +258,36 @@ class IvfIndexSpec extends AnyFunSuite {
       .select("qid", "vid").as[(Long, Long)].collect().toSet
     val recall = ivf.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"recall@5 = $recall after rebuild")
+  }
+
+  test("rebuild crash safety: a swap cut after any rename recovers the old index or the new one whole") {
+    import java.nio.file.Files
+    val e = Tables.load(spark, TestSpark.Sf, "embeddings")
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 60)
+    val pristine = Files.createTempDirectory("ivf_swap")
+    IvfIndex.write(IvfIndex.build(spark, e, "vec_id", "embedding", nlist = 4), s"$pristine/idx")
+    IvfIndex.stageRebuild(spark, s"$pristine/idx", nlist = 6, seed = 7L)
+    def contents(dir: String) = {
+      val idx = IvfIndex.load(spark, dir)
+      (idx.centroids.map { case (l, c) => (l, c.toSeq) }.toSeq,
+        idx.assigned.collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2))).sortBy(_._1).toSeq)
+    }
+    val old = contents(s"$pristine/idx")
+    val fresh = contents(Commit.staging(pristine.toString))
+    assert(old._1.size == 4 && fresh._1.size == 6 && fresh._2.map(_._1) == old._2.map(_._1))
+    val n = Commit.swapRenames(pristine.toString, Seq("idx"), "idx").size
+    for (k <- 0 to n) {
+      // the staged state copied afresh, cut after the first k renames
+      val root = Files.createTempDirectory("ivf_swap_cut")
+      val walk = Files.walk(pristine)
+      try walk.filter(_ != pristine).forEach(p => Files.copy(p, root.resolve(pristine.relativize(p))))
+      finally walk.close()
+      val renames = Commit.swapRenames(root.toString, Seq("idx"), "idx")
+      Files.createDirectories(renames.head._2.getParent)
+      renames.take(k).foreach { case (from, to) => Files.move(from, to) }
+      Commit.recover(root.toString)
+      assert(contents(s"$root/idx") == (if (k == n) fresh else old), s"cut after $k of $n renames")
+    }
   }
 
   test("drained index: deleting every row keeps load and re-population working") {

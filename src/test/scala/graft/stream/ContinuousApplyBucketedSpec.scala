@@ -1,7 +1,7 @@
 package graft.stream
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.observe.StageMetrics
 import graft.TestSpark
 import graft.core.{BucketedSnapshot, Pipeline}
 
@@ -68,18 +68,8 @@ class ContinuousApplyBucketedSpec extends AnyFunSuite {
     writeFlat(Seq((1L, "n1", 99.0), (2L, "n2", 98.0), (500L, "n500", 97.0),
       (1001L, "x", 1.0), (1002L, "y", 2.0)).toDF("id", "name", "value"),
       in, "b2.parquet")
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      StreamingCdc.continuousApplyBucketed(spark, in, ckpt, snap, "id",
-        Seq("name", "value"), NBuckets)
-      // drain queued listener events before reading the counter
-      Thread.sleep(1000)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val recordsRead = StageMetrics.measure(spark)(StreamingCdc.continuousApplyBucketed(
+      spark, in, ckpt, snap, "id", Seq("name", "value"), NBuckets))._2.totals.inputRecords
 
     assert(Pipeline.currentVersion(snap).contains(2L))
     val got = BucketedSnapshot.read(spark, snap, "snapshot", 2L)
@@ -93,7 +83,7 @@ class ContinuousApplyBucketedSpec extends AnyFunSuite {
     // each) + the 5-row input + changelog capture — far under one full
     // 1000-row snapshot scan, which an unbucketed apply would need (it
     // reads ≥ 2×1000 rows: snapshot for the merge + rows rewritten)
-    assert(recordsRead.get() < 600, s"batch-2 read ${recordsRead.get()} rows — not delta-bounded")
+    assert(recordsRead < 600, s"batch-2 read $recordsRead rows — not delta-bounded")
 
     // untouched buckets are hard links to v=1 files (same inode), touched
     // buckets fresh files

@@ -2,6 +2,7 @@ package graft.stream
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.observe.StageMetrics
 
 class StreamNearDupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -117,7 +118,6 @@ class StreamNearDupSpec extends AnyFunSuite {
   }
 
   test("probe is bucket-pruned: a small batch reads a fraction of the accumulated index") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val st = java.nio.file.Files.createTempDirectory("graft_snd3").toString
     // 2000 seed docs with token-disjoint texts: index = 2000 × 4 bands =
     // 8000 rows spread across the 256 default bucket prefixes
@@ -127,26 +127,17 @@ class StreamNearDupSpec extends AnyFunSuite {
     val fullIndex = spark.read.parquet(s"$st/index").count()
     assert(fullIndex == 8000L)
 
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // 2 docs × 4 bands = ≤8 of 256 prefixes → the probe may open at
-      // most 8/256 of the index (~250 of 8000 rows expected)
-      StreamNearDup.processBatch(
-        Seq(5000L -> tA, 5001L -> tC).toDF("doc_id", "text"), st, 1L)
-      Thread.sleep(1000) // drain queued listener events
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // 2 docs × 4 bands = ≤8 of 256 prefixes → the probe may open at
+    // most 8/256 of the index (~250 of 8000 rows expected)
+    val recordsRead = StageMetrics.measure(spark)(StreamNearDup.processBatch(
+      Seq(5000L -> tA, 5001L -> tC).toDF("doc_id", "text"), st, 1L))._2.totals.inputRecords
 
     // read budget: 2×2000 corpus-docs rows (both sides of the candidate
     // text-fetch join — the one place the corpus legitimately enters) +
     // ≤8/256 of the 8000-row index + the batch re-reads. An UNPRUNED
     // probe adds the full 8000-row index scan and blows far past this.
-    assert(recordsRead.get() < 6000,
-      s"probe read ${recordsRead.get()} rows — index not bucket-pruned")
+    assert(recordsRead < 6000,
+      s"probe read $recordsRead rows — index not bucket-pruned")
   }
 
   test("file-stream wiring: a streamed batch is gated against the seeded corpus") {

@@ -3,6 +3,7 @@ package graft.stream
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.observe.StageMetrics
 
 class StreamVecDupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -75,7 +76,6 @@ class StreamVecDupSpec extends AnyFunSuite {
   }
 
   test("probe is bucket-pruned: a small batch reads a fraction of the accumulated index") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val st = java.nio.file.Files.createTempDirectory("graft_svd3").toString
     // 2000 pseudo-random 64-dim directions (near-orthogonal in high dim):
     // index = 2000 × 8 bands = 16000 rows across the 256 default prefixes
@@ -86,25 +86,16 @@ class StreamVecDupSpec extends AnyFunSuite {
     StreamVecDup.seedCorpus(seed, st)
     assert(spark.read.parquet(s"$st/index").count() == 16000L)
 
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // 2 vecs × 8 bands = ≤16 of 256 prefixes → the probe may open at
-      // most 16/256 of the index (~1000 of 16000 rows expected)
-      StreamVecDup.processBatch(
-        Seq(5000L -> e(0), 5001L -> e(33)).toDF("vec_id", "embedding"), st, 1L)
-      Thread.sleep(1000) // drain queued listener events
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // 2 vecs × 8 bands = ≤16 of 256 prefixes → the probe may open at
+    // most 16/256 of the index (~1000 of 16000 rows expected)
+    val recordsRead = StageMetrics.measure(spark)(StreamVecDup.processBatch(
+      Seq(5000L -> e(0), 5001L -> e(33)).toDF("vec_id", "embedding"), st, 1L))._2.totals.inputRecords
 
     // read budget: 2×2000 corpus-vec rows (both sides of the candidate
     // vector-fetch join) + ≤16/256 of the 16000-row index + batch
     // re-reads. An unpruned probe adds the full index scan on top.
-    assert(recordsRead.get() < 8000,
-      s"probe read ${recordsRead.get()} rows — index not bucket-pruned")
+    assert(recordsRead < 8000,
+      s"probe read $recordsRead rows — index not bucket-pruned")
   }
 
   test("index compaction folds flat deltas; later batches still gate against everything") {
@@ -132,7 +123,6 @@ class StreamVecDupSpec extends AnyFunSuite {
   }
 
   test("pruned probe holds at production prefix fan-out (4096)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val st = java.nio.file.Files.createTempDirectory("graft_svd5").toString
     // same corpus shape as the 256-prefix test, seeded at the O(10^4)
     // fan-out production wants (StreamNearDup.Params scaladoc): the
@@ -146,24 +136,15 @@ class StreamVecDupSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$st/index").count() == 32000L)
     // trigger-sized batch: 2 vecs × 8 bands = ≤16 of 4096 prefixes →
     // the probe may open ≤ 16/4096 ≈ 0.4% of the index (~125 rows)
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      StreamVecDup.processBatch(
-        Seq(9000L -> e(0), 9001L -> e(33)).toDF("vec_id", "embedding"), st, 1L)
-      Thread.sleep(1000) // drain queued listener events
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val recordsRead = StageMetrics.measure(spark)(StreamVecDup.processBatch(
+      Seq(9000L -> e(0), 9001L -> e(33)).toDF("vec_id", "embedding"), st, 1L))._2.totals.inputRecords
     // budget: 2×4000 corpus-vec rows (candidate vector-fetch join sides)
     // + ≤16/4096 of the 32000-row index + batch re-reads. At 4096
     // prefixes the index contribution is ~125 rows, so the bound is
     // dominated by the corpus-vec fetch — an unpruned probe would add
     // the full 32000-row index scan and blow straight past it.
-    assert(recordsRead.get() < 12000,
-      s"probe read ${recordsRead.get()} rows — index not prefix-pruned at 4096")
+    assert(recordsRead < 12000,
+      s"probe read $recordsRead rows — index not prefix-pruned at 4096")
   }
 
   test("cellMode: axis-sign index drives the same machinery; mode adopted from the manifest") {
